@@ -15,6 +15,40 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Guards `spark.sql.legacy.parquet.nanosAsLong`, a session-wide
+    * flag: [[readNanosAsLong]] flips it under the write side, every
+    * other parquet read here resolves its schema under the read side.
+    * Without it two interleaved flips can leave the flag set for the
+    * rest of the session (each restores what the other set), and a
+    * concurrent load of a table with TIMESTAMP(NANOS) columns would
+    * infer them as LONG.
+    */
+  private val nanosFlag = new java.util.concurrent.locks.ReentrantReadWriteLock
+
+  private def locked[T](l: java.util.concurrent.locks.Lock)(body: => T): T = {
+    l.lock()
+    try body finally l.unlock()
+  }
+
+  /** Parquet read whose schema resolves while no nanos flip is live. */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    locked(nanosFlag.readLock())(spark.read.parquet(paths: _*))
+
+  /** Parquet read with TIMESTAMP(NANOS) columns surfaced as nanos
+    * longs (the legacy flag), set and restored under the write lock.
+    */
+  def readNanosAsLong(spark: SparkSession, path: String): DataFrame =
+    locked(nanosFlag.writeLock()) {
+      val key = "spark.sql.legacy.parquet.nanosAsLong"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, "true")
+      try spark.read.parquet(path)
+      finally prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
       // events.ts encoding depends on the generator run: earlier
@@ -22,30 +56,19 @@ object Tables {
       // as a timestamp — the legacy flag surfaces it as a nanos
       // long), round 7 writes TIMESTAMP(MICROS) (read natively as
       // NTZ). Normalize BOTH to TimestampType so every downstream
-      // consumer sees one type regardless of the file vintage. The
-      // legacy flag is scoped set/restore: leaking it session-wide
-      // would silently change how any later ns-timestamp parquet in
-      // the same session is read (raw long instead of timestamp).
-      val key = "spark.sql.legacy.parquet.nanosAsLong"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "true")
-      try {
-        val df = spark.read.parquet(s"$dir/$name.parquet")
-        df.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType =>
-            // nanos-as-long vintage: truncate to µs (floor — matching
-            // DuckDB's second-level truncation downstream)
-            df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-          case _ =>
-            // µs vintage (NTZ under inferTimestampNTZ); host/session
-            // zone is UTC, so the LTZ cast is value-preserving
-            df.withColumn("ts", col("ts").cast("timestamp"))
-        }
-      } finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
+      // consumer sees one type regardless of the file vintage.
+      val df = readNanosAsLong(spark, s"$dir/$name.parquet")
+      df.schema("ts").dataType match {
+        case org.apache.spark.sql.types.LongType =>
+          // nanos-as-long vintage: truncate to µs (floor — matching
+          // DuckDB's second-level truncation downstream)
+          df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+        case _ =>
+          // µs vintage (NTZ under inferTimestampNTZ); host/session
+          // zone is UTC, so the LTZ cast is value-preserving
+          df.withColumn("ts", col("ts").cast("timestamp"))
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else readParquet(spark, s"$dir/$name.parquet")
 
   /** Memoized table schema. Each `load(...).schema` costs a driver-side
     * footer read; catalog operators (snapshot, check, reverse) ask for

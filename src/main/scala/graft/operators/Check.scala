@@ -358,51 +358,25 @@ object Check {
     * its bounded report rows here, and everything downstream (text
     * render, HTML render, a36 checksums) reads the collected rows.
     * Sections are independent, so their jobs are SUBMITTED
-    * CONCURRENTLY (bounded pool) — Spark schedules concurrent actions
-    * from one session fine, and the report's wall-clock becomes the
-    * slowest section instead of the sum of 22 job barriers. Result
-    * order stays the registry's reading order.
+    * CONCURRENTLY ([[DriverPool]]); a section that hangs past the
+    * deadline fails the report with its jobs cancelled. Result order
+    * stays the registry's reading order.
     */
   private def sectionData(s: SparkSession, d: String)
       : Seq[(ReportSection, org.apache.spark.sql.types.StructType,
         Seq[org.apache.spark.sql.Row])] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
-    // daemon threads + shutdownNow + job-group cancel: a section query
-    // that hangs past the Await deadline must not keep the JVM alive
-    // (non-daemon pool threads would) or leave its Spark jobs running
-    // after the driver saw the TimeoutException
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8,
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-assess-section")
-        t.setDaemon(true)
-        t
-      })
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val jobGroup = "graft-assess-" + java.util.UUID.randomUUID()
-    try {
-      val futs = reportSections.map { sec =>
-        Future {
-          s.sparkContext.setJobGroup(jobGroup,
-            "assess report sections", interruptOnCancel = true)
-          val t0 = System.nanoTime()
-          val df = sec.fn(s, d)
-          val out = (sec, df.schema, df.collect().toSeq)
-          // env-gated per-section wall (zero cost unset): the r16
-          // verdict asked which section sets a36's wall — this is the
-          // data source for that table (SCALE.md)
-          if (sys.env.contains("SPARK_GRAFT_ASSESS_TIMING"))
-            println(f"[assess] ${sec.key}%-28s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          out
-        }
-      }
-      try Await.result(Future.sequence(futs), 10.minutes)
-      catch {
-        case e: Throwable =>
-          s.sparkContext.cancelJobGroup(jobGroup)
-          throw e
-      }
-    } finally pool.shutdownNow()
+    DriverPool.map(s, reportSections, "graft-assess", 10.minutes) { sec =>
+      val t0 = System.nanoTime()
+      val df = sec.fn(s, d)
+      val out = (sec, df.schema, df.collect().toSeq)
+      // env-gated per-section wall (zero cost unset): the r16
+      // verdict asked which section sets a36's wall — this is the
+      // data source for that table (SCALE.md)
+      if (sys.env.contains("SPARK_GRAFT_ASSESS_TIMING"))
+        println(f"[assess] ${sec.key}%-28s ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      out
+    }
   }
 
   private def renderTextFrom(

@@ -132,12 +132,11 @@ object Pipeline {
     val url = s"jdbc:derby:$workDir/pipedb;create=true"
     val ledgerPath = s"$workDir/ledger"
 
-    // ---- stage 1: catalog snapshot (S5) — bounded rows drive reverse
+    // ---- stage 1: catalog snapshot (S5) of the migrated table — its
+    // columns in ordinal order drive reverse
     failpoint("snapshot")
-    val snapCols = Catalog.snapshot(s, d)
-      .filter(col("table_name") === table)
-      .orderBy("ordinal").collect()
-      .map(r => (r.getAs[String]("column_name"), r.getAs[String]("data_type")))
+    val snapCols = Tables.schemaOf(s, d, table).fields.toSeq
+      .map(f => (f.name, Catalog.canonicalType(f.dataType)))
 
     // ---- stage 2: assess (A3 bounds guard + A4 count) — one agg job
     failpoint("assess")
@@ -210,9 +209,15 @@ object Pipeline {
     val (kw, chunks) = planFixedWidth(minK, maxK, cnt, cr)
     val fs = new org.apache.hadoop.fs.Path(ledgerPath)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(ledgerPath)))
-      Ledger.init(s, ledgerPath, task, table, chunks)
-    val pending = Ledger.pending(s, ledgerPath, task, table, chunks)
+    // a ledger created here holds exactly this plan, all WAITING: only
+    // an existing one needs the resume triage's read-back
+    val pending =
+      if (fs.exists(new org.apache.hadoop.fs.Path(ledgerPath)))
+        Ledger.pending(s, ledgerPath, task, table, chunks)
+      else {
+        Ledger.init(s, ledgerPath, task, table, chunks)
+        chunks
+      }
 
     // ---- stage 6: migrate — one distributed ranged write per wave
     pending.grouped(waveSize).zipWithIndex.foreach { case (wave, wi) =>

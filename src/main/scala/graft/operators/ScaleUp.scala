@@ -45,8 +45,8 @@ object ScaleUp {
       df.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$name.parquet")
 
     // dimensions pass through: FK targets must not fan out
-    write(s.read.parquet(s"$srcDir/region.parquet"), "region")
-    write(s.read.parquet(s"$srcDir/nation.parquet"), "nation")
+    write(graft.Tables.readParquet(s, s"$srcDir/region.parquet"), "region")
+    write(graft.Tables.readParquet(s, s"$srcDir/nation.parquet"), "nation")
 
     /** One generate-per-copy pass: explode a [0, copies) sequence (no
       * self-union chain — one scan of the source however many copies),
@@ -55,7 +55,7 @@ object ScaleUp {
     def rep(name: String, keys: Seq[String],
         extra: DataFrame => DataFrame = identity,
         read: String => DataFrame =
-          p => s.read.parquet(p)): Unit = {
+          p => graft.Tables.readParquet(s, p)): Unit = {
       val base = read(s"$srcDir/$name.parquet")
         .withColumn("copy_i", explode(sequence(lit(0L), lit(copies - 1L))))
       val offset = keys.foldLeft(base) { (df, k) =>
@@ -69,18 +69,10 @@ object ScaleUp {
     rep("part", Seq("p_partkey"))
     rep("orders", Seq("o_orderkey", "o_custkey"))
     rep("lineitem", Seq("l_orderkey", "l_partkey", "l_suppkey"))
-    // events: read nanos-as-long (scoped, same as Tables.load) so ts
+    // events: read nanos-as-long (the Tables.load contract) so ts
     // round-trips as a plain BIGINT the downstream read contract knows
-    rep("events", Seq("event_id", "user_id"), read = p => {
-      val key = "spark.sql.legacy.parquet.nanosAsLong"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "true")
-      try s.read.parquet(p)
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-    })
+    rep("events", Seq("event_id", "user_id"),
+      read = p => graft.Tables.readNanosAsLong(s, p))
     rep("documents", Seq("doc_id"), extra = df => df
       .withColumn("text",
         when(col("copy_i") === 0, col("text"))

@@ -28,8 +28,13 @@ import graft.reverse.Ddl
   * Every mode returns its REPORT as a DataFrame (the reference logs
   * a summary and writes artifact files; here the summary is a
   * relation and the artifacts land under the mode's out dir / the
-  * config's `*-dir` knobs). Heavy work stays in the operators each
-  * mode composes — this object is dispatch + knob plumbing only.
+  * config's `*-dir` knobs). Reports are materialised once, inside
+  * [[runMode]], as local relations, so writing and then showing one
+  * costs no second run of the mode; `all` is the exception, because
+  * its report is the whole target state (see [[runMode]]). The `csv`
+  * mode exports its tables concurrently, as the reference's
+  * `table-threads` errgroup does. Heavy work stays in the operators
+  * each mode composes — this object is dispatch + knob plumbing only.
   */
 object TaskModes {
 
@@ -205,33 +210,46 @@ object TaskModes {
     (n, chunkDirs.length.toLong)
   }
 
+  /** The `csv` mode: every selected table exported through
+    * [[csvExportChunked]] into `<outDir>/csv/<table>`. Tables run
+    * concurrently on [[DriverPool]], as the reference's `table-threads`
+    * errgroup runs them (`full.go:387-633`); report rows stay in
+    * [[resolveTables]] order. The first table to fail fails the call
+    * with that table's name, and the other tables' jobs are cancelled.
+    */
   private def csvMode(s: SparkSession, knobs: EngineKnobs, d: String,
       outDir: String): DataFrame = {
     import s.implicits._
     val spec = csvSpecOf(knobs.csv)
-    val rows = resolveTables(knobs).map { t =>
-      // per-table [[schema-config.migrate-config]] (full.go:655-703):
-      // `range` restricts the export, enable-split=false forces ONE
-      // chunk (chunkRows >= any count); sql-hint has no Spark analogue
-      val mc = knobs.migrateConfigFor(t)
-      // consistent-read (S3): pin the file LISTING once per table so
-      // a file landing mid-export stays invisible — the flashback
-      // analogue Snapshot documents. events keeps Tables.load (its
-      // vintage-dependent timestamp normalization lives there).
-      val base =
-        if (knobs.csvConsistentRead && t != "events") {
-          val files = graft.sources.Snapshot.pin(s, s"$d/$t.parquet")
-          if (files.isEmpty) Tables.load(s, d, t)
-          else graft.sources.Snapshot.read(s, files)
-        } else Tables.load(s, d, t)
-      val src = mc.map(_.range).filter(_.nonEmpty)
-        .map(r => base.filter(expr(r))).getOrElse(base)
-      val chunkRows =
-        if (mc.exists(!_.enableSplit)) Long.MaxValue / 4
-        else knobs.csv.rows
-      val (n, nch) = csvExportChunked(s, src, spec, chunkRows,
-        s"$outDir/csv/$t")
-      (t, n, nch)
+    val rows = DriverPool.map(s, resolveTables(knobs), "graft-csv") { t =>
+      try {
+        // per-table [[schema-config.migrate-config]] (full.go:655-703):
+        // `range` restricts the export, enable-split=false forces ONE
+        // chunk (chunkRows >= any count); sql-hint has no Spark analogue
+        val mc = knobs.migrateConfigFor(t)
+        // consistent-read (S3): pin the file LISTING once per table so
+        // a file landing mid-export stays invisible — the flashback
+        // analogue Snapshot documents. events keeps Tables.load (its
+        // vintage-dependent timestamp normalization lives there).
+        val base =
+          if (knobs.csvConsistentRead && t != "events") {
+            val files = graft.sources.Snapshot.pin(s, s"$d/$t.parquet")
+            if (files.isEmpty) Tables.load(s, d, t)
+            else graft.sources.Snapshot.read(s, files)
+          } else Tables.load(s, d, t)
+        val src = mc.map(_.range).filter(_.nonEmpty)
+          .map(r => base.filter(expr(r))).getOrElse(base)
+        val chunkRows =
+          if (mc.exists(!_.enableSplit)) Long.MaxValue / 4
+          else knobs.csv.rows
+        val (n, nch) = csvExportChunked(s, src, spec, chunkRows,
+          s"$outDir/csv/$t")
+        (t, n, nch)
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          throw new RuntimeException(
+            s"csv export of table $t failed: ${e.getMessage}", e)
+      }
     }
     rows.toDF("table_name", "n_rows", "n_chunks")
   }
@@ -338,7 +356,8 @@ object TaskModes {
   private def checkMode(s: SparkSession, knobs: EngineKnobs, d: String,
       outDir: String, dir: String): DataFrame = dir match {
     case "o2m" =>
-      val diff = Check.k1StructDiff(s, d)
+      // collected once: the fix artifact and the report read the rows
+      val diff = collected(s, Check.k1StructDiff(s, d))
       val fixes = diff.filter(col("change") =!= "SAME")
         .orderBy("table_name", "column_name")
         .select("fix_sql").collect().map(_.getString(0)).toIndexedSeq
@@ -525,13 +544,38 @@ object TaskModes {
     * task modes, each composed from the registered operators with the
     * config's knobs applied. `outDir` owns every artifact a mode
     * writes unless a config `*-dir` knob overrides it.
+    *
+    * The report comes back computed: its rows are collected once and
+    * returned as a local relation, so a caller that writes the report
+    * and then shows it (as [[graft.Main]] does) does not re-run the
+    * mode's plan — for `full` that plan is the whole stage-7 checksum
+    * and diff. Each such report is bounded by something the driver
+    * already holds: the chunk plan, the table list, the assess
+    * sections or the rule families. `all` is the exception: its report
+    * is the target table's whole state, one row per key, so it stays
+    * a lazy JDBC read.
     */
   def runMode(s: SparkSession, mode: String, knobs: EngineKnobs,
       d: String, outDir: String, sourceDb: String = "oracle",
       targetDb: String = "mysql"): DataFrame = {
-    import s.implicits._
     val dir = direction(sourceDb, targetDb)
     mode.trim.toLowerCase match {
+      case "all" => allMode(s, knobs, d, outDir)
+      case m => collected(s, boundedReport(s, m, knobs, d, outDir, dir))
+    }
+  }
+
+  /** `df`'s rows, computed now, as a local relation. */
+  private def collected(s: SparkSession, df: DataFrame): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    s.createDataFrame(df.collect().toSeq.asJava, df.schema)
+  }
+
+  private def boundedReport(s: SparkSession, mode: String,
+      knobs: EngineKnobs, d: String, outDir: String,
+      dir: String): DataFrame = {
+    import s.implicits._
+    mode match {
       case "prepare" =>
         graft.reverse.Prepare.seedRules(s, s"$outDir/meta")
         Seq("datatype_rule_column", "datatype_rule_table",
@@ -551,7 +595,6 @@ object TaskModes {
             else knobs.fullChunkSize,
           where = mc.map(_.range).filter(_.nonEmpty),
           consistentRead = knobs.fullConsistentRead)
-      case "all" => allMode(s, knobs, d, outDir)
       case other => throw new IllegalArgumentException(
         // the reference's own wording, server.go:79
         s"flag [mode] can not null or value configure error: $other")

@@ -35,7 +35,7 @@ object Snapshot {
 
   /** Read exactly the pinned file set. */
   def read(s: SparkSession, files: Seq[String]): DataFrame =
-    s.read.parquet(files: _*)
+    graft.Tables.readParquet(s, files: _*)
 
   /** Pin-and-read in one step for single-job callers. */
   def readPinned(s: SparkSession, dir: String): (Seq[String], DataFrame) = {

@@ -303,6 +303,137 @@ class MainSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(spark.read.parquet(s"$droot/region.parquet").count() == 6L)
   }
 
+  /** Records the local property `key` of every job start, and every
+    * job end, so a test can tell its own jobs apart (pool workers
+    * inherit the property).
+    */
+  private class JobsByProperty(key: String)
+      extends org.apache.spark.scheduler.SparkListener {
+    val started = new java.util.concurrent.ConcurrentHashMap[Int, String]
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
+    override def onJobStart(
+        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+        .foreach(v => started.put(e.jobId, v))
+    override def onJobEnd(
+        e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+      ended.add(e.jobId)
+    def tagged(v: String): Seq[Int] = {
+      import scala.jdk.CollectionConverters._
+      started.asScala.collect { case (id, `v`) => id }.toSeq
+    }
+
+    /** Run a job tagged `drain` and wait until it is seen: every event
+      * posted before it has then been delivered.
+      */
+    def drain(): Unit = {
+      val sc = spark.sparkContext
+      sc.setLocalProperty(key, "drain")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(key, null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (tagged("drain").isEmpty) {
+        assert(System.nanoTime() < deadline, "listener events not delivered")
+        Thread.sleep(5)
+      }
+    }
+  }
+
+  private def withJobs[T](key: String)(body: JobsByProperty => T): T = {
+    val l = new JobsByProperty(key)
+    spark.sparkContext.addSparkListener(l)
+    try body(l) finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("reports are computed once: local relations, show runs no job") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val k = knobsWith("[schema-config]\nsource-include-table = " +
+      "[\"reg*\", \"orders\", \"events\"]\n")
+    val devNull =
+      new java.io.PrintStream(java.io.OutputStream.nullOutputStream())
+    withJobs("graft.test.phase") { jobs =>
+      for (mode <- Seq("prepare", "assess", "reverse", "check", "compare",
+          "csv", "full", "all")) {
+        val o = out(s"once_$mode")
+        val rep = TaskModes.runMode(spark, mode, k, sf, o)
+        val local = rep.queryExecution.analyzed.isInstanceOf[LocalRelation]
+        // all's report is the whole target state: it stays a lazy read
+        assert(local == (mode != "all"), s"$mode report is local: $local")
+        rep.write.mode("overwrite").parquet(s"$o/report_$mode.parquet")
+        spark.sparkContext.setLocalProperty("graft.test.phase", s"show_$mode")
+        try Console.withOut(devNull)(rep.show(50, truncate = false))
+        finally spark.sparkContext.setLocalProperty("graft.test.phase", null)
+      }
+      jobs.drain()
+      for (mode <- Seq("compare", "full"))
+        assert(jobs.tagged(s"show_$mode").isEmpty,
+          s"$mode: show re-ran the report's plan")
+      assert(jobs.tagged("show_all").nonEmpty) // the listener does see jobs
+    }
+  }
+
+  /** A CSV export's files by path (the writer's per-job UUID removed
+    * from part-file names), with their bytes.
+    */
+  private def csvFiles(root: String): Map[String, Seq[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+    val r = Paths.get(root)
+    val w = Files.walk(r)
+    try w.iterator().asScala.filter(Files.isRegularFile(_))
+      .filterNot { p =>
+        val n = p.getFileName.toString
+        n.startsWith(".") || n.startsWith("_")
+      }
+      .map(p => r.relativize(p).toString.replaceAll(uuid, "") ->
+        Files.readAllBytes(p).toSeq)
+      .toMap
+    finally w.close()
+  }
+
+  test("csv mode: concurrent tables keep config order and serial bytes") {
+    // every table, small chunks: many tables in flight at once
+    val k = knobsWith("[csv]\nrows = 200\n")
+    val tables = TaskModes.resolveTables(k)
+    assert(tables == Tables.all)
+    val o = out("csvpar")
+    val rep = TaskModes.runMode(spark, "csv", k, sf, o).collect()
+    assert(rep.map(_.getString(0)).toSeq == tables)
+    val spec = TaskModes.csvSpecOf(k.csv)
+    val serial = out("csvser")
+    for ((t, r) <- tables.zip(rep)) {
+      val (n, nch) = TaskModes.csvExportChunked(spark,
+        Tables.load(spark, sf, t), spec, k.csv.rows, s"$serial/$t")
+      assert((r.getLong(1), r.getLong(2)) == ((n, nch)), t)
+      val par = csvFiles(s"$o/csv/$t")
+      assert(par.nonEmpty, t)
+      assert(par == csvFiles(s"$serial/$t"), s"$t: bytes differ")
+    }
+  }
+
+  test("csv mode: an unparsable range fails the call, no job left running") {
+    val k = knobsWith(
+      "[[schema-config.migrate-config]]\nsource-table = \"customer\"\n" +
+        "range = \"c_custkey < AND (\"\n")
+    withJobs("graft.test.call") { jobs =>
+      spark.sparkContext.setLocalProperty("graft.test.call", "badrange")
+      val e =
+        try intercept[Exception](
+          TaskModes.runMode(spark, "csv", k, sf, out("badrange")))
+        finally spark.sparkContext.setLocalProperty("graft.test.call", null)
+      assert(e.getMessage.contains("customer"), e.getMessage)
+      jobs.drain()
+      // a map-stage job adaptive execution queued before the cancel can
+      // still start just after it; it belongs to the cancelled group
+      // and must end promptly, not run on past the call
+      def running = jobs.tagged("badrange").filterNot(jobs.ended.contains)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (running.nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(running.isEmpty, s"jobs of the failed call still active: $running")
+    }
+  }
+
   test("unknown mode fails with the reference's wording") {
     val e = intercept[IllegalArgumentException](
       TaskModes.runMode(spark, "bogus", baseKnobs, sf, out("x")))

@@ -9,9 +9,17 @@ package graft
   *
   *   SPARK_GRAFT_FULL_TESTS=1 sbt test
   *
-  * (build.sbt reads the env var and drops the exclusion). The round
-  * ledger records a full-battery run per round; the default suite
-  * keeps every correctness/contract spec — only the multi-minute
-  * scale/fuzz batteries move behind the tag.
+  * (build.sbt reads the env var and drops the exclusion). Besides the
+  * multi-minute scale/fuzz batteries, the tag also takes some
+  * correctness specs out of the default suite, so a change to the code
+  * they cover needs the full battery:
+  *
+  *  - `EmptySweepSpec`: the empty-table and single-row sweeps over
+  *    every registered query (they drive pipe11/pipe12 through
+  *    `TaskModes.runMode`);
+  *  - `PlanAuditSpec`: the physical-plan audit (whitelisted BNLs, no
+  *    cartesians);
+  *  - `ChangeFeedSourceSpec`: the DSv2 source's change-schema and
+  *    column-type check.
   */
 object SlowTests extends org.scalatest.Tag("graft.Slow")
