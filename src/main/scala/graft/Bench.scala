@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
 
   /** Queries touched untimed before sampling so the d-family figures
@@ -73,6 +74,17 @@ object Bench {
       ((System.nanoTime() - t0) / 1e9, n)
     } catch { case _: Throwable => (-1.0, -1L) }
   }
+
+  /** Runs one untimed warm-up step. A failure does not stop the bench,
+    * but it is reported on stderr: a step that silently fails leaves
+    * its one-time cost on whichever timed query runs into it.
+    */
+  private def warm(label: String)(body: => Any): Unit =
+    try { body; () } catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] warm-up $label failed: " +
+          s"${e.getClass.getName}: ${e.getMessage}")
+    }
 
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
@@ -184,13 +196,13 @@ object Bench {
     spark.sparkContext.setLogLevel("ERROR")
     // untimed warmup: JIT/codegen/first-scan costs otherwise land on
     // whichever query happens to run first, distorting its number
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    warm("entry")(SparkEntry.entry(spark).count())
     // untimed first scan of the BENCH scale's own data: entry() warms
     // sf0.001, but the first sf0.1 parquet scan (footer reads, codec
     // init, page-cache fill) otherwise lands on whichever timed query
     // touches lineitem first — j1 absorbed 2.4 s of it in round 7
-    try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    catch { case _: Throwable => () }
+    warm("first scan")(
+      spark.read.parquet(s"$sfDir/lineitem.parquet").count())
     // memoized-relation steady state: the dedup/similarity/text
     // families share PERSISTED relations (shingle index, IVF cells,
     // PQ artifacts, truth top-k, ...), so whichever query a run
@@ -203,12 +215,12 @@ object Bench {
     // drift. Touching SparkEntry.queries first forces init of every
     // query module, which is what registers the warmers.
     require(SparkEntry.queries.nonEmpty) // force module init
-    for ((_, fn) <- graft.functions.Memo.memoWarmers.toSeq.sortBy(_._1))
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+    for ((name, fn) <- graft.functions.Memo.memoWarmers.toSeq.sortBy(_._1))
+      warm(s"memo $name")(fn(spark, sfDir).count())
     // residual non-memo one-time costs (codegen, expression registry)
     for (q <- Bench.WarmupQueries)
       SparkEntry.queries.get(q).foreach(fn =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () })
+        warm(s"query $q")(fn(spark, sfDir).count()))
     // host-speed denominator, first point: the timed window's start
     // (interior and end points fire below); -1.0 = point failed, never 0
     val probePoints = scala.collection.mutable.ArrayBuffer.empty[Double]

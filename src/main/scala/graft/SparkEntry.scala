@@ -9,11 +9,12 @@ import graft.streaming.Cdc
 import graft.functions.{CharsetConvert, Dedup, Multimodal, Similarity,
   TableFilter, TextAnalysis}
 
-/** Driver contract — see /root/repo/SURVEY.md §7.
+/** Driver contract — see SURVEY.md §7.
   *
-  * `queries` aggregates every implemented operator's registry;
-  * `oracleSql` the matching DuckDB SQL (omitted for non-SQL-expressible
-  * operators, which the driver checks rows-only).
+  * Each module registers its queries once, as a `Seq[Query]` that pairs
+  * every query with its DuckDB oracle SQL. `queries` and `oracleSql`
+  * are views derived from that one list, so both always cover the same
+  * names; `RegistrySpec` checks that no name is registered twice.
   */
 object SparkEntry {
 
@@ -21,37 +22,24 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.j1RevenueByNation(spark, "/root/testdata/sf0.001")
 
-  /** Per-module registries, named — the spec asserts no two modules
-    * register the same query name (`++` would silently keep one and
-    * shrink the verified surface) and that every query has an oracle.
+  /** Per-module registries, named so a duplicate query name can be
+    * traced to the modules registering it (the derived maps would
+    * silently keep one and shrink the verified surface).
     */
-  private[graft] val queryRegistries
-      : Seq[(String, Map[String, (SparkSession, String) => DataFrame])] = Seq(
-    "Relational" -> Relational.queries, "Compare" -> Compare.queries,
-    "Migrate" -> Migrate.queries, "Cdc" -> Cdc.queries,
-    "TextAnalysis" -> TextAnalysis.queries, "Dedup" -> Dedup.queries,
-    "Similarity" -> Similarity.queries, "Multimodal" -> Multimodal.queries,
-    "Reverse" -> Reverse.queries, "Catalog" -> Catalog.queries,
-    "Check" -> Check.queries, "TableFilter" -> TableFilter.queries,
-    "CharsetConvert" -> CharsetConvert.queries, "Assess" -> Assess.queries,
-    "Pipeline" -> Pipeline.queries, "Prepare" -> Prepare.queries,
-    "TaskModes" -> TaskModes.queries)
-
-  private[graft] val oracleRegistries: Seq[(String, Map[String, String])] =
-    Seq(
-      "Relational" -> Relational.oracles, "Compare" -> Compare.oracles,
-      "Migrate" -> Migrate.oracles, "Cdc" -> Cdc.oracles,
-      "TextAnalysis" -> TextAnalysis.oracles, "Dedup" -> Dedup.oracles,
-      "Similarity" -> Similarity.oracles, "Multimodal" -> Multimodal.oracles,
-      "Reverse" -> Reverse.oracles, "Catalog" -> Catalog.oracles,
-      "Check" -> Check.oracles, "TableFilter" -> TableFilter.oracles,
-      "CharsetConvert" -> CharsetConvert.oracles, "Assess" -> Assess.oracles,
-      "Pipeline" -> Pipeline.oracles, "Prepare" -> Prepare.oracles,
-      "TaskModes" -> TaskModes.oracles)
+  private[graft] val registries: Seq[(String, Seq[Query])] = Seq(
+    "Relational" -> Relational.registry, "Compare" -> Compare.registry,
+    "Migrate" -> Migrate.registry, "Cdc" -> Cdc.registry,
+    "TextAnalysis" -> TextAnalysis.registry, "Dedup" -> Dedup.registry,
+    "Similarity" -> Similarity.registry, "Multimodal" -> Multimodal.registry,
+    "Reverse" -> Reverse.registry, "Catalog" -> Catalog.registry,
+    "Check" -> Check.registry, "TableFilter" -> TableFilter.registry,
+    "CharsetConvert" -> CharsetConvert.registry, "Assess" -> Assess.registry,
+    "Pipeline" -> Pipeline.registry, "Prepare" -> Prepare.registry,
+    "TaskModes" -> TaskModes.registry)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    queryRegistries.map(_._2).reduce(_ ++ _)
+    registries.flatMap(_._2).map(q => q.name -> q.build).toMap
 
   def oracleSql: Map[String, String] =
-    oracleRegistries.map(_._2).reduce(_ ++ _)
+    registries.flatMap(_._2).map(q => q.name -> q.oracle).toMap
 }

@@ -16,9 +16,8 @@ import org.apache.spark.sql.functions._
   *
   *   sbt "runMain graft.StreamProbe <complete|interval|neardup> [runs] [sfDir]"
   *
-  * SPARK_GRAFT_EXTRA_CONF="k=v;k=v" applies session-wide overrides
-  * (the QueryProbe A/B convention) so checkpoint/commit knobs can be
-  * flipped without a code edit.
+  * SPARK_GRAFT_EXTRA_CONF="k=v;k=v" applies session-wide overrides so
+  * checkpoint/commit knobs can be flipped without a code edit.
   */
 object StreamProbe {
   def main(args: Array[String]): Unit = {

@@ -5,6 +5,8 @@ import java.nio.charset.Charset
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Charset conversion (F1) — the reference routes every identifier
   * and value through `CharsetConvert(source→UTF8MB4→target)`
   * (`common/strings.go:383-451`; supported set `common/reverse.go:81`:
@@ -119,9 +121,6 @@ object CharsetConvert {
        |  $values) g(id, charset, hex_bytes, roundtrip_ok)""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "f1_charset" -> f1Charset)
-
-  val oracles: Map[String, String] = Map(
-    "f1_charset" -> f1Sql)
+  val registry: Seq[Query] = Seq(
+    Query("f1_charset", f1Charset, f1Sql))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType, TimestampType}
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.functions.Norm.{xhash64, xhash64Sql}
 
 /** Deduplication operators over the `documents` corpus: exact
@@ -628,7 +628,6 @@ object Dedup {
     var edgeTable: Option[String] = None
     def hostEdges(df: DataFrame): DataFrame = scratch match {
       case Some(dir) =>
-        val t0 = System.nanoTime()
         val cap = sess.conf.get("spark.sql.shuffle.partitions").toInt
         val n =
           if (edgeCountHint < 0) cap
@@ -637,31 +636,16 @@ object Dedup {
         val tbl = "graft_cc_edges_" + java.util.UUID.randomUUID()
           .toString.replace("-", "").take(12)
         edgeTable = Some(tbl)
-        val out = if (sys.env.contains("GRAFT_CC_PLAIN_EDGES")) {
-          // A/B diagnostic only — the pre-bucketing edge hosting
-          df.write.parquet(s"$dir/edges")
-          edgeTable = None
-          sess.read.schema("s BIGINT, t BIGINT").parquet(s"$dir/edges")
-        } else {
-          df.repartition(n, col("t")).write.format("parquet")
-            .bucketBy(n, "t")
-            .option("path", s"$dir/edges").saveAsTable(tbl)
-          sess.table(tbl)
-        }
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          println(f"[cc] hostEdges ${(System.nanoTime() - t0) / 1e9}%.2f s" +
-            s" buckets=$n")
-        out
+        df.repartition(n, col("t")).write.format("parquet")
+          .bucketBy(n, "t")
+          .option("path", s"$dir/edges").saveAsTable(tbl)
+        sess.table(tbl)
       case None => df.localCheckpoint(true)
     }
     def hostLabels(df: DataFrame, round: Int): DataFrame =
       scratch match {
         case Some(dir) =>
-          val t0 = System.nanoTime()
           df.write.parquet(s"$dir/l$round")
-          if (sys.env.contains("GRAFT_CC_DEBUG"))
-            println(f"[cc] hostLabels $round%d " +
-              f"${(System.nanoTime() - t0) / 1e9}%.2f s")
           // the previous round's labels are dead once this round's
           // files exist — sweep them so the loop holds at most two
           // label generations on disk
@@ -713,11 +697,6 @@ object Dedup {
       val stepped = edges
         .join(labels.withColumnRenamed("doc_id", "t"), "t")
         .groupBy(col("s").as("doc_id")).agg(min("label").as("label"))
-      if (i == 0 && sys.env.contains("GRAFT_CC_DEBUG"))
-        // diagnostic only: the per-round join's physical plan — in
-        // reliable mode the edge side must be a bucketed scan with
-        // no Exchange of its own (CcProbe prints this)
-        println(stepped.queryExecution.executedPlan.toString)
       // pointer jumping: follow label→label once per round, so label
       // distance to the component minimum contracts geometrically —
       // chains converge in O(log diameter) rounds instead of
@@ -731,14 +710,10 @@ object Dedup {
         .join(stepped.as("y"), col("x.label") === col("y.doc_id"), "left")
         .select(col("x.doc_id").as("doc_id"),
           coalesce(col("y.label"), col("x.label")).as("label")), i)
-      val tr = System.nanoTime()
       val s = labelSum(jumped)
       converged = s == prevSum
       prevSum = s
       labels = jumped
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc] round $i sum=$s converged=$converged " +
-          f"sum_t=${(System.nanoTime() - tr) / 1e9}%.2f s")
     }
     // loud failure beats silently-wrong cluster ids: a component with
     // diameter > maxIters means the fixpoint wasn't reached
@@ -1853,47 +1828,25 @@ object Dedup {
        |    ELSE 'LOW' END AS band
        |FROM per""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d21_novelty_profile" -> d21NoveltyProfile,
-    "d1_exact_dedup" -> d1ExactDedup,
-    "d2_ngram_jaccard" -> d2NgramJaccard,
-    "d3_minhash_lsh" -> d3MinhashLsh,
-    "d4_simhash" -> d4Simhash,
-    "d4b_simhash_pairs" -> d4bSimhashPairs,
-    "d6_dup_clusters" -> d6DupClusters,
-    "d8_incremental_dedup" -> d8IncrementalDedup,
-    "d9_estimator_calibration" -> d9EstimatorCalibration,
-    "d17_band_planner" -> d17BandPlanner,
-    "d18_soft_dedup_weights" -> d18SoftDedupWeights,
-    "d19_incremental_near_dup" -> d19IncrementalNearDup,
-    "d20_source_overlap" -> d20SourceOverlap,
-    "d10_cluster_canonical" -> d10ClusterCanonical,
-    "d12_exact_substring" -> d12ExactSubstring,
-    "d13_containment_pairs" -> d13ContainmentPairs,
-    "d14_fuzzy_name_pairs" -> d14FuzzyNamePairs,
-    "d15_streaming_near_dup" -> d15StreamingNearDup,
-    "d16_streaming_exact_dedup" -> d16StreamingExactDedup,
-    "pipe8_leakage_split" -> pipe8LeakageSplit)
-
-  val oracles: Map[String, String] = Map(
-    "d21_novelty_profile" -> d21Sql,
-    "d1_exact_dedup" -> d1Sql,
-    "d2_ngram_jaccard" -> d2Sql,
-    "d3_minhash_lsh" -> d3Sql,
-    "d15_streaming_near_dup" -> d15Sql,
-    "d16_streaming_exact_dedup" -> d16Sql,
-    "d4_simhash" -> d4Sql,
-    "d4b_simhash_pairs" -> d4bSql,
-    "d6_dup_clusters" -> d6Sql,
-    "d8_incremental_dedup" -> d8Sql,
-    "d9_estimator_calibration" -> d9Sql,
-    "d17_band_planner" -> d17Sql,
-    "d18_soft_dedup_weights" -> d18Sql,
-    "d19_incremental_near_dup" -> d19Sql,
-    "d20_source_overlap" -> d20Sql,
-    "d10_cluster_canonical" -> d10Sql,
-    "d12_exact_substring" -> d12Sql,
-    "d13_containment_pairs" -> d13Sql,
-    "d14_fuzzy_name_pairs" -> d14Sql,
-    "pipe8_leakage_split" -> pipe8Sql)
+  val registry: Seq[Query] = Seq(
+    Query("d21_novelty_profile", d21NoveltyProfile, d21Sql),
+    Query("d1_exact_dedup", d1ExactDedup, d1Sql),
+    Query("d2_ngram_jaccard", d2NgramJaccard, d2Sql),
+    Query("d3_minhash_lsh", d3MinhashLsh, d3Sql),
+    Query("d4_simhash", d4Simhash, d4Sql),
+    Query("d4b_simhash_pairs", d4bSimhashPairs, d4bSql),
+    Query("d6_dup_clusters", d6DupClusters, d6Sql),
+    Query("d8_incremental_dedup", d8IncrementalDedup, d8Sql),
+    Query("d9_estimator_calibration", d9EstimatorCalibration, d9Sql),
+    Query("d17_band_planner", d17BandPlanner, d17Sql),
+    Query("d18_soft_dedup_weights", d18SoftDedupWeights, d18Sql),
+    Query("d19_incremental_near_dup", d19IncrementalNearDup, d19Sql),
+    Query("d20_source_overlap", d20SourceOverlap, d20Sql),
+    Query("d10_cluster_canonical", d10ClusterCanonical, d10Sql),
+    Query("d12_exact_substring", d12ExactSubstring, d12Sql),
+    Query("d13_containment_pairs", d13ContainmentPairs, d13Sql),
+    Query("d14_fuzzy_name_pairs", d14FuzzyNamePairs, d14Sql),
+    Query("d15_streaming_near_dup", d15StreamingNearDup, d15Sql),
+    Query("d16_streaming_exact_dedup", d16StreamingExactDedup, d16Sql),
+    Query("pipe8_leakage_split", pipe8LeakageSplit, pipe8Sql))
 }

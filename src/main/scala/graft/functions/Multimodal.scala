@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Multimodal-column plumbing: media payloads as opaque `binary`
   * columns with typed metadata, and a batched per-partition
   * decode/feature-extract stage.
@@ -610,25 +612,14 @@ object Multimodal {
         |  l.doc_id = c.canonical_id AS is_canonical, c.cluster_size
         |FROM lab l JOIN can c USING (cluster_id)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "m9_phash_clusters" -> m9PhashClusters,
-    "m8_phash_neardup" -> m8PhashNearDup,
-    "m7_binary_ingest" -> m7BinaryIngest,
-    "m6_shard_plan" -> m6ShardPlan,
-    "m5_resize_plan" -> m5ResizePlan,
-    "m1_media_meta" -> m1MediaMeta,
-    "m2_media_features" -> m2MediaFeatures,
-    "m3_frame_sample" -> m3FrameSample,
-    "m4_media_dedup" -> m4MediaDedup)
-
-  val oracles: Map[String, String] = Map(
-    "m9_phash_clusters" -> m9Sql,
-    "m8_phash_neardup" -> m8Sql,
-    "m7_binary_ingest" -> m7Sql,
-    "m6_shard_plan" -> m6Sql,
-    "m5_resize_plan" -> m5Sql,
-    "m1_media_meta" -> m1Sql,
-    "m2_media_features" -> m2Sql,
-    "m3_frame_sample" -> m3Sql,
-    "m4_media_dedup" -> m4Sql)
+  val registry: Seq[Query] = Seq(
+    Query("m9_phash_clusters", m9PhashClusters, m9Sql),
+    Query("m8_phash_neardup", m8PhashNearDup, m8Sql),
+    Query("m7_binary_ingest", m7BinaryIngest, m7Sql),
+    Query("m6_shard_plan", m6ShardPlan, m6Sql),
+    Query("m5_resize_plan", m5ResizePlan, m5Sql),
+    Query("m1_media_meta", m1MediaMeta, m1Sql),
+    Query("m2_media_features", m2MediaFeatures, m2Sql),
+    Query("m3_frame_sample", m3FrameSample, m3Sql),
+    Query("m4_media_dedup", m4MediaDedup, m4Sql))
 }

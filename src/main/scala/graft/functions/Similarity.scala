@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Similarity search over the `embeddings` table (Array[Float], d=64):
   * brute-force cosine top-k as the exact baseline, an IVF-style
@@ -2094,45 +2094,24 @@ object Similarity {
        |$branches""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ann15_nn_join" -> ann15NnJoin,
-    "ann15b_probe_coverage" -> ann15bProbeCoverage,
-    "ann12_filtered_search" -> ann12FilteredSearch,
-    "ann11_mmr_rerank" -> ann11MmrRerank,
-    "ann9_hybrid_rrf" -> ann9HybridRrf,
-    "ann10_ivfpq_recall" -> ann10IvfPqRecall,
-    "ann5_kmeans_iter" -> ann5KmeansIter,
-    "ann13_reindex_gate" -> ann13ReindexGate,
-    "ann14_mrl_recall" -> ann14MrlRecall,
-    "ann8_pq_recall" -> ann8PqRecall,
-    "ann6_probe_sweep" -> ann6ProbeSweep,
-    "d7_rph_pairs" -> d7RphPairs,
-    "ann1_brute_topk" -> ann1BruteTopK,
-    "ann2_ivf_topk" -> ann2IvfTopK,
-    "ann3_recall" -> ann3Recall,
-    "ann4_quantized_recall" -> ann4QuantizedRecall,
-    "ann7_refine_recall" -> ann7RefineRecall,
-    "d5_cosine_pairs_banded" -> d5CosinePairsBanded,
-    "d11_semantic_dedup" -> d11SemanticDedup)
-
-  val oracles: Map[String, String] = Map(
-    "ann15_nn_join" -> ann15Sql,
-    "ann15b_probe_coverage" -> ann15bSql,
-    "ann12_filtered_search" -> ann12Sql,
-    "ann11_mmr_rerank" -> ann11Sql,
-    "ann9_hybrid_rrf" -> ann9Sql,
-    "ann10_ivfpq_recall" -> ann10Sql,
-    "ann5_kmeans_iter" -> ann5Sql,
-    "ann13_reindex_gate" -> ann13Sql,
-    "ann14_mrl_recall" -> ann14Sql,
-    "ann8_pq_recall" -> ann8Sql,
-    "ann6_probe_sweep" -> ann6Sql,
-    "d7_rph_pairs" -> d7Sql,
-    "ann1_brute_topk" -> ann1Sql,
-    "ann2_ivf_topk" -> ann2Sql,
-    "ann3_recall" -> ann3Sql,
-    "ann4_quantized_recall" -> ann4Sql,
-    "ann7_refine_recall" -> ann7Sql,
-    "d5_cosine_pairs_banded" -> d5Sql,
-    "d11_semantic_dedup" -> d11Sql)
+  val registry: Seq[Query] = Seq(
+    Query("ann15_nn_join", ann15NnJoin, ann15Sql),
+    Query("ann15b_probe_coverage", ann15bProbeCoverage, ann15bSql),
+    Query("ann12_filtered_search", ann12FilteredSearch, ann12Sql),
+    Query("ann11_mmr_rerank", ann11MmrRerank, ann11Sql),
+    Query("ann9_hybrid_rrf", ann9HybridRrf, ann9Sql),
+    Query("ann10_ivfpq_recall", ann10IvfPqRecall, ann10Sql),
+    Query("ann5_kmeans_iter", ann5KmeansIter, ann5Sql),
+    Query("ann13_reindex_gate", ann13ReindexGate, ann13Sql),
+    Query("ann14_mrl_recall", ann14MrlRecall, ann14Sql),
+    Query("ann8_pq_recall", ann8PqRecall, ann8Sql),
+    Query("ann6_probe_sweep", ann6ProbeSweep, ann6Sql),
+    Query("d7_rph_pairs", d7RphPairs, d7Sql),
+    Query("ann1_brute_topk", ann1BruteTopK, ann1Sql),
+    Query("ann2_ivf_topk", ann2IvfTopK, ann2Sql),
+    Query("ann3_recall", ann3Recall, ann3Sql),
+    Query("ann4_quantized_recall", ann4QuantizedRecall, ann4Sql),
+    Query("ann7_refine_recall", ann7RefineRecall, ann7Sql),
+    Query("d5_cosine_pairs_banded", d5CosinePairsBanded, d5Sql),
+    Query("d11_semantic_dedup", d11SemanticDedup, d11Sql))
 }

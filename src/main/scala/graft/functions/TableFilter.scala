@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Table-name glob filter (P4) — the reference's include/exclude
   * wildcard filter (`filter/parser.go:45-121`, `filter/filter.go:
@@ -112,9 +112,6 @@ object TableFilter {
        |WHERE $globs""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p4_table_filter" -> p4TableFilter)
-
-  val oracles: Map[String, String] = Map(
-    "p4_table_filter" -> p4Sql)
+  val registry: Seq[Query] = Seq(
+    Query("p4_table_filter", p4TableFilter, p4Sql))
 }

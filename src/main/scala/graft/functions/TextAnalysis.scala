@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.functions.Norm.xhash64
 
 /** Text-analysis operators for training-data pipelines over the
@@ -2447,74 +2447,38 @@ object TextAnalysis {
     s"""WITH $t24ModelSqlCtes
        |SELECT b, s FROM scored""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t17_bigram_lm" -> t17BigramLm,
-    "t24_dsir_select" -> t24DsirSelect,
-    "t25_streaming_dsir_model" -> t25StreamingDsirModel,
-    "t21_ccnet_buckets" -> t21CcnetBuckets,
-    "t18_gopher_repetition" -> t18GopherRepetition,
-    "t19_nb_quality" -> t19NbQuality,
-    "t20_weighted_sample" -> t20WeightedSample,
-    "t16_bpe_merges" -> t16BpeMerges,
-    "t22_bpe_encode" -> t22BpeEncode,
-    "t23_bpe_packing" -> t23BpePacking,
-    "pipe10_gate_ablation" -> pipe10GateAblation,
-    "t11_lexicon_profile" -> t11LexiconProfile,
-    "pipe4_curation" -> pipe4Curation,
-    "t12_context_chunks" -> t12ContextChunks,
-    "t13_repetition_filter" -> t13RepetitionFilter,
-    "t1_lang_id" -> t1LangId,
-    "t2_quality_score" -> t2QualityScore,
-    "t3_token_count" -> t3TokenCount,
-    "t4_fingerprint" -> t4Fingerprint,
-    "t5_winnow_fingerprint" -> t5WinnowFingerprint,
-    "t6_hash_sample" -> t6HashSample,
-    "t7_decontaminate" -> t7Decontaminate,
-    "t8_stratified_sample" -> t8StratifiedSample,
-    "t9_sequence_packing" -> t9SequencePacking,
-    "t10_pii_scrub" -> t10PiiScrub,
-    "pipe1_training_pipeline" -> pipe1TrainingPipeline,
-    "pipe5_token_mixture" -> pipe5TokenMixture,
-    "pipe13_weighted_mixture" -> pipe13WeightedMixture,
-    "pipe6_incremental_curation" -> pipe6IncrementalCuration,
-    "t14_rarity_profile" -> t14RarityProfile,
-    "t15_tfidf_keywords" -> t15TfidfKeywords,
-    "pipe9_temperature_mixture" -> pipe9TemperatureMixture,
-    "pipe7_dataset_card" -> pipe7DatasetCard)
-
-  // lazy because it forces pipe7Sql (see its init-order note)
-  lazy val oracles: Map[String, String] = Map(
-    "t18_gopher_repetition" -> t18Sql,
-    "t24_dsir_select" -> t24Sql,
-    "t25_streaming_dsir_model" -> t25Sql,
-    "t19_nb_quality" -> t19Sql,
-    "t20_weighted_sample" -> t20Sql,
-    "t11_lexicon_profile" -> t11Sql,
-    "pipe4_curation" -> pipe4Sql,
-    "t12_context_chunks" -> t12Sql,
-    "t13_repetition_filter" -> t13Sql,
-    "t1_lang_id" -> t1Sql,
-    "t2_quality_score" -> t2Sql,
-    "t3_token_count" -> t3Sql,
-    "t4_fingerprint" -> t4Sql,
-    "t5_winnow_fingerprint" -> t5Sql,
-    "t6_hash_sample" -> t6Sql,
-    "t7_decontaminate" -> t7Sql,
-    "t8_stratified_sample" -> t8Sql,
-    "t9_sequence_packing" -> t9Sql,
-    "t10_pii_scrub" -> t10Sql,
-    "pipe1_training_pipeline" -> pipe1Sql,
-    "pipe5_token_mixture" -> pipe5Sql,
-    "pipe13_weighted_mixture" -> pipe13Sql,
-    "pipe6_incremental_curation" -> pipe6Sql,
-    "t14_rarity_profile" -> t14Sql,
-    "t15_tfidf_keywords" -> t15Sql,
-    "t16_bpe_merges" -> t16Sql,
-    "t22_bpe_encode" -> t22Sql,
-    "t23_bpe_packing" -> t23Sql,
-    "t17_bigram_lm" -> t17Sql,
-    "t21_ccnet_buckets" -> t21Sql,
-    "pipe10_gate_ablation" -> pipe10Sql,
-    "pipe9_temperature_mixture" -> pipe9Sql,
-    "pipe7_dataset_card" -> pipe7Sql)
+  val registry: Seq[Query] = Seq(
+    Query("t17_bigram_lm", t17BigramLm, t17Sql),
+    Query("t24_dsir_select", t24DsirSelect, t24Sql),
+    Query("t25_streaming_dsir_model", t25StreamingDsirModel, t25Sql),
+    Query("t21_ccnet_buckets", t21CcnetBuckets, t21Sql),
+    Query("t18_gopher_repetition", t18GopherRepetition, t18Sql),
+    Query("t19_nb_quality", t19NbQuality, t19Sql),
+    Query("t20_weighted_sample", t20WeightedSample, t20Sql),
+    Query("t16_bpe_merges", t16BpeMerges, t16Sql),
+    Query("t22_bpe_encode", t22BpeEncode, t22Sql),
+    Query("t23_bpe_packing", t23BpePacking, t23Sql),
+    Query("pipe10_gate_ablation", pipe10GateAblation, pipe10Sql),
+    Query("t11_lexicon_profile", t11LexiconProfile, t11Sql),
+    Query("pipe4_curation", pipe4Curation, pipe4Sql),
+    Query("t12_context_chunks", t12ContextChunks, t12Sql),
+    Query("t13_repetition_filter", t13RepetitionFilter, t13Sql),
+    Query("t1_lang_id", t1LangId, t1Sql),
+    Query("t2_quality_score", t2QualityScore, t2Sql),
+    Query("t3_token_count", t3TokenCount, t3Sql),
+    Query("t4_fingerprint", t4Fingerprint, t4Sql),
+    Query("t5_winnow_fingerprint", t5WinnowFingerprint, t5Sql),
+    Query("t6_hash_sample", t6HashSample, t6Sql),
+    Query("t7_decontaminate", t7Decontaminate, t7Sql),
+    Query("t8_stratified_sample", t8StratifiedSample, t8Sql),
+    Query("t9_sequence_packing", t9SequencePacking, t9Sql),
+    Query("t10_pii_scrub", t10PiiScrub, t10Sql),
+    Query("pipe1_training_pipeline", pipe1TrainingPipeline, pipe1Sql),
+    Query("pipe5_token_mixture", pipe5TokenMixture, pipe5Sql),
+    Query("pipe13_weighted_mixture", pipe13WeightedMixture, pipe13Sql),
+    Query("pipe6_incremental_curation", pipe6IncrementalCuration, pipe6Sql),
+    Query("t14_rarity_profile", t14RarityProfile, t14Sql),
+    Query("t15_tfidf_keywords", t15TfidfKeywords, t15Sql),
+    Query("pipe9_temperature_mixture", pipe9TemperatureMixture, pipe9Sql),
+    Query("pipe7_dataset_card", pipe7DatasetCard, pipe7Sql))
 }

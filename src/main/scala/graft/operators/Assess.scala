@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.reverse.Reverse
 
 /** Assess report families over an Oracle-dictionary-shaped snapshot —
@@ -565,35 +566,19 @@ object Assess {
     }.mkString("\nUNION ALL\n")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "a35_skew_profile" -> a35SkewProfile,
-    "a30_code_objects" -> a30CodeObjects,
-    "a31_synonyms" -> a31Synonyms,
-    "a32_mview_profile" -> a32MviewProfile,
-    "a20_table_type_counts" -> a20TableTypeCounts,
-    "a21_partition_types" -> a21PartitionTypes,
-    "a22_subpartition_types" -> a22SubpartitionTypes,
-    "a23_temp_table_types" -> a23TempTableTypes,
-    "a24_constraint_types" -> a24ConstraintTypes,
-    "a25_default_value_counts" -> a25DefaultValueCounts,
-    "a26_view_types" -> a26ViewTypes,
-    "a27_index_types" -> a27IndexTypes,
-    "a28_column_type_widths" -> a28ColumnTypeWidths,
-    "a29_threshold_matrix" -> a29ThresholdMatrix)
-
-  val oracles: Map[String, String] = Map(
-    "a35_skew_profile" -> a35Sql,
-    "a30_code_objects" -> a30Sql,
-    "a31_synonyms" -> a31Sql,
-    "a32_mview_profile" -> a32Sql,
-    "a20_table_type_counts" -> a20Sql,
-    "a21_partition_types" -> a21Sql,
-    "a22_subpartition_types" -> a22Sql,
-    "a23_temp_table_types" -> a23Sql,
-    "a24_constraint_types" -> a24Sql,
-    "a25_default_value_counts" -> a25Sql,
-    "a26_view_types" -> a26Sql,
-    "a27_index_types" -> a27Sql,
-    "a28_column_type_widths" -> a28Sql,
-    "a29_threshold_matrix" -> a29Sql)
+  val registry: Seq[Query] = Seq(
+    Query("a35_skew_profile", a35SkewProfile, a35Sql),
+    Query("a30_code_objects", a30CodeObjects, a30Sql),
+    Query("a31_synonyms", a31Synonyms, a31Sql),
+    Query("a32_mview_profile", a32MviewProfile, a32Sql),
+    Query("a20_table_type_counts", a20TableTypeCounts, a20Sql),
+    Query("a21_partition_types", a21PartitionTypes, a21Sql),
+    Query("a22_subpartition_types", a22SubpartitionTypes, a22Sql),
+    Query("a23_temp_table_types", a23TempTableTypes, a23Sql),
+    Query("a24_constraint_types", a24ConstraintTypes, a24Sql),
+    Query("a25_default_value_counts", a25DefaultValueCounts, a25Sql),
+    Query("a26_view_types", a26ViewTypes, a26Sql),
+    Query("a27_index_types", a27IndexTypes, a27Sql),
+    Query("a28_column_type_widths", a28ColumnTypeWidths, a28Sql),
+    Query("a29_threshold_matrix", a29ThresholdMatrix, a29Sql))
 }

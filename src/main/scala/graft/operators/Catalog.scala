@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Catalog introspection (S5) + catalog-driven assess reports (A6
   * family) — the reference's dictionary scans
@@ -358,25 +358,14 @@ object Catalog {
 
   // ------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "k2_catalog_snapshot" -> k2CatalogSnapshot,
-    "a4_stats_rowcount" -> a4StatsRowcount,
-    "a10_column_type_dist" -> a10ColumnTypeDist,
-    "a11_row_counts" -> a11RowCounts,
-    "a12_null_profile" -> a12NullProfile,
-    "a13_width_profile" -> a13WidthProfile,
-    "a14_numeric_profile" -> a14NumericProfile,
-    "a15_wide_tables" -> a15WideTables,
-    "a18_top_tables" -> a18TopTables)
-
-  val oracles: Map[String, String] = Map(
-    "k2_catalog_snapshot" -> k2Sql,
-    "a4_stats_rowcount" -> a4Sql,
-    "a10_column_type_dist" -> a10Sql,
-    "a11_row_counts" -> a11Sql,
-    "a12_null_profile" -> a12Sql,
-    "a13_width_profile" -> a13Sql,
-    "a14_numeric_profile" -> a14Sql,
-    "a15_wide_tables" -> a15Sql,
-    "a18_top_tables" -> a18Sql)
+  val registry: Seq[Query] = Seq(
+    Query("k2_catalog_snapshot", k2CatalogSnapshot, k2Sql),
+    Query("a4_stats_rowcount", a4StatsRowcount, a4Sql),
+    Query("a10_column_type_dist", a10ColumnTypeDist, a10Sql),
+    Query("a11_row_counts", a11RowCounts, a11Sql),
+    Query("a12_null_profile", a12NullProfile, a12Sql),
+    Query("a13_width_profile", a13WidthProfile, a13Sql),
+    Query("a14_numeric_profile", a14NumericProfile, a14Sql),
+    Query("a15_wide_tables", a15WideTables, a15Sql),
+    Query("a18_top_tables", a18TopTables, a18Sql))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
 import graft.functions.Norm
 
 /** Check engine — structural diff of two catalog snapshots with
@@ -367,15 +368,8 @@ object Check {
         Seq[org.apache.spark.sql.Row])] = {
     import scala.concurrent.duration._
     DriverPool.map(s, reportSections, "graft-assess", 10.minutes) { sec =>
-      val t0 = System.nanoTime()
       val df = sec.fn(s, d)
-      val out = (sec, df.schema, df.collect().toSeq)
-      // env-gated per-section wall (zero cost unset): the r16
-      // verdict asked which section sets a36's wall — this is the
-      // data source for that table (SCALE.md)
-      if (sys.env.contains("SPARK_GRAFT_ASSESS_TIMING"))
-        println(f"[assess] ${sec.key}%-28s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      out
+      (sec, df.schema, df.collect().toSeq)
     }
   }
 
@@ -1177,27 +1171,22 @@ object Check {
        |             delete_rule, expr, on_target)""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "k11_constraint_diff" -> k11ConstraintDiff,
-    "k1_struct_diff" -> k1StructDiff,
-    "k3_index_diff" -> k3IndexDiff,
-    "k4_type_rule_check" -> k4TypeRuleCheck,
-    "k5_jdbc_catalog" -> k5JdbcCatalog,
-    "k6_m2o_struct_diff" -> k6M2oStructDiff,
-    "k7_o2t_check" -> k7O2tCheck,
-    "k8_t2o_check" -> k8T2oCheck,
-    "a19_object_overview" -> a19ObjectOverview,
-    "a36_assess_report" -> a36AssessReport)
+  val registry: Seq[Query] = Seq(
+    Query("k11_constraint_diff", k11ConstraintDiff, k11Sql),
+    Query("k1_struct_diff", k1StructDiff, k1Sql),
+    Query("k3_index_diff", k3IndexDiff, k3Sql),
+    Query("k4_type_rule_check", k4TypeRuleCheck, k4Sql),
+    Query("k5_jdbc_catalog", k5JdbcCatalog, k5Sql),
+    Query("k6_m2o_struct_diff", k6M2oStructDiff, k6Sql),
+    Query("k7_o2t_check", k7O2tCheck, k7Sql),
+    Query("k8_t2o_check", k8T2oCheck, k8Sql),
+    Query("a19_object_overview", a19ObjectOverview, a19Sql),
+    Query("a36_assess_report", a36AssessReport, a36Sql))
 
-  val oracles: Map[String, String] = Map(
-    "k11_constraint_diff" -> k11Sql,
-    "k1_struct_diff" -> k1Sql,
-    "k3_index_diff" -> k3Sql,
-    "k4_type_rule_check" -> k4Sql,
-    "k5_jdbc_catalog" -> k5Sql,
-    "k6_m2o_struct_diff" -> k6Sql,
-    "k7_o2t_check" -> k7Sql,
-    "k8_t2o_check" -> k8Sql,
-    "a19_object_overview" -> a19Sql,
-    "a36_assess_report" -> a36Sql)
+  /** The oracle SQL registered for `name` (the task-mode benchmark
+    * recomputes its checks with it).
+    */
+  def oracles(name: String): String = registry.find(_.name == name)
+    .getOrElse(throw new NoSuchElementException(s"no Check query $name"))
+    .oracle
 }

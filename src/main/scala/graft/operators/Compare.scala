@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.functions.Norm
 import graft.functions.Norm._
 
@@ -52,8 +52,8 @@ object Compare {
     * checksums that are both computed here, in Spark — the value
     * never meets a DuckDB-computed checksum — so the hash is Spark's
     * native codegen `xxhash64` (round 16: the md5-hex-conv
-    * cross-engine hash measured ~2× the whole aggregation pass,
-    * HashProbe, and cross-engine bit-parity buys nothing for an
+    * cross-engine hash measured ~2× the whole aggregation pass in a
+    * one-JVM A/B, and cross-engine bit-parity buys nothing for an
     * engine-internal equality check; the oracle side keeps filtering
     * on ITS OWN md5 sums, so the two engines' mismatch sets still
     * check each other). The roundtrip/export checksums that ARE
@@ -763,27 +763,15 @@ object Compare {
 
   // ------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "j4_symmetric_diff" -> j4SymmetricDiff,
-    "c2_fix_actions" -> c2FixActions,
-    "a2b_chunk_compare" -> a2bChunkCompare,
-    "c3_narrowed_diff" -> c3NarrowedDiff,
-    "c7_sampled_compare" -> c7SampledCompare,
-    "p2_compare_norm" -> p2CompareNorm,
-    "set_except" -> setExcept,
-    "set_intersect" -> setIntersect,
-    "set_union" -> setUnion,
-    "j5_fullouter_diff" -> j5FullOuterDiff)
-
-  val oracles: Map[String, String] = Map(
-    "j4_symmetric_diff" -> j4Sql,
-    "c2_fix_actions" -> c2Sql,
-    "a2b_chunk_compare" -> a2bSql,
-    "c3_narrowed_diff" -> c3Sql,
-    "c7_sampled_compare" -> c7Sql,
-    "p2_compare_norm" -> p2Sql,
-    "set_except" -> setExceptSql,
-    "set_intersect" -> setIntersectSql,
-    "set_union" -> setUnionSql,
-    "j5_fullouter_diff" -> j5Sql)
+  val registry: Seq[Query] = Seq(
+    Query("j4_symmetric_diff", j4SymmetricDiff, j4Sql),
+    Query("c2_fix_actions", c2FixActions, c2Sql),
+    Query("a2b_chunk_compare", a2bChunkCompare, a2bSql),
+    Query("c3_narrowed_diff", c3NarrowedDiff, c3Sql),
+    Query("c7_sampled_compare", c7SampledCompare, c7Sql),
+    Query("p2_compare_norm", p2CompareNorm, p2Sql),
+    Query("set_except", setExcept, setExceptSql),
+    Query("set_intersect", setIntersect, setIntersectSql),
+    Query("set_union", setUnion, setUnionSql),
+    Query("j5_fullouter_diff", j5FullOuterDiff, j5Sql))
 }

@@ -1,13 +1,13 @@
 package graft.operators
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.functions.Norm
 import graft.functions.Norm._
 
@@ -226,6 +226,25 @@ object Migrate {
     p.toString
   }
 
+  /** Parent dir for per-run scratch. An explicit dir (the value of
+    * SPARK_GRAFT_STREAM_SCRATCH for [[fastTempDir]]) must be a writable
+    * directory: a bad one fails loudly rather than moving the scratch
+    * to another file system unnoticed. Without one: /dev/shm when it
+    * is a writable directory, else java.io.tmpdir.
+    */
+  private[graft] def scratchParent(explicit: Option[String]): Path =
+    explicit match {
+      case Some(dir) =>
+        val p = Paths.get(dir)
+        require(Files.isDirectory(p) && Files.isWritable(p),
+          s"SPARK_GRAFT_STREAM_SCRATCH=$dir is not a writable directory")
+        p
+      case None =>
+        val shm = Paths.get("/dev/shm")
+        if (Files.isDirectory(shm) && Files.isWritable(shm)) shm
+        else Paths.get(System.getProperty("java.io.tmpdir"))
+    }
+
   /** Scratch home for an embedded JDBC (Derby) target, RAM-backed when
     * the host has a writable tmpfs. Embedded Derby fsyncs its txn log
     * on every commit; with the database on the shared disk, full-bench
@@ -253,26 +272,18 @@ object Migrate {
     * restartability-from-checkpoint is pinned by specs that build
     * their OWN checkpoint dirs). A production deployment sizes
     * checkpoint storage for its durability needs instead —
-    * SPARK_GRAFT_STREAM_SCRATCH overrides the parent dir.
+    * SPARK_GRAFT_STREAM_SCRATCH overrides the parent dir
+    * ([[scratchParent]]).
     */
   private[graft] def fastTempDir(tag: String): String = {
-    val parent = sys.env.get("SPARK_GRAFT_STREAM_SCRATCH")
-      .map(java.nio.file.Paths.get(_))
-      .getOrElse(java.nio.file.Paths.get("/dev/shm"))
-    val p =
-      if (Files.isDirectory(parent) && Files.isWritable(parent))
-        Files.createTempDirectory(parent, s"graft_$tag")
-      else Files.createTempDirectory(s"graft_$tag")
+    val p = Files.createTempDirectory(
+      scratchParent(sys.env.get("SPARK_GRAFT_STREAM_SCRATCH")), s"graft_$tag")
     tempDirs.add(p)
     p.toString
   }
 
   private[graft] def scratchDbDir(tag: String): String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val p =
-      if (Files.isDirectory(shm) && Files.isWritable(shm))
-        Files.createTempDirectory(shm, s"graft_$tag")
-      else Files.createTempDirectory(s"graft_$tag")
+    val p = Files.createTempDirectory(scratchParent(None), s"graft_$tag")
     tempDirs.add(p)
     derbyTuned
     System.setProperty("derby.system.home", p.toString)
@@ -1581,51 +1592,29 @@ object Migrate {
 
   // ------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s20_epoch_shuffle" -> s20EpochShuffle,
-    "s7_parquet_roundtrip" -> s7ParquetRoundtrip,
-    "s7b_jdbc_roundtrip" -> s7bJdbcRoundtrip,
-    "s8_csv_roundtrip" -> s8CsvRoundtrip,
-    "s8b_chunked_csv" -> s8bChunkedCsv,
-    "s8c_csv_dialect" -> s8cCsvDialect,
-    "s9b_json_roundtrip" -> s9bJsonRoundtrip,
-    "s9c_ddl_apply" -> s9cDdlApply,
-    "s9d_orc_roundtrip" -> s9dOrcRoundtrip,
-    "s10_partitioned_pruning" -> s10PartitionedPruning,
-    "s11_schema_evolution" -> s11SchemaEvolution,
-    "s12_bucketed_join" -> s12BucketedJoin,
-    "s13_compaction" -> s13Compaction,
-    "s14_quarantine_read" -> s14QuarantineRead,
-    "s15_range_layout" -> s15RangeLayout,
-    "s16_zorder_layout" -> s16ZorderLayout,
-    "s17_manifest_skipping" -> s17ManifestSkipping,
-    "s18_overlap_depth" -> s18OverlapDepth,
-    "s19_dynamic_overwrite" -> s19DynamicOverwrite,
-    "s2_chunked_scan" -> s2ChunkedScan)
-
-  val oracles: Map[String, String] = Map(
-    "s7_parquet_roundtrip" -> s7Sql,
-    "s7b_jdbc_roundtrip" -> s7bSql,
-    "s8_csv_roundtrip" -> s8Sql,
-    "s8b_chunked_csv" -> s8bSql,
-    "s8c_csv_dialect" -> s8cSql,
-    "s9b_json_roundtrip" -> s9bSql,
-    "s9c_ddl_apply" -> s9cSql,
-    "s9d_orc_roundtrip" -> s9dSql,
-    "s10_partitioned_pruning" -> s10Sql,
-    "s11_schema_evolution" -> s11Sql,
-    "s12_bucketed_join" -> s12Sql,
-    "s13_compaction" -> s13Sql,
-    "s14_quarantine_read" -> s14Sql,
-    "s15_range_layout" -> s15Sql,
-    "s16_zorder_layout" -> s16Sql,
-    "s17_manifest_skipping" -> s17Sql,
-    "s18_overlap_depth" -> s18Sql,
-    "s19_dynamic_overwrite" -> s19Sql,
-    "s20_epoch_shuffle" -> s20Sql,
+  val registry: Seq[Query] = Seq(
+    Query("s20_epoch_shuffle", s20EpochShuffle, s20Sql),
+    Query("s7_parquet_roundtrip", s7ParquetRoundtrip, s7Sql),
+    Query("s7b_jdbc_roundtrip", s7bJdbcRoundtrip, s7bSql),
+    Query("s8_csv_roundtrip", s8CsvRoundtrip, s8Sql),
+    Query("s8b_chunked_csv", s8bChunkedCsv, s8bSql),
+    Query("s8c_csv_dialect", s8cCsvDialect, s8cSql),
+    Query("s9b_json_roundtrip", s9bJsonRoundtrip, s9bSql),
+    Query("s9c_ddl_apply", s9cDdlApply, s9cSql),
+    Query("s9d_orc_roundtrip", s9dOrcRoundtrip, s9dSql),
+    Query("s10_partitioned_pruning", s10PartitionedPruning, s10Sql),
+    Query("s11_schema_evolution", s11SchemaEvolution, s11Sql),
+    Query("s12_bucketed_join", s12BucketedJoin, s12Sql),
+    Query("s13_compaction", s13Compaction, s13Sql),
+    Query("s14_quarantine_read", s14QuarantineRead, s14Sql),
+    Query("s15_range_layout", s15RangeLayout, s15Sql),
+    Query("s16_zorder_layout", s16ZorderLayout, s16Sql),
+    Query("s17_manifest_skipping", s17ManifestSkipping, s17Sql),
+    Query("s18_overlap_depth", s18OverlapDepth, s18Sql),
+    Query("s19_dynamic_overwrite", s19DynamicOverwrite, s19Sql),
     // orders keys are dense 0..N-1 at every sf: 15000 rows/sf0.01 →
     // ceil(15000/2000)=8 chunks; recomputed generically below.
-    "s2_chunked_scan" -> s2SqlGeneric)
+    Query("s2_chunked_scan", s2ChunkedScan, s2SqlGeneric))
 
   /** sf-independent oracle: derive chunk count exactly as planChunks
     * does — ceil(rows/2000), capped by key span. `//` is DuckDB

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.functions.Norm
 import graft.functions.Norm.{KLong, KStr, NormCol}
 import graft.operators.Migrate.ChunkSpec
@@ -2372,27 +2372,15 @@ object Pipeline {
       .stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipe2_migration" -> pipe2Migration,
-    "pipe3_full_plus_incr" -> pipe3FullPlusIncr,
-    "pipe14_wap_publish" -> pipe14WapPublish,
-    "pipe15_incremental_wap" -> pipe15IncrementalWap,
-    "pipe16_compaction_rewrite" -> pipe16CompactionRewrite,
-    "pipe17_version_diff" -> pipe17VersionDiff,
-    "pipe18_rollback_publish" -> pipe18RollbackPublish,
-    "pipe19_streaming_admission" -> pipe19StreamingAdmission,
-    "pipe20_snapshot_expire" -> pipe20SnapshotExpire,
-    "pipe21_orphan_sweep" -> pipe21OrphanSweep)
-
-  val oracles: Map[String, String] = Map(
-    "pipe2_migration" -> pipe2Sql,
-    "pipe3_full_plus_incr" -> pipe3Sql,
-    "pipe14_wap_publish" -> pipe14Sql,
-    "pipe15_incremental_wap" -> pipe15Sql,
-    "pipe16_compaction_rewrite" -> pipe16Sql,
-    "pipe17_version_diff" -> pipe17Sql,
-    "pipe18_rollback_publish" -> pipe18Sql,
-    "pipe19_streaming_admission" -> pipe19Sql,
-    "pipe20_snapshot_expire" -> pipe20Sql,
-    "pipe21_orphan_sweep" -> pipe21Sql)
+  val registry: Seq[Query] = Seq(
+    Query("pipe2_migration", pipe2Migration, pipe2Sql),
+    Query("pipe3_full_plus_incr", pipe3FullPlusIncr, pipe3Sql),
+    Query("pipe14_wap_publish", pipe14WapPublish, pipe14Sql),
+    Query("pipe15_incremental_wap", pipe15IncrementalWap, pipe15Sql),
+    Query("pipe16_compaction_rewrite", pipe16CompactionRewrite, pipe16Sql),
+    Query("pipe17_version_diff", pipe17VersionDiff, pipe17Sql),
+    Query("pipe18_rollback_publish", pipe18RollbackPublish, pipe18Sql),
+    Query("pipe19_streaming_admission", pipe19StreamingAdmission, pipe19Sql),
+    Query("pipe20_snapshot_expire", pipe20SnapshotExpire, pipe20Sql),
+    Query("pipe21_orphan_sweep", pipe21OrphanSweep, pipe21Sql))
 }

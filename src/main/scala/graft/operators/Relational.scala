@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.functions.Norm
 import graft.functions.Norm._
 
@@ -1739,81 +1739,42 @@ object Relational {
       |    CAST(floor(c_acctbal / 1000.0) AS BIGINT)) t
       |GROUP BY 1, 4""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "a40_drift_gate" -> a40DriftGate,
-    "a41_fk_audit" -> a41FkAudit,
-    "a42_k_anonymity" -> a42KAnonymity,
-    "a44_hll_distinct" -> a44HllDistinct,
-    "a45_hist_quantiles" -> a45HistQuantiles,
-    "a49_outlier_mad" -> a49OutlierMad,
-    "q1_pricing_summary" -> q1PricingSummary,
-    "q3_shipping_priority" -> q3ShippingPriority,
-    "q5_local_supplier_volume" -> q5LocalSupplierVolume,
-    "j1_revenue_by_nation" -> j1RevenueByNation,
-    "j2_anti_join" -> j2AntiJoin,
-    "j3_semi_join" -> j3SemiJoin,
-    "a1_chunk_counts" -> a1ChunkCounts,
-    "a2_chunk_checksum" -> a2ChunkChecksum,
-    "a2c_summary_onepass" -> a2cSummaryOnePass,
-    "a3_minmax_guard" -> a3MinMaxGuard,
-    "a6_assess_overview" -> a6AssessOverview,
-    "a7_topk" -> a7TopK,
-    "a8_threshold" -> a8Threshold,
-    "a9_split_key_election" -> a9SplitKeyElection,
-    "a9b_split_key_approx" -> a9bSplitKeyApprox,
-    "a16_salted_agg" -> a16SaltedAgg,
-    "p1_export_projection" -> p1ExportProjection,
-    "p3_chunk_filter" -> p3ChunkFilter,
-    "w5_top_per_group" -> w5TopPerGroup,
-    "w6_running_frame" -> w6RunningFrame,
-    "w7_asof_join" -> w7AsofJoin,
-    "w10_cohort_retention" -> w10CohortRetention,
-    "w11_sessionize" -> w11Sessionize,
-    "a37_skew_profile" -> a37SkewProfile,
-    "a39_heavy_hitters_cms" -> a39HeavyHittersCms,
-    "j6_banded_range_join" -> j6BandedRangeJoin,
-    "j7_salted_skew_join" -> j7SaltedSkewJoin,
-    "j8_bloom_prejoin" -> j8BloomPrejoin,
-    "a33_percentile_profile" -> a33PercentileProfile,
-    "a33b_percentile_sketch" -> a33bPercentileSketch,
-    "a34_rollup_report" -> a34RollupReport)
-
-  val oracles: Map[String, String] = Map(
-    "a40_drift_gate" -> a40Sql,
-    "a41_fk_audit" -> a41Sql,
-    "a42_k_anonymity" -> a42Sql,
-    "a44_hll_distinct" -> a44Sql,
-    "a45_hist_quantiles" -> a45Sql,
-    "a49_outlier_mad" -> a49Sql,
-    "q1_pricing_summary" -> q1Sql,
-    "q3_shipping_priority" -> q3Sql,
-    "q5_local_supplier_volume" -> q5Sql,
-    "j1_revenue_by_nation" -> j1Sql,
-    "j2_anti_join" -> j2Sql,
-    "j3_semi_join" -> j3Sql,
-    "a1_chunk_counts" -> a1Sql,
-    "a2_chunk_checksum" -> a2Sql,
-    "a2c_summary_onepass" -> a2Sql,
-    "a3_minmax_guard" -> a3Sql,
-    "a6_assess_overview" -> a6Sql,
-    "a7_topk" -> a7Sql,
-    "a8_threshold" -> a8Sql,
-    "a9_split_key_election" -> a9Sql,
-    "a9b_split_key_approx" -> a9bSql,
-    "a16_salted_agg" -> a16Sql,
-    "p1_export_projection" -> p1Sql,
-    "p3_chunk_filter" -> p3Sql,
-    "w5_top_per_group" -> w5Sql,
-    "w6_running_frame" -> w6Sql,
-    "w7_asof_join" -> w7Sql,
-    "w10_cohort_retention" -> w10Sql,
-    "w11_sessionize" -> w11Sql,
-    "a37_skew_profile" -> a37Sql,
-    "a39_heavy_hitters_cms" -> a39Sql,
-    "j6_banded_range_join" -> j6Sql,
-    "j7_salted_skew_join" -> j7Sql,
-    "j8_bloom_prejoin" -> j8Sql,
-    "a33_percentile_profile" -> a33Sql,
-    "a33b_percentile_sketch" -> a33bSql,
-    "a34_rollup_report" -> a34Sql)
+  val registry: Seq[Query] = Seq(
+    Query("a40_drift_gate", a40DriftGate, a40Sql),
+    Query("a41_fk_audit", a41FkAudit, a41Sql),
+    Query("a42_k_anonymity", a42KAnonymity, a42Sql),
+    Query("a44_hll_distinct", a44HllDistinct, a44Sql),
+    Query("a45_hist_quantiles", a45HistQuantiles, a45Sql),
+    Query("a49_outlier_mad", a49OutlierMad, a49Sql),
+    Query("q1_pricing_summary", q1PricingSummary, q1Sql),
+    Query("q3_shipping_priority", q3ShippingPriority, q3Sql),
+    Query("q5_local_supplier_volume", q5LocalSupplierVolume, q5Sql),
+    Query("j1_revenue_by_nation", j1RevenueByNation, j1Sql),
+    Query("j2_anti_join", j2AntiJoin, j2Sql),
+    Query("j3_semi_join", j3SemiJoin, j3Sql),
+    Query("a1_chunk_counts", a1ChunkCounts, a1Sql),
+    Query("a2_chunk_checksum", a2ChunkChecksum, a2Sql),
+    Query("a2c_summary_onepass", a2cSummaryOnePass, a2Sql),
+    Query("a3_minmax_guard", a3MinMaxGuard, a3Sql),
+    Query("a6_assess_overview", a6AssessOverview, a6Sql),
+    Query("a7_topk", a7TopK, a7Sql),
+    Query("a8_threshold", a8Threshold, a8Sql),
+    Query("a9_split_key_election", a9SplitKeyElection, a9Sql),
+    Query("a9b_split_key_approx", a9bSplitKeyApprox, a9bSql),
+    Query("a16_salted_agg", a16SaltedAgg, a16Sql),
+    Query("p1_export_projection", p1ExportProjection, p1Sql),
+    Query("p3_chunk_filter", p3ChunkFilter, p3Sql),
+    Query("w5_top_per_group", w5TopPerGroup, w5Sql),
+    Query("w6_running_frame", w6RunningFrame, w6Sql),
+    Query("w7_asof_join", w7AsofJoin, w7Sql),
+    Query("w10_cohort_retention", w10CohortRetention, w10Sql),
+    Query("w11_sessionize", w11Sessionize, w11Sql),
+    Query("a37_skew_profile", a37SkewProfile, a37Sql),
+    Query("a39_heavy_hitters_cms", a39HeavyHittersCms, a39Sql),
+    Query("j6_banded_range_join", j6BandedRangeJoin, j6Sql),
+    Query("j7_salted_skew_join", j7SaltedSkewJoin, j7Sql),
+    Query("j8_bloom_prejoin", j8BloomPrejoin, j8Sql),
+    Query("a33_percentile_profile", a33PercentileProfile, a33Sql),
+    Query("a33b_percentile_sketch", a33bPercentileSketch, a33bSql),
+    Query("a34_rollup_report", a34RollupReport, a34Sql))
 }

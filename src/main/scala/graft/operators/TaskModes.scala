@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.functions.TableFilter
 import graft.operators.TransferdbConfig.EngineKnobs
 import graft.reverse.Ddl
@@ -821,11 +821,7 @@ object TaskModes {
        |FROM sr, tr""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipe11_config_driven" -> pipe11ConfigDriven,
-    "pipe12_compare_config" -> pipe12CompareConfig)
-
-  val oracles: Map[String, String] = Map(
-    "pipe11_config_driven" -> pipe11Sql,
-    "pipe12_compare_config" -> pipe12Sql)
+  val registry: Seq[Query] = Seq(
+    Query("pipe11_config_driven", pipe11ConfigDriven, pipe11Sql),
+    Query("pipe12_compare_config", pipe12CompareConfig, pipe12Sql))
 }

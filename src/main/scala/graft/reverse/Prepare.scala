@@ -2,6 +2,8 @@ package graft.reverse
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
+import graft.Query
+
 /** Prepare mode — the reference seeds its EDITABLE rule tables into
   * the meta DB at `prepare` time (`module/prepare/prepare.go:98`,
   * built-ins `database/meta/buildin_datatype_rule.go:26-33`, per-scope
@@ -199,11 +201,7 @@ object Prepare {
        |  ON upper(s.source_table) = upper(r.src)""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "k9_rule_seed" -> k9RuleSeed,
-    "k10_name_rules" -> k10NameRules)
-
-  val oracles: Map[String, String] = Map(
-    "k9_rule_seed" -> k9Sql,
-    "k10_name_rules" -> k10Sql)
+  val registry: Seq[Query] = Seq(
+    Query("k9_rule_seed", k9RuleSeed, k9Sql),
+    Query("k10_name_rules", k10NameRules, k10Sql))
 }

@@ -3,6 +3,8 @@ package graft.reverse
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Reverse-engine queries: type mapping, NUMBER bucket sweep, and DDL
   * synthesis — oracle-checked against an independent DuckDB CASE-tree
   * implementation of the same rules.
@@ -834,29 +836,16 @@ object Reverse {
 
   // ------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "r1_type_mapping" -> r1TypeMapping,
-    "r2_number_buckets" -> r2NumberBuckets,
-    "r3_ddl_synthesis" -> r3DdlSynthesis,
-    "r4_m2o_mapping" -> r4M2oMapping,
-    "r5_o2t_ddl" -> r5O2tDdl,
-    "r6_m2o_ddl" -> r6M2oDdl,
-    "r7_collation_map" -> r7CollationMap,
-    "r8_m2o_collation" -> r8M2oCollation,
-    "r9_t2o_grid" -> r9T2oGrid,
-    "p6_compat_filter" -> p6CompatFilter,
-    "a17_route_counts" -> a17RouteCounts)
-
-  val oracles: Map[String, String] = Map(
-    "r1_type_mapping" -> r1Sql,
-    "r2_number_buckets" -> r2Sql,
-    "r3_ddl_synthesis" -> r3Sql,
-    "r4_m2o_mapping" -> r4Sql,
-    "r5_o2t_ddl" -> r5Sql,
-    "r6_m2o_ddl" -> r6Sql,
-    "r7_collation_map" -> r7Sql,
-    "r8_m2o_collation" -> r8Sql,
-    "r9_t2o_grid" -> r9Sql,
-    "p6_compat_filter" -> p6Sql,
-    "a17_route_counts" -> a17Sql)
+  val registry: Seq[Query] = Seq(
+    Query("r1_type_mapping", r1TypeMapping, r1Sql),
+    Query("r2_number_buckets", r2NumberBuckets, r2Sql),
+    Query("r3_ddl_synthesis", r3DdlSynthesis, r3Sql),
+    Query("r4_m2o_mapping", r4M2oMapping, r4Sql),
+    Query("r5_o2t_ddl", r5O2tDdl, r5Sql),
+    Query("r6_m2o_ddl", r6M2oDdl, r6Sql),
+    Query("r7_collation_map", r7CollationMap, r7Sql),
+    Query("r8_m2o_collation", r8M2oCollation, r8Sql),
+    Query("r9_t2o_grid", r9T2oGrid, r9Sql),
+    Query("p6_compat_filter", p6CompatFilter, p6Sql),
+    Query("a17_route_counts", a17RouteCounts, a17Sql))
 }

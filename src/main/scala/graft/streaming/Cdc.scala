@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** CDC apply engine — the reference's `all` mode incremental path
   * (`module/migrate/sql/oracle/o2m/incr.go`, LogMiner source S6,
@@ -1790,44 +1790,25 @@ object Cdc {
 
   // ------------------------------------------------------------- registry
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "c5_redo_parse" -> c5RedoParse,
-    "c5b_ddl_route" -> c5bDdlRoute,
-    "c6_cdc_apply" -> c6CdcApply,
-    "c6b_jdbc_merge" -> c6bJdbcMerge,
-    "c6c_jdbc_replace" -> c6cReplaceApply,
-    "c6d_jdbc_replace_native" -> c6dReplaceNative,
-    "p5_cdc_filter" -> p5CdcFilter,
-    "c8_window_agg" -> c8WindowAgg,
-    "c9_session_window" -> c9SessionWindow,
-    "c10_interval_join" -> c10IntervalJoin,
-    "c11_streaming_interval_join" -> c11StreamingIntervalJoin,
-    "a43_streaming_drift" -> a43StreamingDrift,
-    "a46_streaming_hll" -> a46StreamingHll,
-    "a47_streaming_quantiles" -> a47StreamingQuantiles,
-    "a48_streaming_cms" -> a48StreamingCms,
-    "w12_streaming_sessionize" -> w12StreamingSessionize,
-    "w2_lag_lead" -> w2LagLead,
-    "w9_funnel" -> w9Funnel)
-
-  val oracles: Map[String, String] = Map(
-    "c5_redo_parse" -> c5Sql,
-    "c5b_ddl_route" -> c5bSql,
-    "c6_cdc_apply" -> c6Sql,
-    "c6b_jdbc_merge" -> c6bSql,
-    "c6c_jdbc_replace" -> c6cSql,
-    "c6d_jdbc_replace_native" -> c6dSql,
-    "p5_cdc_filter" -> p5Sql,
-    "c8_window_agg" -> c8Sql,
-    "c9_session_window" -> c9Sql,
-    "c10_interval_join" -> c10Sql,
-    "c11_streaming_interval_join" -> c10Sql,
-    "a43_streaming_drift" -> a43Sql,
-    "a46_streaming_hll" -> a46Sql,
-    "a47_streaming_quantiles" -> a47Sql,
-    "a48_streaming_cms" -> a48Sql,
+  val registry: Seq[Query] = Seq(
+    Query("c5_redo_parse", c5RedoParse, c5Sql),
+    Query("c5b_ddl_route", c5bDdlRoute, c5bSql),
+    Query("c6_cdc_apply", c6CdcApply, c6Sql),
+    Query("c6b_jdbc_merge", c6bJdbcMerge, c6bSql),
+    Query("c6c_jdbc_replace", c6cReplaceApply, c6cSql),
+    Query("c6d_jdbc_replace_native", c6dReplaceNative, c6dSql),
+    Query("p5_cdc_filter", p5CdcFilter, p5Sql),
+    Query("c8_window_agg", c8WindowAgg, c8Sql),
+    Query("c9_session_window", c9SessionWindow, c9Sql),
+    Query("c10_interval_join", c10IntervalJoin, c10Sql),
+    Query("c11_streaming_interval_join", c11StreamingIntervalJoin, c10Sql),
+    Query("a43_streaming_drift", a43StreamingDrift, a43Sql),
+    Query("a46_streaming_hll", a46StreamingHll, a46Sql),
+    Query("a47_streaming_quantiles", a47StreamingQuantiles, a47Sql),
+    Query("a48_streaming_cms", a48StreamingCms, a48Sql),
     // w12's oracle IS the batch sessionization's SQL (c11's pattern)
-    "w12_streaming_sessionize" -> graft.operators.Relational.w11Sql,
-    "w2_lag_lead" -> w2Sql,
-    "w9_funnel" -> w9Sql)
+    Query("w12_streaming_sessionize", w12StreamingSessionize,
+      graft.operators.Relational.w11Sql),
+    Query("w2_lag_lead", w2LagLead, w2Sql),
+    Query("w9_funnel", w9Funnel, w9Sql))
 }

@@ -18,7 +18,11 @@ object InitOrderProbe {
       case "textanalysis" =>
         require(graft.functions.TextAnalysis.t3Sql.nonEmpty)
       case "similarity" =>
-        require(graft.functions.Similarity.queries.nonEmpty)
+        require(graft.functions.Similarity.registry.nonEmpty)
+      case "sparkentry" =>
+        require(SparkEntry.registries.nonEmpty)
+      case "taskmodes" =>
+        require(graft.operators.TaskModes.registry.nonEmpty)
       case "memo" =>
         require(graft.functions.Memo.memoWarmers != null)
       case other => sys.error(s"unknown first-touch: $other")

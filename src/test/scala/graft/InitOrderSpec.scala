@@ -30,7 +30,8 @@ class InitOrderSpec extends AnyFunSuite {
     (exit, out)
   }
 
-  for (first <- Seq("dedup", "textanalysis", "similarity", "memo"))
+  for (first <- Seq("dedup", "textanalysis", "similarity", "memo",
+      "sparkentry", "taskmodes"))
     test(s"class-init starting from $first leaves every oracle intact") {
       val (exit, out) = probe(first)
       assert(exit == 0, s"probe($first) failed:\n${out.takeRight(2000)}")

@@ -96,6 +96,27 @@ class MigrateSpec extends AnyFunSuite with SparkSessionTestWrapper {
     })
   }
 
+  test("scratchParent: an explicit scratch dir must be a writable " +
+      "directory; without one, /dev/shm then java.io.tmpdir") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft_scratch_spec")
+    val file = Files.createTempFile("graft_scratch_spec", ".txt")
+    try {
+      assert(Migrate.scratchParent(Some(dir.toString)) == dir)
+      for (bad <- Seq(file.toString, s"$dir/missing")) {
+        val e = intercept[IllegalArgumentException](
+          Migrate.scratchParent(Some(bad)))
+        assert(e.getMessage.contains(s"SPARK_GRAFT_STREAM_SCRATCH=$bad"),
+          e.getMessage)
+      }
+      val shm = Paths.get("/dev/shm")
+      val fallback =
+        if (Files.isDirectory(shm) && Files.isWritable(shm)) shm
+        else Paths.get(System.getProperty("java.io.tmpdir"))
+      assert(Migrate.scratchParent(None) == fallback)
+    } finally { Files.delete(file); Files.delete(dir) }
+  }
+
   test("csv roundtrip preserves hostile values exactly") {
     val back = Migrate.s8CsvRoundtrip(spark, sf).cache()
     // quote/backslash payloads survive

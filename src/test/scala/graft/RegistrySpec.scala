@@ -2,40 +2,23 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Driver-contract invariants for the query/oracle registries. These
-  * are the silent-shrinkage guards: `Map ++` keeps the LAST binding on
-  * a name collision, so two modules registering the same query name
-  * would quietly drop one implementation from the verified surface,
-  * and a query without an oracle would silently downgrade to the
-  * driver's weaker rows-only check.
+/** Driver-contract invariants for the query registry. The name check
+  * is the silent-shrinkage guard: the derived maps keep the LAST
+  * binding on a name collision, so two modules registering the same
+  * query name would quietly drop one implementation from the verified
+  * surface. (A query without an oracle does not compile: [[Query]]
+  * takes both.)
   */
 class RegistrySpec extends AnyFunSuite {
 
   test("no two modules register the same query name") {
-    val all = SparkEntry.queryRegistries.flatMap { case (mod, m) =>
-      m.keys.map(_ -> mod)
+    val all = SparkEntry.registries.flatMap { case (mod, qs) =>
+      qs.map(_.name -> mod)
     }
     val dupes = all.groupBy(_._1).filter(_._2.size > 1)
       .map { case (k, ms) => s"$k <- ${ms.map(_._2).mkString(",")}" }
     assert(dupes.isEmpty, dupes.mkString("; "))
     assert(SparkEntry.queries.size == all.size)
-  }
-
-  test("no two modules register the same oracle name") {
-    val all = SparkEntry.oracleRegistries.flatMap { case (mod, m) =>
-      m.keys.map(_ -> mod)
-    }
-    val dupes = all.groupBy(_._1).filter(_._2.size > 1)
-      .map { case (k, ms) => s"$k <- ${ms.map(_._2).mkString(",")}" }
-    assert(dupes.isEmpty, dupes.mkString("; "))
-    assert(SparkEntry.oracleSql.size == all.size)
-  }
-
-  test("every query has an oracle and every oracle has a query") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((q diff o).isEmpty, s"queries without oracle: ${q diff o}")
-    assert((o diff q).isEmpty, s"oracles without query: ${o diff q}")
   }
 
   test("bench warmup names are live registry entries") {
@@ -79,14 +62,5 @@ class RegistrySpec extends AnyFunSuite {
     assert(names == expected,
       s"warmup registry drift: missing=${expected.diff(names)} " +
         s"unpinned=${names.diff(expected)}")
-  }
-
-  test("within each module, queries and oracles pair up") {
-    SparkEntry.queryRegistries.zip(SparkEntry.oracleRegistries).foreach {
-      case ((qMod, qs), (oMod, os)) =>
-        assert(qMod == oMod)
-        assert(qs.keySet == os.keySet,
-          s"$qMod: ${qs.keySet diff os.keySet} / ${os.keySet diff qs.keySet}")
-    }
   }
 }

@@ -8,11 +8,10 @@ import graft.operators.Relational
 class RelationalSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   test("every registered query runs and the registry is consistent") {
-    assert(Relational.oracles.keySet.subsetOf(Relational.queries.keySet))
-    Relational.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
-      assert(df.columns.nonEmpty, s"$name has no columns")
-      assert(df.count() >= 0, s"$name failed to execute")
+    Relational.registry.foreach { q =>
+      val df = q.build(spark, sf)
+      assert(df.columns.nonEmpty, s"${q.name} has no columns")
+      assert(df.count() >= 0, s"${q.name} failed to execute")
     }
   }
 

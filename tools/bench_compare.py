@@ -55,9 +55,17 @@ FAST_STALE = {"ann15_nn_join"}
 # optimized timings, and a stale exclusion would permanently shrink
 # the median sample (r16 advice).
 OPTIMIZED_R16 = {
+    # round 16
     "c3_narrowed_diff", "d17_band_planner", "a2b_chunk_compare",
     "j4_symmetric_diff", "pipe12_compare_config", "c7_sampled_compare",
-    "c2_fix_actions", "t24_dsir_select"}
+    "c2_fix_actions", "t24_dsir_select",
+    # round 17: the streaming arms' RAM-backed scratch and narrower
+    # state-store width, and pipe2's parquet spool
+    "c11_streaming_interval_join", "w12_streaming_sessionize",
+    "a43_streaming_drift", "a46_streaming_hll", "a47_streaming_quantiles",
+    "a48_streaming_cms", "d15_streaming_near_dup",
+    "d16_streaming_exact_dedup", "t25_streaming_dsir_model",
+    "pipe19_streaming_admission", "pipe2_migration"}
 NON_QUERY_KEYS = {"metric", "value", "sf", "unit", "n", "rc", "cpus",
                   "n_queries"}
 
