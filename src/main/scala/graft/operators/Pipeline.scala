@@ -524,15 +524,16 @@ object Pipeline {
     * discipline between "the curation job finished" and "training
     * reads the new snapshot": the candidate is STAGED to its own path,
     * audited from the staged FILES (what was actually written, not
-    * what the job meant to write), and only a full-pass audit appends
-    * the manifest row that makes it the published version — readers
+    * what the job meant to write), and only a full-pass audit commits
+    * the log entry that makes it the published version — readers
     * resolve the manifest pointer (s17's mechanism) and never see a
     * failed candidate. Published baseline = the prior snapshot (80%
     * of docs, doc_id % 5 ≠ 4); candidate = the full corpus. The
     * report is the audit plus the resulting published version, so the
     * hash gate pins gate arithmetic AND the promote/hold decision.
     * The only driver-side step is collecting the 4-row audit — the
-    * same bounded planning collect every table format performs.
+    * same bounded planning collect every table format performs. Both
+    * publishes are entries of the root's version log ([[commit]]).
     */
   def pipe14WapPublish(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -540,19 +541,19 @@ object Pipeline {
     val docs = Tables.load(s, d, "documents")
     docs.filter(col("doc_id") % 5 =!= 4)
       .write.mode(SaveMode.Overwrite).parquet(s"$root/data/v1")
-    Seq((1L, s"$root/data/v1")).toDF("version", "path")
-      .write.mode(SaveMode.Append).parquet(s"$root/manifest")
+    val v1 = publish(s, root, WapLog(Nil),
+      Publish(1L, Seq(s"$root/data/v1"), None), "pipe14")
     docs.write.mode(SaveMode.Overwrite).parquet(s"$root/stage/v2") // stage
     val audit = wapAudit(
       s.read.parquet(s"$root/data/v1"),
       s.read.parquet(s"$root/stage/v2"))
     val rows = audit.collect()
     val allPass = rows.nonEmpty && rows.forall(_.getAs[Boolean]("pass"))
-    if (allPass) // publish = ONE manifest append; data files move never
-      Seq((2L, s"$root/stage/v2")).toDF("version", "path")
-        .write.mode(SaveMode.Append).parquet(s"$root/manifest")
-    val version = s.read.parquet(s"$root/manifest")
-      .agg(max(col("version"))).head.getLong(0)
+    val version = // publish = ONE log entry; data files move never
+      if (allPass)
+        publish(s, root, v1, Publish(2L, Seq(s"$root/stage/v2"), None),
+          "pipe14").tip
+      else v1.tip
     // return the rows already collected for the gate decision — a
     // lazy `audit` here would re-run both corpus scans (incl. the
     // countDistinct) when the caller evaluates the frame
@@ -624,69 +625,236 @@ object Pipeline {
        |  CASE WHEN (SELECT bool_and(pass) FROM g2) THEN 2 ELSE 1 END,
        |  (SELECT bool_and(pass) FROM g2)""".stripMargin
 
-  /** pipe15: INCREMENTAL write-audit-publish — the loop a production
-    * corpus actually lives in once pipe14 has published its first
-    * snapshot: a new shard arrives, is deduplicated AGAINST THE
-    * PUBLISHED SNAPSHOT (d8's shard-vs-index shape: one fingerprint
-    * anti-join, never a corpus re-mine) and within itself (first doc
-    * per fingerprint), the surviving docs are staged METADATA-ONLY —
-    * only the admitted shard rows are written; the staged snapshot is
-    * the manifest-level pair (published v1 files, admitted files), so
-    * the published corpus is never rewritten (pipe14's "data files
-    * move never" principle, applied to staging too — at 100 TB the
-    * old design's published ∪ admitted stage write was a corpus
-    * rewrite per arriving shard). The staged candidate is audited
-    * against the published baseline with the SAME gate arithmetic as
-    * pipe14 ([[wapGates]], fed by publish-time stats composed with
-    * shard-side aggregates — the published corpus is never
-    * rescanned), and only a full pass appends the manifest rows that
-    * make (v1 files + admitted files) the published v2. The report carries the audit,
-    * the admission accounting (admitted vs rejected-duplicate counts
-    * — the rows a data-curation runbook asks for first), and the
-    * resulting published version, so the hash gate pins dedup, gates,
-    * and the promote decision together. Null/empty-text shard rows
-    * carry no fingerprint and are NOT duplicates of anything — they
-    * bypass the dedup path and flow to staging whole, so the
-    * null_text gate judges the full poisoned shard instead of
-    * rejected_dup silently absorbing it. At 100 TB: the fingerprint
-    * index and audit stats are persisted alongside the snapshot at
-    * publish time (d8/d19's at-rest discipline); admission costs one
-    * index-vs-shard anti-join, one shard-sized write, and bounded
-    * stat composition — the published bytes are neither rewritten
-    * nor read. The loop CLOSES the same way ([[admitShard]] with
-    * `closeLoop = true`): a passing publish appends the admitted
-    * fingerprints to the index as a delta shard (d19's incremental
-    * band-index pattern), the admitted aggregates to the stats
-    * (additive — every delta's fingerprints are new), and re-stamped
-    * paths to the manifest, so the NEXT shard admits against the new
-    * version with the same metadata-only cost; the spec drives two
-    * consecutive increments through it.
-    */
-  /** The publish-v1 half, split on a caller-owned root so the spec
-    * can snapshot the published files between phases and assert
-    * staging never touches them (the s19 file-contract pattern).
-    * Publishing persists, NEXT TO the snapshot (d8/d19's at-rest
-    * discipline, one extra pass amortized into the publish that
-    * already wrote the corpus): the fingerprint INDEX (one distinct
-    * fp per non-empty payload — what admission anti-joins against)
-    * and the audit STATS (one totals row + one row per language —
-    * what the incremental audit's published side reads instead of
-    * rescanning the corpus).
-    */
   private val wapFp: Column =
     md5(lower(regexp_replace(col("text"), "\\s+", " ")))
   private val wapHasText: Column =
     col("text").isNotNull && length(col("text")) > 0
 
-  /** Every at-rest relation is APPEND-ONLY so the loop closes
-    * metadata-only: `index/fp` accumulates one fingerprint DELTA per
-    * publish (v1's distinct set, then each admission's new fps —
-    * d19's incremental band-index pattern), `stats/totals` and
-    * `stats/lang` accumulate one increment's aggregates per publish
-    * (the published side of any later audit is their SUM — additive
-    * because every delta's fingerprints are new by the anti-join and
-    * counts just add), and the manifest re-stamps the prior
-    * version's paths plus the new one.
+  /** One entry of a WAP root's version log (`$root/manifest`, one
+    * immutable file per log sequence number — Delta Lake's log
+    * protocol, Armbrust et al., VLDB 2020). The log IS the manifest:
+    * every publish, and every change to which versions are expired,
+    * is one entry, and nothing is ever rewritten in place.
+    */
+  private[graft] sealed trait LogEntry
+
+  /** Publish manifest `version` as the file set `paths`. `delta` is
+    * the writer-unique dir holding this version's at-rest deltas
+    * (`fp`: the new fingerprints, `totals`: one (n, nnull, nfp) row,
+    * `lang`: (lang, c) counts), written BEFORE the entry commits so a
+    * version's deltas never trail it. Versions that add no
+    * fingerprints (compaction, rollback, a replay-only admission)
+    * carry none.
+    */
+  private[graft] final case class Publish(version: Long,
+      paths: Seq[String], delta: Option[String]) extends LogEntry
+
+  /** Tombstone `expired` (the full, monotone set) under retention
+    * `keepLast`. Takes a log sequence number but no manifest version.
+    */
+  private[graft] final case class Expire(expired: Set[Long],
+      keepLast: Int) extends LogEntry
+
+  /** A driver-side snapshot of the log: entry i has sequence number
+    * i + 1, so `head` is the sequence number of the last entry. Every
+    * WAP reader goes through this view; [[manifest]] renders its
+    * (version, path) rows as a relation.
+    */
+  private[graft] final case class WapLog(entries: Seq[LogEntry]) {
+    def head: Long = entries.size.toLong
+    val publishes: Seq[Publish] = entries.collect { case p: Publish => p }
+    def tip: Long = publishes.lastOption.fold(0L)(_.version)
+    def versions: Seq[Long] = publishes.map(_.version)
+    def rows: Seq[(Long, String)] =
+      publishes.flatMap(p => p.paths.map(p.version -> _))
+    def paths(v: Long): Seq[String] =
+      publishes.find(_.version == v).fold(Seq.empty[String])(
+        _.paths.distinct.sorted)
+    def expired: Set[Long] =
+      entries.collect { case e: Expire => e.expired }.flatten.toSet
+    def keepLast: Option[Int] =
+      entries.collect { case e: Expire => e.keepLast }.lastOption
+    /** Delta dirs of every version up to `v` — what a pinned read of
+      * the at-rest index/stats composes over.
+      */
+    def deltas(v: Long): Seq[String] =
+      publishes.filter(_.version <= v).flatMap(_.delta)
+  }
+
+  /** Entries are tab-separated `key value` lines: the first line is
+    * `publish <version>` or `expire <keepLast>`, then one `path`,
+    * `delta` or `expired` line per value.
+    */
+  private def encodeEntry(e: LogEntry): String = (e match {
+    case Publish(v, ps, d) =>
+      s"publish\t$v" +: (ps.map("path\t" + _) ++ d.map("delta\t" + _))
+    case Expire(vs, k) =>
+      s"expire\t$k" +: vs.toSeq.sorted.map("expired\t" + _)
+  }).mkString("", "\n", "\n")
+
+  private def decodeEntry(name: String, text: String): LogEntry = {
+    val kv = text.split('\n').toSeq.filter(_.nonEmpty).map { l =>
+      val i = l.indexOf('\t')
+      (l.take(i), l.drop(i + 1))
+    }
+    def all(k: String) = kv.collect { case (`k`, v) => v }
+    kv.headOption match {
+      case Some(("publish", v)) =>
+        Publish(v.toLong, all("path"), all("delta").headOption)
+      case Some(("expire", k)) =>
+        Expire(all("expired").map(_.toLong).toSet, k.toInt)
+      case other => throw new IllegalStateException(
+        s"unreadable WAP log entry $name: $other")
+    }
+  }
+
+  private def logDir(s: SparkSession, root: String) = {
+    val dir = new org.apache.hadoop.fs.Path(s"$root/manifest")
+    (dir, dir.getFileSystem(s.sparkContext.hadoopConfiguration))
+  }
+
+  private def nonce(): String =
+    java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+
+  /** Read the root's whole log (empty when nothing was published).
+    * Only all-digit names are entries; a writer's temp file never is.
+    */
+  private[graft] def readLog(s: SparkSession, root: String): WapLog = {
+    val (dir, fs) = logDir(s, root)
+    val named =
+      try fs.listStatus(dir).toSeq.map(_.getPath)
+        .filter(p => p.getName.nonEmpty && p.getName.forall(_.isDigit))
+        .sortBy(_.getName.toLong)
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    // entries are created put-if-absent at head + 1 only, so the
+    // numbers are 1..n by construction; a gap is a damaged log
+    require(named.map(_.getName.toLong) == (1L to named.size.toLong),
+      s"$root: the WAP log has a gap: ${named.map(_.getName)}")
+    WapLog(named.map { p =>
+      val in = fs.open(p)
+      try decodeEntry(p.getName, new String(in.readAllBytes(), "UTF-8"))
+      finally in.close()
+    })
+  }
+
+  /** The manifest view as a (version, path) relation — one log read,
+    * no Spark job.
+    */
+  private[graft] def manifest(s: SparkSession, root: String): DataFrame = {
+    import s.implicits._
+    readLog(s, root).rows.toDF("version", "path")
+  }
+
+  /** Write `e` as log entry `seq` if that entry does not exist yet —
+    * the one atomic step of every commit. The entry is written in full
+    * to a temp file first, so a reader never sees a partial entry.
+    * A local root publishes it with `Files.createLink`, which fails
+    * with EEXIST when the name exists. Any other scheme renames it on
+    * the root's own FileSystem, whose rename does not overwrite an
+    * existing file on HDFS (an object store swaps this one seam for
+    * the catalog's compare-and-swap). The temp file is removed either
+    * way; a writer that crashes before that leaves a dot-named file
+    * that no reader parses and [[removeOrphans]] sweeps past grace.
+    */
+  private def tryPublish(s: SparkSession, root: String, seq: Long,
+      e: LogEntry): Boolean = {
+    val (dir, fs) = logDir(s, root)
+    val name = f"$seq%020d"
+    val tmp = new org.apache.hadoop.fs.Path(dir, s".$name.${nonce()}.tmp")
+    val target = new org.apache.hadoop.fs.Path(dir, name)
+    val bytes = encodeEntry(e).getBytes("UTF-8")
+    if (fs.getScheme == "file") {
+      def local(p: org.apache.hadoop.fs.Path) =
+        java.nio.file.Paths.get(fs.makeQualified(p).toUri.getPath)
+      java.nio.file.Files.createDirectories(local(dir))
+      java.nio.file.Files.write(local(tmp), bytes,
+        java.nio.file.StandardOpenOption.CREATE_NEW)
+      try { java.nio.file.Files.createLink(local(target), local(tmp)); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      finally java.nio.file.Files.delete(local(tmp))
+    } else {
+      fs.mkdirs(dir)
+      val out = fs.create(tmp, false)
+      try out.write(bytes) finally out.close()
+      val won =
+        try fs.rename(tmp, target)
+        catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
+      if (!won) {
+        fs.delete(tmp, false)
+        if (!fs.exists(target)) throw new java.io.IOException(
+          s"could not publish WAP log entry $target")
+      }
+      won
+    }
+  }
+
+  /** The WAP commit: append one entry after `base`, the log snapshot
+    * the writer staged against. Writers are optimistic — staging
+    * (landing writes, compaction rewrites, audits, at-rest deltas)
+    * runs with no coordination, and the commit is one put-if-absent of
+    * entry `base.head + 1` ([[tryPublish]]). A writer that loses
+    * re-reads the entries after its base: if any published a version,
+    * it fails with a commit conflict, its staged files unreferenced
+    * (Iceberg's commit-conflict semantics); if they only expired
+    * versions, it retries at the new head. `entryAt` builds the entry
+    * against the log it will follow and is re-run on each retry, so
+    * checks that depend on expiry (a rollback's target, a vacuum's
+    * retention) see every entry before the one they commit. `None`
+    * commits nothing. Returns the log including the committed entry.
+    */
+  private def commit(s: SparkSession, root: String, base: WapLog,
+      who: String)(entryAt: WapLog => Option[LogEntry]): WapLog = {
+    def conflict(from: Long, to: Long) = new IllegalArgumentException(
+      s"$who: commit conflict — the manifest tip moved from $from to " +
+        s"$to while this writer staged (another writer published); " +
+        "re-stage against the new tip")
+    var at = base
+    var out: Option[WapLog] = None
+    while (out.isEmpty) entryAt(at) match {
+      case None => out = Some(at)
+      case Some(e) =>
+        e match {
+          case p: Publish if p.version != at.tip + 1 =>
+            throw conflict(p.version - 1, at.tip)
+          case _ =>
+        }
+        if (tryPublish(s, root, at.head + 1, e))
+          out = Some(WapLog(at.entries :+ e))
+        else {
+          val now = readLog(s, root)
+          if (now.entries.drop(at.entries.size)
+              .exists(_.isInstanceOf[Publish]))
+            throw conflict(at.tip, now.tip)
+          at = now
+        }
+    }
+    out.get
+  }
+
+  /** Commit one publish entry after `base` (see [[commit]]). */
+  private[graft] def publish(s: SparkSession, root: String, base: WapLog,
+      p: Publish, who: String): WapLog =
+    commit(s, root, base, who)(_ => Some(p))
+
+  private val AtRestSchema = Map(
+    "fp" -> "fp STRING",
+    "totals" -> "n BIGINT, nnull BIGINT, nfp BIGINT",
+    "lang" -> "lang STRING, c BIGINT")
+
+  /** At-rest relation `rel` (`fp`, `totals` or `lang`) as of version
+    * `v`: the union of every delta published up to `v`. Additive —
+    * every delta's fingerprints are new by the admission anti-join,
+    * and counts just add.
+    */
+  private[graft] def atRest(s: SparkSession, log: WapLog, v: Long,
+      rel: String): DataFrame =
+    s.read.schema(AtRestSchema(rel))
+      .parquet(log.deltas(v).map(d => s"$d/$rel"): _*)
+
+  /** The publish-v1 half of pipe15, split on a caller-owned root so
+    * the spec can snapshot the published files between phases and
+    * assert staging never touches them (the s19 file-contract
+    * pattern).
     */
   private[graft] def pipe15PublishV1(s: SparkSession, d: String,
       root: String): Unit =
@@ -708,331 +876,55 @@ object Pipeline {
     publishV1Meta(s, s"$root/data/v1", root)
   }
 
-  /** Publish v1 as a manifest REFERENCE to an already-landed path —
-    * the index/stats/manifest writes without the data copy. The
-    * manifest-pointer model means even the first publish is
-    * metadata-only when the corpus already sits in a read-only
-    * landing dir (pipe19's case); [[publishBaseV1]] is this plus the
-    * landing write.
+  /** Fail-fast double-publish guard: a root is published at most
+    * once; increments go through [[admitShard]]. The authoritative
+    * check is the first publish's commit, which only succeeds on an
+    * empty log.
     */
-  /** Fail-fast double-publish guard: every at-rest relation in the
-    * v1 publish is APPEND-mode, so a second publish on the same root
-    * would not error — it would silently DOUBLE every stat and
-    * fingerprint delta and poison all subsequent composed audits. A
-    * root is published at most once; increments go through
-    * [[admitShard]].
-    */
-  private def requireUnpublished(s: SparkSession, root: String): Unit = {
-    val mPath = new org.apache.hadoop.fs.Path(s"$root/manifest")
+  private def requireUnpublished(s: SparkSession, root: String): Unit =
     // no caller name in the message: this guard fires on BOTH publish
-    // paths (publishBaseV1 and pipe19's publishV1Meta) — a hardcoded
-    // "pipe15PublishV1:" prefix misdiagnosed a streaming-admission
-    // double publish as a pipe15 one
-    require(!mPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .exists(mPath),
+    // paths (publishBaseV1 and pipe19's publishV1Meta)
+    require(readLog(s, root).tip == 0L,
       s"publish v1: $root already holds a manifest — publishing " +
-        "v1 twice would double-count the append-only index and stats; " +
+        "v1 twice would double-count the at-rest index and stats; " +
         "admit increments via admitShard instead")
-  }
 
+  /** Publish v1 as a manifest REFERENCE to an already-landed path,
+    * plus its at-rest deltas: the fingerprint INDEX (one distinct fp
+    * per non-empty payload — what admission anti-joins against) and
+    * the audit STATS (one totals row + one row per language — what
+    * the incremental audit's published side reads instead of
+    * rescanning the corpus). The manifest-pointer model means even
+    * the first publish is metadata-only when the corpus already sits
+    * in a read-only landing dir (pipe19's case); [[publishBaseV1]] is
+    * this plus the landing write. Two racing first publishes both
+    * write their own delta dir; the commit admits one, and the loser
+    * deletes its dir and fails with a commit conflict.
+    */
   private[graft] def publishV1Meta(s: SparkSession, basePath: String,
-      root: String): Unit = {
+      root: String, beforeCommit: () => Unit = () => ()): Unit = {
     requireUnpublished(s, root) // cheap fast-fail before any job runs
     val published = s.read.parquet(basePath)
-    // The v1 index/stats land INSIDE the locked commit, AFTER the
-    // no-manifest validation: a racing first publish's loser blocks
-    // on the lock, fails the validation, and never touches the
-    // winner's at-rest meta (unlocked, the loser's Overwrite could
-    // clobber the winner's index/stats after the winner committed —
-    // manifest from one writer, meta from the other). This is the
-    // one commit that holds the lock for data-sized work: once per
-    // root, and the alternative (stage + publish-by-reference) would
-    // tax every index/stats reader for a once-per-root event.
-    //
-    // v1 deltas are written OVERWRITE (the rest of the loop appends):
-    // a publish that died between a stats write and the manifest
-    // append released the lock with NO manifest — the retry passes
-    // the validation again and Overwrite makes it idempotent instead
-    // of double-appending the v1 deltas.
-    commitManifest(s, root, Seq((1L, basePath)), expectedTip = None,
-      who = "publishV1Meta", underLock = () => {
-        published.filter(wapHasText).select(wapFp.as("fp"))
-          .distinct().withColumn("version", lit(1L))
-          .write.mode(SaveMode.Overwrite).parquet(s"$root/index/fp")
-        // coalesce the empty-corpus aggregates: sum over zero rows is
-        // NULL, and a NULL stat would silently poison every composed
-        // gate downstream instead of holding on rows_ratio's
-        // 0-denominator
-        published.agg(count(lit(1)).as("n"),
-            coalesce(sum(when(!wapHasText, 1L).otherwise(0L)), lit(0L))
-              .as("nnull"),
-            countDistinct(when(wapHasText, wapFp)).as("nfp"))
-          .withColumn("version", lit(1L))
-          .write.mode(SaveMode.Overwrite).parquet(s"$root/stats/totals")
-        published.groupBy("lang").agg(count(lit(1)).as("c"))
-          .withColumn("version", lit(1L))
-          .write.mode(SaveMode.Overwrite).parquet(s"$root/stats/lang")
-      })
-  }
-
-  /** Serialized, validated manifest append — the WAP loop's COMMIT
-    * point. Writers are optimistic: all staging work (landing
-    * writes, compaction rewrites, audit passes) runs against the tip
-    * each writer observed with no coordination; the commit
-    * re-validates UNDER A LOCK that the tip has not moved since, so
-    * of two writers racing to publish the same next version exactly
-    * one appends and the loser gets a commit-conflict error with its
-    * staged files unreferenced by the manifest (Iceberg's
-    * commit-conflict semantics re-expressed on a file manifest — the
-    * production failure mode a compaction racing a streaming
-    * admission hits). The lock is an atomic exclusive file create,
-    * DERIVED FROM THE SAME FILESYSTEM AS THE MANIFEST: a schemeless
-    * or file:// root uses java.nio O_EXCL (truly atomic on POSIX);
-    * any other scheme goes through the Hadoop
-    * `FileSystem.create(path, overwrite = false)` so an hdfs:// root
-    * keeps real mutual exclusion instead of silently creating a
-    * driver-local lock file (an object-store deployment swaps this
-    * one seam for the catalog's compare-and-swap). A holder that
-    * crashed between create and its finally leaves a lock whose
-    * mtime stops advancing — waiters BREAK a lock older than
-    * [[LockStaleMs]] instead of timing out forever on a dead root.
-    * The lock is held only for the bounded validate + append (plus
-    * `underLock`, the first publish's once-per-root meta writes),
-    * never for staging work.
-    */
-  /** `expectedTip = None` is the FIRST publish: the commit validates
-    * that no manifest exists yet (closing the check-then-act window
-    * in [[requireUnpublished]] — two racing v1 publishes would both
-    * pass the unlocked guard, and the append-only relations would
-    * silently double).
-    */
-  /** A commit lock whose mtime is older than this is a crashed
-    * holder — waiters break it. A LIVE holder's lock never goes
-    * stale regardless of how long its commit runs (the first
-    * publish's meta writes are data-sized): a daemon heartbeat
-    * refreshes the lock mtime every [[LockHeartbeatMs]] while held,
-    * so mtime silence past this threshold really does mean the
-    * holder's JVM is gone.
-    */
-  private[graft] val LockStaleMs: Long = 10L * 60 * 1000
-  private[graft] val LockHeartbeatMs: Long = 30L * 1000
-
-  /** How long an acquirer waits before giving up. Sized WELL past
-    * [[LockStaleMs]], never in seconds: a LIVE holder may
-    * legitimately hold for a data-sized `underLock` write (the first
-    * publish's index/stats), and a short deadline would fail every
-    * conflict-FREE commit that merely arrived during one — admitShard
-    * would then delete its fully-staged shard over a non-conflict. A
-    * CRASHED holder is broken at LockStaleMs, so 2× bounds the wait
-    * through one dead holder plus one full live hold.
-    */
-  private[graft] val LockWaitMs: Long = 2 * LockStaleMs
-
-  private lazy val lockLog =
-    org.slf4j.LoggerFactory.getLogger("graft.operators.Pipeline")
-
-  /** Run `body` holding the root's commit lock — the mutual
-    * exclusion shared by every manifest COMMIT ([[commitManifest]])
-    * and by [[expireVersions]]'s decide+tombstone critical section
-    * (a vacuum that ran unserialized could expire a version a parked
-    * rollback was about to re-stamp; under the shared lock the
-    * rollback's own locked re-check sees the tombstone).
-    *
-    * The local-vs-remote branch keys on the RESOLVED FileSystem, not
-    * on the raw URI scheme: a SCHEMELESS root follows
-    * `fs.defaultFS` for every Spark/Hadoop read and write, so on a
-    * cluster with `defaultFS=hdfs://` the manifest lives on HDFS —
-    * a driver-local java.nio lock there would be no mutual exclusion
-    * between drivers at all, and its heartbeat/release would no-op
-    * against the real path.
-    */
-  private[graft] def withCommitLock[T](s: SparkSession, root: String,
-      who: String)(body: => T): T = {
-    val lockHPath =
-      new org.apache.hadoop.fs.Path(s"$root/manifest.commit.lock")
-    val fs = lockHPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val isLocalFs =
-      fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-        fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
-    // the holder's identity, written INTO the lock file: release
-    // deletes the lock only if it still carries this token, so a
-    // holder that was (correctly or incorrectly) stale-broken can
-    // never blind-delete its SUCCESSOR's fresh lock on the way out —
-    // the residual two-holder re-opening a review found in the
-    // heartbeat-refresh-unsupported scenario. The atomic operation
-    // is still the CREATE; the token lands before the acquirer
-    // proceeds, and a breaker that reads a mid-write empty token
-    // only ever errs toward NOT deleting.
-    val ownerToken = java.util.UUID.randomUUID().toString
-    def tryCreate(p: org.apache.hadoop.fs.Path): Boolean =
-      if (isLocalFs)
-        // local root: java.nio O_EXCL — atomic where Hadoop's local
-        // create(overwrite=false) is only check-then-act
-        try {
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(
-              fs.makeQualified(p).toUri.getPath),
-            ownerToken.getBytes("UTF-8"),
-            java.nio.file.StandardOpenOption.CREATE_NEW,
-            java.nio.file.StandardOpenOption.WRITE)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-        }
-      else
-        // remote root: the manifest's own FileSystem — atomic on
-        // HDFS; the documented CAS seam on an object store
-        try {
-          val out = fs.create(p, false)
-          try out.write(ownerToken.getBytes("UTF-8"))
-          finally out.close()
-          true
-        }
-        catch { case _: java.io.IOException => false }
-    def tryAcquire(): Boolean = tryCreate(lockHPath)
-    def lockOwner(p: org.apache.hadoop.fs.Path): String =
-      try {
-        val in = fs.open(p)
-        try {
-          val buf = new Array[Byte](64)
-          val n = in.read(buf)
-          new String(buf, 0, math.max(n, 0), "UTF-8")
-        } finally in.close()
-      } catch { case _: java.io.IOException => "" }
-    // Breaking a stale lock is serialized through a BREAKER MUTEX
-    // (manifest.commit.lock.breaking, same atomic CREATE_NEW as the
-    // lock itself), then RENAME-then-delete — never a blind delete.
-    // History: the blind delete let waiter B break + re-acquire
-    // inside waiter A's check-to-delete window (A then deleted B's
-    // FRESH lock — two holders); the r16 rename-then-mtime-recheck
-    // closed THAT, but the 4-waiter race spec caught its residue
-    // under load: breaker C, acting on a stale status observation,
-    // renames away the FRESH lock a successor B just created, and
-    // while C is renaming it back waiter D acquires the briefly-free
-    // path — B and D hold together. Serialized breaking closes the
-    // window structurally: the stale re-check happens INSIDE the
-    // mutex, where no other breaker can delete/rename the lock file,
-    // and an acquirer can only CREATE when the path is absent — so a
-    // lock that re-reads stale under the mutex is necessarily the
-    // dead incarnation, and the rename claims exactly it. No
-    // rename-back branch remains to open the window. A CRASHED
-    // breaker's mutex file is itself reaped past LockStaleMs (a
-    // break is a millisecond metadata op, so 10 minutes of silence
-    // means a dead JVM); a liveness error there only DELAYS breaking
-    // — it can never admit a second holder. Release-by-owner (below)
-    // still bounds the one theft this cannot close: a live holder
-    // whose heartbeat thread died reads stale and is legitimately
-    // broken.
-    val breakerPath = new org.apache.hadoop.fs.Path(
-      s"$root/manifest.commit.lock.breaking")
-    def breakIfStale(): Unit =
-      try {
-        val st = fs.getFileStatus(lockHPath)
-        if (System.currentTimeMillis() - st.getModificationTime >
-            LockStaleMs) {
-          if (tryCreate(breakerPath))
-            try {
-              val st2 = fs.getFileStatus(lockHPath)
-              if (System.currentTimeMillis() - st2.getModificationTime >
-                  LockStaleMs) {
-                val broken = new org.apache.hadoop.fs.Path(
-                  s"$root/manifest.commit.lock.broken." + java.util.UUID
-                    .randomUUID().toString.replace("-", "").take(12))
-                if (fs.rename(lockHPath, broken)) {
-                  fs.delete(broken, false); ()
-                }
-              }
-            } finally { fs.delete(breakerPath, false); () }
-          else
-            try {
-              val bst = fs.getFileStatus(breakerPath)
-              if (System.currentTimeMillis() - bst.getModificationTime >
-                  LockStaleMs) { fs.delete(breakerPath, false); () }
-            } catch { case _: java.io.FileNotFoundException => () }
-        }
-      } catch { case _: java.io.FileNotFoundException => () }
-    val deadline = System.nanoTime() + LockWaitMs * 1000000L
-    var held = false
-    while (!held)
-      if (tryAcquire()) held = true
-      else {
-        breakIfStale()
-        require(System.nanoTime() < deadline,
-          s"$who: timed out waiting for the manifest commit lock")
-        Thread.sleep(10)
-      }
-    // heartbeat: keep the held lock's mtime fresh so a slow-but-live
-    // commit (the first publish's meta writes) is never broken as
-    // stale by a waiter; exits on interrupt. A NonFatal refresh
-    // failure must NOT kill the daemon (an fs whose setTimes is
-    // unsupported — common in object-store connectors — would
-    // otherwise silently downgrade the stale-break safety story to
-    // "any hold past LockStaleMs gets broken"): warn once, keep
-    // trying.
-    val heartbeat = new Thread(() => {
-      var warned = false
-      try while (true) {
-        Thread.sleep(LockHeartbeatMs)
-        try fs.setTimes(lockHPath, System.currentTimeMillis(), -1)
-        catch {
-          // the lock is already gone — release beat this tick; the
-          // interrupt lands next sleep. Not a refresh failure.
-          case _: java.io.FileNotFoundException => ()
-          case scala.util.control.NonFatal(e) =>
-            if (!warned) {
-              warned = true
-              lockLog.warn(s"$who: commit-lock heartbeat refresh " +
-                s"failed (${e.getClass.getSimpleName}: " +
-                s"${e.getMessage}) — a waiter may stale-break this " +
-                s"holder after ${LockStaleMs / 60000} min")
-            }
-        }
-      } catch { case _: InterruptedException => () }
-    })
-    heartbeat.setDaemon(true)
-    heartbeat.start()
-    try body
-    finally {
-      heartbeat.interrupt()
-      // release-by-owner: delete only OUR lock incarnation. If this
-      // holder was stale-broken mid-commit (heartbeat refresh
-      // unsupported and the hold outran LockStaleMs), the file at
-      // the path is a successor's — leave it alone.
-      try {
-        if (lockOwner(lockHPath) == ownerToken) { fs.delete(lockHPath, false); () }
-        else lockLog.warn(s"$who: lock no longer held at release " +
-          "(stale-broken mid-commit?) — leaving the successor's lock")
-      }
-      catch { case _: java.io.IOException => () }
-    }
-  }
-
-  private[graft] def commitManifest(s: SparkSession, root: String,
-      rows: Seq[(Long, String)], expectedTip: Option[Long],
-      who: String, underLock: () => Unit = () => ()): Unit = {
-    import s.implicits._
-    withCommitLock(s, root, who) {
-      val mPath = new org.apache.hadoop.fs.Path(s"$root/manifest")
-      val exists = mPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .exists(mPath)
-      expectedTip match {
-        case None =>
-          require(!exists,
-            s"$who: commit conflict — another writer published this " +
-              "root's first manifest version while this one staged")
-        case Some(expected) =>
-          require(exists, s"$who: $root has no published manifest")
-          val tip = s.read.parquet(s"$root/manifest")
-            .agg(max(col("version"))).head.getLong(0)
-          require(tip == expected,
-            s"$who: commit conflict — the manifest tip moved from " +
-              s"$expected to $tip while this writer staged (another " +
-              "writer published); re-stage against the new tip")
-      }
-      underLock() // first publish's meta writes — see publishV1Meta
-      rows.toDF("version", "path")
-        .write.mode(SaveMode.Append).parquet(s"$root/manifest")
-    }
+    val delta = s"$root/delta/v1_${nonce()}"
+    try {
+      published.filter(wapHasText).select(wapFp.as("fp"))
+        .distinct().write.parquet(s"$delta/fp")
+      // coalesce the empty-corpus aggregates: sum over zero rows is
+      // NULL, and a NULL stat would silently poison every composed
+      // gate downstream instead of holding on rows_ratio's
+      // 0-denominator
+      published.agg(count(lit(1)).as("n"),
+          coalesce(sum(when(!wapHasText, 1L).otherwise(0L)), lit(0L))
+            .as("nnull"),
+          countDistinct(when(wapHasText, wapFp)).as("nfp"))
+        .write.parquet(s"$delta/totals")
+      published.groupBy("lang").agg(count(lit(1)).as("c"))
+        .write.parquet(s"$delta/lang")
+      beforeCommit() // test seam: hold a racing first publish here
+      publish(s, root, WapLog(Nil),
+        Publish(1L, Seq(basePath), Some(delta)), "publishV1Meta")
+    } catch { case e: Throwable => deleteTree(delta); throw e }
+    ()
   }
 
   /** Admit ONE arriving shard against an already-published root.
@@ -1050,22 +942,20 @@ object Pipeline {
     * admission with the published data files REMOVED.
     *
     * `closeLoop = true` is the production mode: a passing publish
-    * ALSO appends the admitted fingerprints to the index (a delta
-    * shard), the admitted aggregates to the stats, and the
-    * re-stamped paths to the manifest — so the NEXT shard admits
-    * against the new version, still metadata-only (the spec drives
-    * two increments through this). The registered query replays the
-    * FIRST increment with `closeLoop = false` and the base version
-    * pinned, because the bench re-samples queries and a feedback
-    * append would make the second sample admit against its own
-    * output; the report rows are identical either way (the deltas
-    * are written after the audit is collected).
+    * ALSO writes the admitted fingerprints, the admitted aggregates
+    * and the per-language counts into a writer-unique delta dir that
+    * its log entry names — written before the commit, so the NEXT
+    * shard admits against the new version, still metadata-only (the
+    * spec drives two increments through this). The registered query
+    * replays the FIRST increment with `closeLoop = false` and the
+    * base version pinned, because the bench re-samples queries and a
+    * feedback delta would make the second sample admit against its
+    * own output; the report rows are identical either way.
     *
     * `atVersion` pinning is real, not just replay detection: every
-    * index/stats delta is stamped with the version that published it
-    * and every read here filters `version <= prevV`, so admitting
-    * pinned-to-v on a root whose loop has since closed past v still
-    * composes against exactly v's at-rest state.
+    * at-rest read composes the deltas of versions `<= prevV` only, so
+    * admitting pinned-to-v on a root whose loop has since closed past
+    * v still composes against exactly v's at-rest state.
     */
   private[graft] def admitShard(s: SparkSession, shard: DataFrame,
       root: String, closeLoop: Boolean,
@@ -1074,13 +964,12 @@ object Pipeline {
       beforeStage: () => Unit = () => ()): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    // ONE bounded manifest read serves both the tip lookup here and
-    // the prior-path re-stamp at publish time (it was two)
-    val manifestRows = s.read.parquet(s"$root/manifest")
-      .select("version", "path").collect()
-    require(manifestRows.nonEmpty,
+    // ONE log read serves the tip lookup, the at-rest reads, the
+    // prior-path re-stamp and the commit's base
+    val log = readLog(s, root)
+    require(log.tip > 0L,
       s"admitShard: $root has no published manifest to admit against")
-    val publishedMax = manifestRows.map(_.getLong(0)).max
+    val publishedMax = log.tip
     val prevV = atVersion.getOrElse(publishedMax)
     // pinning PAST the tip would read the full at-rest state (the
     // filters below pass everything) but re-stamp prior paths from a
@@ -1089,14 +978,7 @@ object Pipeline {
     require(prevV <= publishedMax,
       s"admitShard: atVersion=$prevV is not published (tip is " +
         s"$publishedMax) — a base version must exist to admit against")
-    // every at-rest delta is stamped with the version that published
-    // it, and ALL reads below filter `version <= prevV` — so pinning
-    // `atVersion` is REAL: admitting against version v composes
-    // against exactly the index/stats deltas that existed when v was
-    // published, even on a root whose loop has since closed past it
-    val idx = s.read.schema("fp STRING, version BIGINT")
-      .parquet(s"$root/index/fp")
-      .filter(col("version") <= prevV).select("fp")
+    val idx = atRest(s, log, prevV, "fp")
     val keptText = shard.filter(wapHasText).withColumn("fp", wapFp)
       .join(idx, Seq("fp"), "left_anti")
       .withColumn("rn",
@@ -1110,24 +992,23 @@ object Pipeline {
     // loser's SaveMode.Overwrite could run AFTER the winner's commit
     // and delete-and-rewrite the winner's PUBLISHED files with a
     // different shard's rows before its own commit fails (silent
-    // corruption the manifest never records). The manifest records
-    // the ACTUAL path at commit time, so no reader ever depends on
-    // the name; the loser's staged dir is provably its own and is
+    // corruption the manifest never records). The log records the
+    // ACTUAL path at commit time, so no reader ever depends on the
+    // name; the loser's staged dir is provably its own and is
     // deleted on conflict.
-    val nonce =
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    val stagePath = s"$root/stage/v${nextV}_admitted_$nonce"
+    val id = nonce()
+    val stagePath = s"$root/stage/v${nextV}_admitted_$id"
     // A pinned-version REPLAY whose target version is already
     // published must not touch it: rewriting a published staging dir
     // after the manifest published it would tear the snapshot for a
-    // reader resolving it mid-rewrite, and re-appending its manifest
-    // rows would grow the manifest per replay. The replay still
-    // performs the FULL staging write (it is part of the per-shard
-    // cost the bench measures) — to a scratch path the manifest
-    // never references; only the publish appends are skipped.
+    // reader resolving it mid-rewrite, and re-publishing it would
+    // grow the log per replay. The replay still performs the FULL
+    // staging write (it is part of the per-shard cost the bench
+    // measures) — to a scratch path the manifest never references;
+    // only the publish is skipped.
     val isReplay = atVersion.isDefined && publishedMax >= nextV
     val writePath =
-      if (isReplay) s"$root/stage/v${nextV}_replay_$nonce" else stagePath
+      if (isReplay) s"$root/stage/v${nextV}_replay_$id" else stagePath
     // staging = write ONLY the admitted shard rows; published files
     // are referenced, never copied
     beforeStage() // test seam: park a loser so its STAGING write runs
@@ -1136,16 +1017,13 @@ object Pipeline {
     kept.write.mode(SaveMode.Overwrite).parquet(writePath)
     val admitted = s.read.parquet(writePath)
     // compose the audit aggregates: persisted publish-time stats
-    // (summed across all prior increments — additive because every
-    // increment's fingerprints were new) + admitted-side aggregates.
-    // Both relations are BOUNDED (one totals row, one row per lang),
-    // so each is COLLECTED once and handed to [[wapGates]] as a local
-    // relation: the gate union references its inputs once per gate
-    // row, and admission's cost is per-ACTION scheduling, not data —
-    // one pass also carries the shard/admitted accounting that used
-    // to be separate count() jobs.
-    val totalsRow = s.read.parquet(s"$root/stats/totals")
-      .filter(col("version") <= prevV)
+    // (summed across all prior increments) + admitted-side
+    // aggregates. Both relations are BOUNDED (one totals row, one row
+    // per lang), so each is COLLECTED once and handed to [[wapGates]]
+    // as a local relation: the gate union references its inputs once
+    // per gate row, and admission's cost is per-ACTION scheduling,
+    // not data — one pass also carries the shard/admitted accounting.
+    val totalsRow = atRest(s, log, prevV, "totals")
       .agg(coalesce(sum(col("n")), lit(0L)).as("n1"),
         coalesce(sum(col("nnull")), lit(0L)).as("nnull1"),
         coalesce(sum(col("nfp")), lit(0L)).as("nfp1"))
@@ -1169,15 +1047,14 @@ object Pipeline {
     // the full-outer join below keeps NULL keys unmatched exactly
     // like the full-scan audit's join — composed and full-scan agree
     // even on a NULL-lang corpus)
-    val pubLang = s.read.parquet(s"$root/stats/lang")
-      .filter(col("version") <= prevV)
+    val pubLang = atRest(s, log, prevV, "lang")
       .groupBy("lang").agg(sum(col("c")).as("c1"))
     val stagedLang = pubLang.select(col("lang"), col("c1").as("c"))
       .unionByName(admitted.groupBy("lang").agg(count(lit(1)).as("c")))
       .groupBy("lang").agg(sum(col("c")).as("c2"))
     // keep the lang KEY through the collect: the same bounded rows
     // feed the gates (c1, c2) AND reconstruct the admitted per-lang
-    // delta for the closeLoop append — Σc2 − Σc1 per lang key (the
+    // delta for the closeLoop delta — Σc2 − Σc1 per lang key (the
     // two NULL-lang rows a full-outer join keeps unmatched sum to
     // exactly the admitted NULL-lang count)
     val langRows = pubLang.join(stagedLang, Seq("lang"), "full_outer")
@@ -1189,40 +1066,38 @@ object Pipeline {
     val audit = wapGates(totals, langs)
     val rows = audit.collect()
     val allPass = rows.nonEmpty && rows.forall(_.getAs[Boolean]("pass"))
-    if (allPass && !isReplay) { // publish = manifest rows only
-      val prior = manifestRows.filter(_.getLong(0) == prevV)
-        .map(_.getString(1)).distinct.sorted
-      beforeCommit() // test seam: widen the stage→commit race window
-      // validated commit: the tip this admission staged against must
-      // still be the tip — a concurrent writer (compaction, another
-      // admission) that published first wins, this one errors with
-      // its staged shard deleted (safe: the nonce makes the staged
-      // path this writer's own, never a published one)
-      try commitManifest(s, root,
-        (prior.toSeq :+ stagePath).map(p => (nextV, p)),
-        expectedTip = Some(publishedMax), who = "admitShard")
-      catch { case e: Throwable => deleteTree(stagePath); throw e }
-      if (closeLoop) {
-        admitted.filter(wapHasText).select(wapFp.as("fp"))
-          .withColumn("version", lit(nextV))
-          .write.mode(SaveMode.Append).parquet(s"$root/index/fp")
-        // the totals and per-lang deltas are already in hand from the
-        // audit's own pass — append the local rows, never re-scan
-        Seq((nKept, totalsRow.getAs[Long]("knull")))
-          .toDF("n", "nnull")
-          .select(col("n"), col("nnull"),
-            (col("n") - col("nnull")).as("nfp"))
-          .withColumn("version", lit(nextV))
-          .write.mode(SaveMode.Append).parquet(s"$root/stats/totals")
-        langRows.toSeq
-          .groupBy(r => Option(r.getString(0)))
-          .map { case (lang, rs) =>
-            (lang.orNull, rs.map(_.getLong(2)).sum - rs.map(_.getLong(1)).sum)
-          }
-          .filter(_._2 > 0L).toSeq
-          .toDF("lang", "c")
-          .withColumn("version", lit(nextV))
-          .write.mode(SaveMode.Append).parquet(s"$root/stats/lang")
+    if (allPass && !isReplay) {
+      val delta = if (closeLoop) Some(s"$root/delta/v${nextV}_$id") else None
+      // a loser (conflict or any failure before the commit lands)
+      // deletes its staged shard and its deltas — both nonce-named,
+      // so provably its own and never a published path
+      try {
+        delta.foreach { dir =>
+          admitted.filter(wapHasText).select(wapFp.as("fp"))
+            .write.parquet(s"$dir/fp")
+          // the totals and per-lang deltas are already in hand from
+          // the audit's own pass — write the local rows, never re-scan
+          Seq((nKept, totalsRow.getAs[Long]("knull")))
+            .toDF("n", "nnull")
+            .select(col("n"), col("nnull"), (col("n") - col("nnull")).as("nfp"))
+            .write.parquet(s"$dir/totals")
+          langRows.toSeq
+            .groupBy(r => Option(r.getString(0)))
+            .map { case (lang, rs) =>
+              (lang.orNull, rs.map(_.getLong(2)).sum - rs.map(_.getLong(1)).sum)
+            }
+            .filter(_._2 > 0L).toSeq
+            .toDF("lang", "c")
+            .write.parquet(s"$dir/lang")
+        }
+        beforeCommit() // test seam: widen the stage→commit race window
+        // the tip this admission staged against must still be the
+        // tip — a concurrent writer (compaction, another admission)
+        // that published first wins, this one errors
+        publish(s, root, log,
+          Publish(nextV, log.paths(prevV) :+ stagePath, delta), "admitShard")
+      } catch { case e: Throwable =>
+        deleteTree(stagePath); delta.foreach(deleteTree); throw e
       }
     }
     // the replay scratch is never referenced again (the manifest
@@ -1230,10 +1105,10 @@ object Pipeline {
     // already-collected rows) — drop it eagerly instead of letting
     // per-replay parquet dirs accumulate until the JVM-exit sweep
     if (isReplay) deleteTree(writePath)
-    // the published version needs no manifest re-read: a passing
-    // non-replay admission appended exactly nextV (a tip append —
-    // nextV = prevV + 1 > publishedMax held by the require above on
-    // the non-replay path), anything else left the tip alone
+    // the published version needs no log re-read: a passing
+    // non-replay admission committed exactly nextV (nextV = prevV + 1
+    // > publishedMax held by the require above on the non-replay
+    // path), anything else left the tip alone
     val version = if (allPass && !isReplay) nextV else publishedMax
     s.createDataFrame(java.util.Arrays.asList(rows: _*), audit.schema)
       .unionAll(Seq(
@@ -1246,7 +1121,7 @@ object Pipeline {
 
   /** The registered first increment: the doc_id % 5 == 4 shard
     * against the v1 snapshot, base version pinned and loop-closing
-    * appends off so the replay is idempotent (see [[admitShard]]).
+    * deltas off so the replay is idempotent (see [[admitShard]]).
     */
   private[graft] def pipe15Admit(s: SparkSession, d: String,
       root: String): DataFrame =
@@ -1254,23 +1129,22 @@ object Pipeline {
       Tables.load(s, d, "documents").filter(col("doc_id") % 5 === 4),
       root, closeLoop = false, atVersion = Some(1L))
 
-  /** The published snapshot (data files, fingerprint index, audit
-    * stats, v1 manifest row) is a ONE-TIME artifact per corpus —
-    * d8/d19's persisted-index discipline, so the registered query
-    * measures ADMISSION (the recurring per-shard cost a production
-    * loop pays), and the publish is a memoized setup warmed through
-    * the registry like every other shared relation. Admission is
-    * idempotent on a published root (stage overwrite; duplicate v2
-    * manifest rows keep max(version) = 2), so re-running on the
-    * memoized root is hash-stable.
-    */
   /** The shutdown sweep's recursive delete ([[Migrate.deleteTree]]),
     * applied eagerly to scratch that is provably unreferenced —
-    * replay stage dirs and purged roots.
+    * replay stage dirs, conflict losers' dirs and purged roots.
     */
   private def deleteTree(dir: String): Unit = Migrate.deleteTree(dir)
 
-  /** Eviction (purge or stopped session) deletes the root's tree:
+  /** The published snapshot (data files, at-rest deltas, v1 log
+    * entry) is a ONE-TIME artifact per corpus — d8/d19's
+    * persisted-index discipline, so the registered query measures
+    * ADMISSION (the recurring per-shard cost a production loop pays),
+    * and the publish is a memoized setup warmed through the registry
+    * like every other shared relation. The first admission on the
+    * memoized root publishes v2; every later one is a pinned replay
+    * that publishes nothing, so re-running is hash-stable.
+    *
+    * Eviction (purge or stopped session) deletes the root's tree:
     * unlike [[graft.functions.Memo.memoizedTable]]'s relations (whose
     * files a rebuilt memo re-reads), an evicted root is never
     * re-entered — the next access republishes to a FRESH tempdir — so
@@ -1286,9 +1160,46 @@ object Pipeline {
     }
 
   graft.functions.Memo.memoWarmers.put("pipeline.pipe15Publish",
-    (s: SparkSession, d: String) =>
-      s.read.parquet(s"${pipe15Root(s, d)}/manifest"))
+    (s: SparkSession, d: String) => manifest(s, pipe15Root(s, d)))
 
+  /** pipe15: INCREMENTAL write-audit-publish — the loop a production
+    * corpus actually lives in once pipe14 has published its first
+    * snapshot: a new shard arrives, is deduplicated AGAINST THE
+    * PUBLISHED SNAPSHOT (d8's shard-vs-index shape: one fingerprint
+    * anti-join, never a corpus re-mine) and within itself (first doc
+    * per fingerprint), the surviving docs are staged METADATA-ONLY —
+    * only the admitted shard rows are written; the staged snapshot is
+    * the manifest-level pair (published v1 files, admitted files), so
+    * the published corpus is never rewritten (pipe14's "data files
+    * move never" principle, applied to staging too — at 100 TB the
+    * old design's published ∪ admitted stage write was a corpus
+    * rewrite per arriving shard). The staged candidate is audited
+    * against the published baseline with the SAME gate arithmetic as
+    * pipe14 ([[wapGates]], fed by publish-time stats composed with
+    * shard-side aggregates — the published corpus is never
+    * rescanned), and only a full pass commits the log entry that
+    * makes (v1 files + admitted files) the published v2. The report carries the audit,
+    * the admission accounting (admitted vs rejected-duplicate counts
+    * — the rows a data-curation runbook asks for first), and the
+    * resulting published version, so the hash gate pins dedup, gates,
+    * and the promote decision together. Null/empty-text shard rows
+    * carry no fingerprint and are NOT duplicates of anything — they
+    * bypass the dedup path and flow to staging whole, so the
+    * null_text gate judges the full poisoned shard instead of
+    * rejected_dup silently absorbing it. At 100 TB: the fingerprint
+    * index and audit stats are persisted alongside the snapshot at
+    * publish time (d8/d19's at-rest discipline); admission costs one
+    * index-vs-shard anti-join, one shard-sized write, and bounded
+    * stat composition — the published bytes are neither rewritten
+    * nor read. The loop CLOSES the same way ([[admitShard]] with
+    * `closeLoop = true`): a passing publish writes the admitted
+    * fingerprints and aggregates as a per-version delta (d19's
+    * incremental band-index pattern; additive — every delta's
+    * fingerprints are new) and commits the re-stamped paths, so the
+    * NEXT shard admits against the new version with the same
+    * metadata-only cost; the spec drives two consecutive increments
+    * through it.
+    */
   def pipe15IncrementalWap(s: SparkSession, d: String): DataFrame =
     pipe15Admit(s, d, pipe15Root(s, d))
 
@@ -1337,30 +1248,7 @@ object Pipeline {
        |  CASE WHEN (SELECT bool_and(pass) FROM g2) THEN 2 ELSE 1 END,
        |  (SELECT bool_and(pass) FROM g2)""".stripMargin
 
-  /** pipe16: VERSION-PRESERVING COMPACTION — the one data-file
-    * mutation a WAP-governed corpus ever allows (Iceberg's
-    * `rewrite_data_files` semantics): after increments accumulate,
-    * the live snapshot's file set (published base + admitted shard
-    * dirs) is rewritten into size-targeted files and published as the
-    * NEXT manifest version with BYTE-IDENTICAL logical content —
-    * prior versions' files are never touched (time travel stays
-    * intact; readers mid-query on vN never see a torn snapshot), and
-    * the hash gate pins the lossless contract: the report carries
-    * (n_docs, order-insensitive row checksum) for the pre-compaction
-    * version and the compacted one, and the oracle recomputes BOTH
-    * rows from the raw corpus — equal by construction only if the
-    * rewrite lost and invented nothing. Replays (the bench
-    * re-samples) rewrite to a scratch path the manifest never
-    * references and delete it after (pipe15's replay discipline), so
-    * published compacted files are never overwritten in place.
-    *
-    * 100 TB shape: the rewrite reads and writes ONLY the live file
-    * set (one pass, no shuffle beyond the repartition exchange that
-    * IS the bin-packing), file-count targeting comes from the
-    * manifest's bounded listing (never a data scan), and the publish
-    * is one manifest append — s13's size-targeted compaction lifted
-    * to manifest-versioned semantics.
-    */
+  /** Target output file size of a compaction rewrite. */
   private val Pipe16TargetBytes = 32L << 20
 
   /** One-time setup (memoized, warmed): a pipe15 root driven through
@@ -1379,9 +1267,7 @@ object Pipeline {
       admitShard(s,
         Tables.load(s, d, "documents").filter(col("doc_id") % 5 === 4),
         root, closeLoop = true)
-      val maxV = s.read.parquet(s"$root/manifest")
-        .agg(max(col("version"))).head.getLong(0)
-      (root, maxV)
+      (root, readLog(s, root).tip)
     }
 
   graft.functions.Memo.memoWarmers.put("pipeline.pipe16Setup",
@@ -1391,13 +1277,9 @@ object Pipeline {
       // timed figure is then always the replay-rewrite (its actual
       // recurring cost) and pipe17's never includes a publish
       ensureCompacted(s, root, fromV)
-      s.read.parquet(s"$root/manifest")
+      manifest(s, root)
     })
 
-  /** Rewrite version `fromV`'s file set into size-targeted files and
-    * publish as `fromV + 1`; report (version, n_docs, row_checksum)
-    * for both versions.
-    */
   /** The five-column checksum/fingerprint spec of the documents
     * corpus — ONE definition for compactVersion, rollbackTo, and
     * both their oracles: a drifted copy would silently desynchronize
@@ -1409,17 +1291,19 @@ object Pipeline {
       NormCol("lang", KStr), NormCol("source", KStr),
       NormCol("n_chars", KLong))
 
+  /** Rewrite version `fromV`'s file set into size-targeted files and
+    * publish as `fromV + 1`; report (version, n_docs, row_checksum)
+    * for both versions.
+    */
   private[graft] def compactVersion(s: SparkSession, root: String,
       fromV: Long, beforeCommit: () => Unit = () => (),
       beforeStage: () => Unit = () => ()): DataFrame = {
-    import s.implicits._
-    val manifest = s.read.parquet(s"$root/manifest")
-    val fromPaths = manifest.filter(col("version") === fromV)
-      .select("path").distinct().collect().map(_.getString(0)).sorted
+    val log = readLog(s, root)
+    val fromPaths = log.paths(fromV)
     require(fromPaths.nonEmpty, s"version $fromV is not published")
     val from = fromPaths.map(s.read.parquet(_)).reduce(_ unionByName _)
     val nextV = fromV + 1
-    val publishedMax = manifest.agg(max(col("version"))).head.getLong(0)
+    val publishedMax = log.tip
     // WRITER-UNIQUE rewrite dir (the admitShard staging discipline):
     // two compactions racing from the same fromV both pass the tip
     // guard below — with a shared deterministic data/v{N}_compact the
@@ -1427,12 +1311,10 @@ object Pipeline {
     // deleteTree it in its conflict handler, leaving the manifest's
     // v{N} pointing at nothing (published data loss). Each writer
     // rewrites into its own dir, commits ITS path, and on conflict
-    // deletes only what it alone wrote; the manifest records the
-    // actual path so no reader depends on the name.
-    val nonce =
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+    // deletes only what it alone wrote; the log records the actual
+    // path so no reader depends on the name.
     val targetPrefix = s"$root/data/v${nextV}_compact"
-    val target = s"${targetPrefix}_$nonce"
+    val target = s"${targetPrefix}_${nonce()}"
     // a replay is "A compaction of fromV already published": version
     // nextV exists AND points at a compacted dir (prefix match — the
     // nonce differs per writer, and any committed rewrite of the same
@@ -1441,9 +1323,7 @@ object Pipeline {
     // published by some other writer kind, no compacted dir) and then
     // summarize a path that doesn't exist — that case is a fork, and
     // it fails fast instead
-    val committedCompact = manifest.filter(col("version") === nextV)
-      .select("path").distinct().collect().map(_.getString(0))
-      .filter(_.startsWith(targetPrefix)).sorted
+    val committedCompact = log.paths(nextV).filter(_.startsWith(targetPrefix))
     val isReplay = committedCompact.nonEmpty
     require(isReplay || fromV == publishedMax,
       s"compactVersion: version $nextV is already published by " +
@@ -1465,13 +1345,12 @@ object Pipeline {
       .write.mode(SaveMode.Overwrite).parquet(writePath)
     if (!isReplay) {
       beforeCommit() // test seam: widen the rewrite→commit race window
-      // validated commit (see commitManifest): losing the race to a
-      // concurrent admission errors here with the rewrite
-      // unreferenced — delete it so the loser leaves no orphan
-      // (safe: the nonce makes writePath this writer's own, never
-      // one another writer could have published)
-      try commitManifest(s, root, Seq((nextV, target)),
-        expectedTip = Some(publishedMax), who = "compactVersion")
+      // losing the commit to a concurrent admission errors here with
+      // the rewrite unreferenced — delete it so the loser leaves no
+      // orphan (safe: the nonce makes writePath this writer's own,
+      // never one another writer could have published)
+      try publish(s, root, log, Publish(nextV, Seq(target), None),
+        "compactVersion")
       catch { case e: Throwable => deleteTree(writePath); throw e }
     }
     if (isReplay) deleteTree(writePath)
@@ -1488,6 +1367,30 @@ object Pipeline {
       s.read.schema(from.schema).parquet(publishedDir)))
   }
 
+  /** pipe16: VERSION-PRESERVING COMPACTION — the one data-file
+    * mutation a WAP-governed corpus ever allows (Iceberg's
+    * `rewrite_data_files` semantics): after increments accumulate,
+    * the live snapshot's file set (published base + admitted shard
+    * dirs) is rewritten into size-targeted files and published as the
+    * NEXT manifest version with BYTE-IDENTICAL logical content —
+    * prior versions' files are never touched (time travel stays
+    * intact; readers mid-query on vN never see a torn snapshot), and
+    * the hash gate pins the lossless contract: the report carries
+    * (n_docs, order-insensitive row checksum) for the pre-compaction
+    * version and the compacted one, and the oracle recomputes BOTH
+    * rows from the raw corpus — equal by construction only if the
+    * rewrite lost and invented nothing. Replays (the bench
+    * re-samples) rewrite to a scratch path the manifest never
+    * references and delete it after (pipe15's replay discipline), so
+    * published compacted files are never overwritten in place.
+    *
+    * 100 TB shape: the rewrite reads and writes ONLY the live file
+    * set (one pass, no shuffle beyond the repartition exchange that
+    * IS the bin-packing), file-count targeting comes from the
+    * manifest's bounded listing (never a data scan), and the publish
+    * is one log entry — s13's size-targeted compaction lifted to
+    * manifest-versioned semantics.
+    */
   def pipe16CompactionRewrite(s: SparkSession, d: String): DataFrame = {
     val (root, fromV) = pipe16Setup(s, d)
     compactVersion(s, root, fromV)
@@ -1501,8 +1404,7 @@ object Pipeline {
     */
   private[graft] def ensureCompacted(s: SparkSession, root: String,
       fromV: Long): Unit =
-    if (s.read.parquet(s"$root/manifest")
-        .filter(col("version") === fromV + 1).limit(1).count() == 0) {
+    if (readLog(s, root).paths(fromV + 1).isEmpty) {
       compactVersion(s, root, fromV).collect(); ()
     }
 
@@ -1535,13 +1437,10 @@ object Pipeline {
   def pipe17VersionDiff(s: SparkSession, d: String): DataFrame = {
     val (root, fromV) = pipe16Setup(s, d)
     ensureCompacted(s, root, fromV)
-    val manifest = s.read.parquet(s"$root/manifest")
-    val versions = manifest.select("version").distinct()
-      .collect().map(_.getLong(0)).sorted
+    val log = readLog(s, root)
+    val versions = log.versions.toArray
     def resolve(v: Long): DataFrame =
-      manifest.filter(col("version") === v).select("path").distinct()
-        .collect().map(_.getString(0)).sorted
-        .map(s.read.parquet(_)).reduce(_ unionByName _)
+      log.paths(v).map(s.read.parquet(_)).reduce(_ unionByName _)
     // engine-side row hash (never crosses to the oracle — only the
     // COUNTS do): any column edit flips it. The concat separator is
     // \u0001 (invisible in most renderings — it is NOT an empty
@@ -1630,7 +1529,7 @@ object Pipeline {
   /** pipe18: ROLLBACK PUBLISH — the WAP lifecycle's undo: promote a
     * PRIOR version's exact file set as the next manifest version
     * (Iceberg's `rollback_to_snapshot` semantics). A bad publish is
-    * undone by ONE manifest append that re-stamps the target
+    * undone by ONE log entry that re-stamps the target
     * version's paths — data files move never, the bad version's
     * files stay published for forensics, and readers that resolved
     * the bad tip mid-query finish on an intact snapshot. The report
@@ -1665,15 +1564,13 @@ object Pipeline {
       admitShard(s,
         Tables.load(s, d, "documents").filter(col("doc_id") % 5 === 4),
         root, closeLoop = true)
-      val maxV = s.read.parquet(s"$root/manifest")
-        .agg(max(col("version"))).head.getLong(0)
+      val maxV = readLog(s, root).tip
       ensureCompacted(s, root, maxV)
       (root, maxV + 1)
     }
 
   graft.functions.Memo.memoWarmers.put("pipeline.pipe18Setup",
-    (s: SparkSession, d: String) =>
-      s.read.parquet(s"${pipe18Setup(s, d)._1}/manifest"))
+    (s: SparkSession, d: String) => manifest(s, pipe18Setup(s, d)._1))
 
   /** Publish `toV` as a re-stamp of `targetV`'s paths; idempotent on
     * replay (the bench re-samples), fail-fast on a fork (`toV`
@@ -1682,49 +1579,43 @@ object Pipeline {
   private[graft] def rollbackTo(s: SparkSession, root: String,
       targetV: Long, toV: Long,
       beforeCommit: () => Unit = () => ()): DataFrame = {
-    import s.implicits._
-    // a parquet read snapshots its file listing at definition — the
-    // manifest must be re-listed after the append, or the shared-path
-    // check below would judge pre-append state
-    def paths(v: Long): Seq[String] =
-      s.read.parquet(s"$root/manifest")
-        .filter(col("version") === v).select("path").distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-    val target = paths(targetV)
+    val log = readLog(s, root)
+    val target = log.paths(targetV)
     require(target.nonEmpty, s"rollbackTo: version $targetV is not published")
     // an EXPIRED version must not come back as the tip: pipe20's
     // vacuum deleted the dirs only it referenced, so re-stamping its
-    // paths would publish a version that silently fails to resolve
-    // (the manifest itself never records expiry — the tombstone
-    // relation beside it does). Unlocked fast-fail here; the
-    // authoritative re-check runs under the commit lock below,
-    // closing the observe→commit window against a concurrent vacuum
-    // (which tombstones under the same lock).
-    def requireNotExpired(): Unit =
-      require(!expiredVersions(s, root)(targetV),
+    // paths would publish a version that silently fails to resolve.
+    // Checked here to fail fast, and again inside the commit against
+    // every entry before the one the rollback publishes — so a vacuum
+    // that expires the target while the rollback is parked makes the
+    // rollback fail instead of publishing a dangling snapshot
+    def requireNotExpired(at: WapLog): Unit =
+      require(!at.expired(targetV),
         s"rollbackTo: version $targetV is expired — its unreferenced " +
           "files were vacuumed and its snapshot cannot be re-published")
-    requireNotExpired()
-    val existing = paths(toV)
-    if (existing.isEmpty) {
-      beforeCommit() // test seam: widen the observe→commit race window
-      // validated commit: a rollback publishes THE NEXT version, so
-      // the tip it observed must still be toV - 1 — losing a race to
-      // a concurrent writer errors instead of forking the manifest;
-      // the tombstone re-check runs under the same lock a vacuum
-      // tombstones under, so "observed live, expired while parked"
-      // fails HERE instead of publishing a dangling snapshot
-      commitManifest(s, root, target.map(p => (toV, p)),
-        expectedTip = Some(toV - 1), who = "rollbackTo",
-        underLock = () => requireNotExpired())
-    }
-    else require(existing == target,
-      s"rollbackTo: version $toV is already published with a different " +
-        s"file set (fork) — refusing to re-stamp it as a rollback")
+    requireNotExpired(log)
+    val existing = log.paths(toV)
+    val now =
+      if (existing.isEmpty) {
+        beforeCommit() // test seam: widen the observe→commit race window
+        // a rollback publishes THE NEXT version, so the tip it
+        // observed must still be toV - 1 — losing a race to a
+        // concurrent writer errors instead of forking the manifest
+        commit(s, root, log, "rollbackTo") { at =>
+          requireNotExpired(at)
+          Some(Publish(toV, target, None))
+        }
+      } else {
+        require(existing == target,
+          s"rollbackTo: version $toV is already published with a " +
+            "different file set (fork) — refusing to re-stamp it as a " +
+            "rollback")
+        log
+      }
     val chkCols = docChkCols
-    val shared = paths(toV) == target
+    val shared = now.paths(toV) == target
     def row(v: Long) =
-      paths(v).map(s.read.parquet(_)).reduce(_ unionByName _)
+      now.paths(v).map(s.read.parquet(_)).reduce(_ unionByName _)
         .agg(count(lit(1)).as("n_docs"),
           Norm.sparkRowChecksum(chkCols).as("row_checksum"))
         .select(lit(v).as("version"), col("n_docs"),
@@ -1763,13 +1654,21 @@ object Pipeline {
     * shared with any LIVE version (the manifest re-stamps prior paths
     * on every admission and rollback, so sharing is the NORM) must
     * survive — the report proves it by resolving every live version
-    * AFTER the deletes and counting its docs. The manifest itself is
-    * never rewritten (append-only stays append-only — readers and the
-    * conflict protocol keep their one source of truth); expiry is
-    * recorded as a version-level tombstone relation beside it, and
-    * the at-rest index/stats deltas of expired versions remain (they
-    * are bounded metadata that later pinned admissions still compose
-    * against).
+    * AFTER the deletes and counting its docs. Expiry is one expire
+    * entry in the root's log, committed like any publish, so no
+    * publish entry is ever rewritten; the at-rest deltas of expired
+    * versions remain (they are bounded metadata that later pinned
+    * admissions still compose against).
+    *
+    * Retention is part of that entry: the first vacuum records
+    * `keepLast`, and a later vacuum with a different value fails
+    * (`conflicting retention`) unless it passes `updatePolicy = true`
+    * — two vacuums with conflicting windows cannot both hold. Expiry
+    * is MONOTONE: once tombstoned, a version stays expired even under
+    * a later, wider retention (its unreferenced dirs are already
+    * gone, and un-tombstoning it would let a rollback re-stamp a
+    * snapshot that no longer resolves). The tip is never tombstoned:
+    * keepLast >= 1 and the manifest only grows.
     *
     * Report: one row per manifest version — (version, is_live,
     * n_dirs_dropped, n_docs), with n_docs = −1 for expired versions
@@ -1779,164 +1678,63 @@ object Pipeline {
     * is dropped (data/v1 is shared with the live rollback v4 and must
     * survive), v3 recounts to the admitted corpus, v4 to the base.
     *
-    * Idempotent by construction: a replay recomputes the same live
-    * set from the untouched manifest, re-deletes already-gone dirs
-    * (no-op), overwrites the tombstones with the same rows, and
-    * recounts the same live versions.
+    * Idempotent by construction: a replay computes the same tombstone
+    * set and retention, commits nothing, re-deletes already-gone dirs
+    * (no-op), and recounts the same live versions.
     *
-    * 100 TB shape: pure manifest arithmetic — one bounded listing
-    * read decides the safe-to-delete set (set difference over path
-    * strings, never a data scan); deletes are O(dirs); the only data
-    * pass is the report's recount, which a production vacuum skips
-    * (here it IS the safety proof the oracle hashes).
+    * 100 TB shape: pure manifest arithmetic — one log read decides
+    * the safe-to-delete set (set difference over path strings, never
+    * a data scan); deletes are O(dirs); the only data pass is the
+    * report's recount, which a production vacuum skips (here it IS
+    * the safety proof the oracle hashes).
     */
-  /** The root's expired-version tombstones (empty before any vacuum
-    * ran) — ONE reader shared by rollbackTo's guard (both its
-    * unlocked fast-fail and its locked re-check) so the two can
-    * never read the relation differently.
-    */
-  private def expiredVersions(s: SparkSession, root: String): Set[Long] = {
-    val expPath = new org.apache.hadoop.fs.Path(s"$root/expired")
-    if (expPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .exists(expPath))
-      s.read.schema("version BIGINT").parquet(s"$root/expired")
-        .collect().map(_.getLong(0)).toSet
-    else Set.empty[Long]
-  }
-
-  /** The root's recorded retention policy — a tiny text file holding
-    * the pinned `keepLast`, written under the commit lock at the
-    * FIRST vacuum. Later vacuums validate against it instead of
-    * silently racing: two concurrent vacuums with CONFLICTING
-    * keepLast values would otherwise interleave legally under the
-    * lock yet expire with a narrower window during the other's
-    * post-release recount. A deliberate serial policy change goes
-    * through `updatePolicy = true`, which rewrites the file under
-    * the same lock.
-    */
-  private def retentionPath(root: String) =
-    new org.apache.hadoop.fs.Path(s"$root/retention.policy")
-
-  private def readRetention(s: SparkSession, root: String): Option[Int] = {
-    val p = retentionPath(root)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text =
-        try {
-          // loop to EOF — a single read() may legally return short,
-          // and a clipped "12" parsing as 1 would fabricate a
-          // retention conflict
-          val out = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](32)
-          var n = in.read(buf)
-          while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-          new String(out.toByteArray, "UTF-8").trim
-        } finally in.close()
-      // an empty or garbled file is a vacuum that crashed between
-      // create and write — treat it as NO recorded policy so the
-      // current vacuum re-pins (exactly what the crashed first
-      // vacuum would have done), instead of wedging every future
-      // vacuum on a NumberFormatException it can never clear
-      text.toIntOption
-    }
-  }
-
-  private def writeRetention(s: SparkSession, root: String,
-      keepLast: Int): Unit = {
-    val p = retentionPath(root)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(keepLast.toString.getBytes("UTF-8"))
-    finally out.close()
-  }
-
   private[graft] def expireVersions(s: SparkSession, root: String,
       keepLast: Int, updatePolicy: Boolean = false): DataFrame = {
     import s.implicits._
     require(keepLast >= 1,
       "expireVersions: must keep at least the tip version")
-    // the decide + tombstone section runs UNDER THE COMMIT LOCK:
-    // unserialized, a vacuum could expire a version between a
-    // rollback's observe and its commit — the tip would not move, so
-    // the rollback's tip validation would pass and publish a version
-    // pointing at just-deleted dirs. Under the shared lock, either
-    // the rollback commits first (its target's dirs become
-    // live-referenced and survive) or the vacuum's tombstone lands
-    // first and the rollback's locked re-check refuses. The PHYSICAL
-    // delete pass and the data-sized recount both run AFTER release
-    // — see below.
-    val (manifestRows, versions, live, expP) =
-      withCommitLock(s, root, "expireVersions") {
-        val manifestRows = s.read.parquet(s"$root/manifest")
-          .select("version", "path").distinct().collect()
-          .map(r => (r.getLong(0), r.getString(1)))
-        require(manifestRows.nonEmpty,
-          s"expireVersions: $root has no published manifest")
-        // retention serialization: the first vacuum pins the root's
-        // keepLast; a later vacuum with a different value fails loud
-        // unless it explicitly carries the policy change
-        readRetention(s, root) match {
-          case Some(rec) if rec != keepLast && !updatePolicy =>
-            throw new IllegalArgumentException(
-              s"expireVersions: conflicting retention — $root is " +
-                s"pinned to keepLast=$rec (set at its first vacuum); " +
-                s"got keepLast=$keepLast. Pass updatePolicy=true for " +
-                "a deliberate serial retention change.")
-          case Some(rec) =>
-            if (rec != keepLast) writeRetention(s, root, keepLast)
-          case None => writeRetention(s, root, keepLast)
-        }
-        val versions = manifestRows.map(_._1).distinct.sorted
-        // expiry is MONOTONE: once tombstoned, a version stays
-        // expired even if a later vacuum runs with a wider retention
-        // — its unreferenced dirs are already gone, and
-        // "un-tombstoning" it would let a rollback re-stamp a
-        // snapshot that no longer resolves. (The tip can never be
-        // tombstoned: keepLast >= 1 at every vacuum and the manifest
-        // only grows.)
-        val priorExpired = expiredVersions(s, root)
-        val live =
-          versions.takeRight(keepLast).toSet -- priorExpired
-        val liveP = manifestRows.filter(t => live(t._1)).map(_._2).toSet
-        // safe-to-delete = referenced by SOME expired version and NO
-        // live one; anything shared with a live version survives
-        val expP =
-          manifestRows.filterNot(t => live(t._1)).map(_._2).toSet --
-            liveP
-        // durable version-level tombstones land BEFORE the deletes
-        // (the full monotone set, Overwrite: replay-idempotent): a
-        // crash between them leaves tombstoned-but-present dirs — a
-        // later replay re-deletes; the reverse order could leave
-        // deleted-but-untombstoned versions a rollback would happily
-        // re-stamp
-        versions.filterNot(live).toSeq.toDF("version")
-          .write.mode(SaveMode.Overwrite).parquet(s"$root/expired")
-        (manifestRows, versions, live, expP)
+    val base = readLog(s, root)
+    require(base.tip > 0L, s"expireVersions: $root has no published manifest")
+    // the decision is made against the log the entry follows: a
+    // vacuum that loses to another vacuum re-decides (and re-checks
+    // retention) at the new head; one that loses to a publish fails
+    // with a commit conflict, so a rollback that commits first makes
+    // its target's dirs live-referenced, and one that commits after
+    // sees the tombstone
+    val log = commit(s, root, base, "expireVersions") { at =>
+      at.keepLast match {
+        case Some(rec) if rec != keepLast && !updatePolicy =>
+          throw new IllegalArgumentException(
+            s"expireVersions: conflicting retention — $root is " +
+              s"pinned to keepLast=$rec (set at its first vacuum); " +
+              s"got keepLast=$keepLast. Pass updatePolicy=true for " +
+              "a deliberate serial retention change.")
+        case _ =>
       }
-    // the PHYSICAL delete pass runs AFTER lock release: on an object
-    // store, expiring hundreds of staged/compacted dirs is minutes of
-    // delete RPCs, and holding the lock through them would time out
-    // every concurrent admission/compaction/rollback. The ordering
-    // above already makes this safe — the tombstones are DURABLE
-    // before release, so a rollback's locked re-check refuses an
-    // expired target even while its dirs still exist; a crash
-    // mid-delete replays (re-deleting a tombstoned set is
-    // idempotent); and no later writer can reference an expired-only
-    // dir, because commits only append paths their own writer staged
-    // under a fresh nonce.
+      val live = at.versions.takeRight(keepLast).toSet -- at.expired
+      val expired = at.versions.toSet -- live
+      if (expired == at.expired && at.keepLast.contains(keepLast)) None
+      else Some(Expire(expired, keepLast))
+    }
+    val live = log.versions.toSet -- log.expired
+    val liveP = log.rows.filter(t => live(t._1)).map(_._2).toSet
+    // safe-to-delete = referenced by SOME expired version and NO
+    // live one; anything shared with a live version survives
+    val expP = log.rows.filterNot(t => live(t._1)).map(_._2).toSet -- liveP
+    // the tombstones are durable before the deletes: a crash between
+    // them leaves tombstoned-but-present dirs that a replay
+    // re-deletes, and no later commit can reference an expired-only
+    // dir (commits only add paths their own writer staged under a
+    // fresh nonce, or re-stamp a version that is not expired)
     expP.toSeq.sorted.foreach(deleteTree)
-    val rows = versions.map { v =>
-      val vPaths = manifestRows.filter(_._1 == v).map(_._2)
-        .distinct.sorted
+    log.versions.map { v =>
+      val vPaths = log.paths(v)
       val nDocs =
         if (live(v)) // resolve AFTER the deletes — the safety proof
           vPaths.map(s.read.parquet(_)).reduce(_ unionByName _).count()
         else -1L
       (v, live(v), vPaths.count(expP).toLong, nDocs)
-    }.toSeq
-    rows.toDF("version", "is_live", "n_dirs_dropped", "n_docs")
+    }.toDF("version", "is_live", "n_dirs_dropped", "n_docs")
   }
 
   /** A settled 4-version root OF ITS OWN (expiring pipe16/pipe18's
@@ -1959,16 +1757,14 @@ object Pipeline {
       // loop settles lower and the setup must still build a valid
       // root — the REGISTERED oracle pins 1..4 for the benchmark
       // corpus, the OPERATOR stays total
-      val maxV = s.read.parquet(s"$root/manifest")
-        .agg(max(col("version"))).head.getLong(0)
+      val maxV = readLog(s, root).tip
       ensureCompacted(s, root, maxV)
       rollbackTo(s, root, targetV = 1L, toV = maxV + 2)
       root
     }
 
   graft.functions.Memo.memoWarmers.put("pipeline.pipe20Setup",
-    (s: SparkSession, d: String) =>
-      s.read.parquet(s"${pipe20Setup(s, d)}/manifest"))
+    (s: SparkSession, d: String) => manifest(s, pipe20Setup(s, d)))
 
   def pipe20SnapshotExpire(s: SparkSession, d: String): DataFrame =
     expireVersions(s, pipe20Setup(s, d), keepLast = 2)
@@ -1991,51 +1787,6 @@ object Pipeline {
        |SELECT 4, TRUE, 0, (SELECT CAST(count(*) AS BIGINT) FROM v1)"""
       .stripMargin
 
-  /** pipe21: ORPHAN-DIRECTORY SWEEP — the other half of the storage
-    * garbage collector (Iceberg's `remove_orphan_files`): a writer
-    * that CRASHED between staging and commit leaves its writer-unique
-    * dir behind with no manifest reference and no conflict handler to
-    * sweep it — on a real deployment those accumulate forever. The
-    * sweep lists only the data-bearing namespaces (`stage/`,
-    * `data/`), subtracts every manifest-referenced path, and deletes
-    * what remains IF it is older than `graceMs`. The grace period is
-    * the safety contract: a LIVE writer's staged dir is also
-    * unreferenced until its commit, so production grace must exceed
-    * the longest stage→commit window (Iceberg defaults to days);
-    * the DECIDE runs under the commit lock, so the referenced set is
-    * a consistent manifest snapshot, and the grace window covers
-    * writers parked mid-stage. The physical deletes run after lock
-    * release (a decided orphan can never become referenced — commits
-    * only append paths their own writer staged under a fresh nonce),
-    * so an object-store-sized delete pass never stalls concurrent
-    * commits. Meta relations (manifest, index, stats, expired)
-    * live outside the swept namespaces by construction.
-    *
-    * The sweep also garbage-collects CRASHED STREAMING-ADMISSION
-    * CHECKPOINTS: a pipe19-style ingest keys its Structured Streaming
-    * checkpoint by run id under `ckpt/<runId>`, and a run that
-    * crashed and was abandoned leaks that dir forever (it is never
-    * manifest-referenced, so the data-namespace subtraction cannot
-    * see it). Liveness is ACTIVITY, not reference: every micro-batch
-    * writes a new offsets/commits file, advancing the child dirs'
-    * mtimes — a run dir whose newest mtime (itself or any direct
-    * child) is older than `graceMs` is a dead run; a live or merely
-    * parked stream stays inside grace. A swept run id can always be
-    * re-ingested from the at-rest index (admission is
-    * content-idempotent), so over-sweeping an abandoned-but-restartable
-    * run loses no data, only its stream position.
-    *
-    * The registered query PLANTS one crashed-writer dir and sweeps
-    * with grace 0 each run (the replayable-cost pattern pipe16 uses
-    * for its rewrite), so the report — orphans dropped, referenced
-    * dirs, tip recount after the sweep — is deterministic under the
-    * bench's re-sampling.
-    *
-    * 100 TB shape: one bounded manifest read + one directory listing
-    * per namespace (NOT a recursive file walk — staging dirs are the
-    * unit of both commit and cleanup); deletes are O(orphans); the
-    * tip recount is the safety proof, skippable in production.
-    */
   /** Newest write activity under a checkpoint RUN dir: the max mtime
     * over the dir itself, its direct children, and the FILES inside
     * its direct child dirs (offsets/, commits/, sources/ — a live
@@ -2059,65 +1810,101 @@ object Pipeline {
       .map(_.getModificationTime)).max
   }
 
+  /** pipe21: ORPHAN-DIRECTORY SWEEP — the other half of the storage
+    * garbage collector (Iceberg's `remove_orphan_files`): a writer
+    * that CRASHED between staging and commit leaves its writer-unique
+    * dirs behind with no log reference and no conflict handler to
+    * sweep them — on a real deployment those accumulate forever. The
+    * sweep lists only the writer-staged namespaces (`stage/`, `data/`
+    * and the at-rest `delta/`), subtracts every path and delta dir one
+    * log snapshot references, and deletes what remains IF it is older
+    * than `graceMs`. The grace period is the safety contract: a LIVE
+    * writer's staged dirs are also unreferenced until its commit, so
+    * production grace must exceed the longest stage→commit window
+    * (Iceberg defaults to days). A decided orphan can never become
+    * referenced — commits only add paths their own writer staged
+    * under a fresh nonce — so the deletes race nothing. Dot-named
+    * temp entries a crashed committer left in the log dir go the same
+    * way. `referenced_dirs` counts data dirs only.
+    *
+    * The sweep also garbage-collects CRASHED STREAMING-ADMISSION
+    * CHECKPOINTS: a pipe19-style ingest keys its Structured Streaming
+    * checkpoint by run id under `ckpt/<runId>`, and a run that
+    * crashed and was abandoned leaks that dir forever (it is never
+    * log-referenced, so the namespace subtraction cannot see it).
+    * Liveness is ACTIVITY, not reference: every micro-batch writes a
+    * new offsets/commits file — a run dir whose newest activity
+    * ([[ckptNewestMtime]]) is older than `graceMs` is a dead run; a
+    * live or merely parked stream stays inside grace. A swept run id
+    * can always be re-ingested from the at-rest index (admission is
+    * content-idempotent), so over-sweeping an
+    * abandoned-but-restartable run loses no data, only its stream
+    * position.
+    *
+    * The registered query PLANTS one crashed-writer dir and sweeps
+    * with grace 0 each run (the replayable-cost pattern pipe16 uses
+    * for its rewrite), so the report — orphans dropped, referenced
+    * dirs, tip recount after the sweep — is deterministic under the
+    * bench's re-sampling.
+    *
+    * 100 TB shape: one log read + one directory listing per namespace
+    * (NOT a recursive file walk — staged dirs are the unit of both
+    * commit and cleanup); deletes are O(orphans); the tip recount is
+    * the safety proof, skippable in production.
+    */
   private[graft] def removeOrphans(s: SparkSession, root: String,
       graceMs: Long): DataFrame = {
     import s.implicits._
+    import org.apache.hadoop.fs.Path
     val conf = s.sparkContext.hadoopConfiguration
     // BOTH sides of the membership test are scheme-stripped: on an
-    // hdfs:// root the manifest records scheme-qualified paths while
+    // hdfs:// root the log records scheme-qualified paths while
     // listStatus yields qualified ones too — comparing a stripped
-    // listing against raw manifest strings would make every
-    // referenced dir look orphaned (a sweep that deletes the corpus)
-    def norm(p: String): String = org.apache.hadoop.fs.Path
-      .getPathWithoutSchemeAndAuthority(new org.apache.hadoop.fs.Path(p))
-      .toString
-    val (orphans, deadCkpts, referencedN) =
-      withCommitLock(s, root, "removeOrphans") {
-        val referenced = s.read.parquet(s"$root/manifest")
-          .select("path").distinct().collect()
-          .map(r => norm(r.getString(0))).toSet
-        require(referenced.nonEmpty,
-          s"removeOrphans: $root has no published manifest")
-        val now = System.currentTimeMillis()
-        val orphans = Seq("stage", "data").flatMap { ns =>
-          val nsPath = new org.apache.hadoop.fs.Path(s"$root/$ns")
-          val fs = nsPath.getFileSystem(conf)
-          if (!fs.exists(nsPath)) Seq.empty
-          else fs.listStatus(nsPath).toSeq.filter(_.isDirectory)
-            .filterNot(st =>
-              referenced(org.apache.hadoop.fs.Path
-                .getPathWithoutSchemeAndAuthority(st.getPath).toString))
-            .filter(st => now - st.getModificationTime >= graceMs)
-            .map(st => org.apache.hadoop.fs.Path
-              .getPathWithoutSchemeAndAuthority(st.getPath).toString)
-        }
-        // dead streaming checkpoints: run-id dirs under ckpt/ with no
-        // write activity inside grace — see ckptNewestMtime for why
-        // activity is read off FILE mtimes two levels deep
-        val ckptRoot = new org.apache.hadoop.fs.Path(s"$root/ckpt")
-        val ckFs = ckptRoot.getFileSystem(conf)
-        val deadCkpts =
-          if (!ckFs.exists(ckptRoot)) Seq.empty[String]
-          else ckFs.listStatus(ckptRoot).toSeq.filter(_.isDirectory)
-            .filter(st => now - ckptNewestMtime(ckFs, st) >= graceMs)
-            .map(st => org.apache.hadoop.fs.Path
-              .getPathWithoutSchemeAndAuthority(st.getPath).toString)
-        (orphans, deadCkpts, referenced.size.toLong)
-      }
-    // physical deletes AFTER lock release — a decided data orphan
-    // cannot become referenced, so that delete pass races nothing and
-    // an object-store-sized sweep never holds commits past the waiter
-    // deadline
+    // listing against raw log strings would make every referenced
+    // dir look orphaned (a sweep that deletes the corpus)
+    def norm(p: Path): String = Path.getPathWithoutSchemeAndAuthority(p).toString
+    val log = readLog(s, root)
+    require(log.tip > 0L, s"removeOrphans: $root has no published manifest")
+    val referenced = log.rows.map(t => norm(new Path(t._2))).toSet
+    val referencedDeltas =
+      log.publishes.flatMap(_.delta).map(d => norm(new Path(d))).toSet
+    val now = System.currentTimeMillis()
+    def stale(st: org.apache.hadoop.fs.FileStatus) =
+      now - st.getModificationTime >= graceMs
+    val orphans = Seq("stage", "data", "delta").flatMap { ns =>
+      val nsPath = new Path(s"$root/$ns")
+      val fs = nsPath.getFileSystem(conf)
+      if (!fs.exists(nsPath)) Seq.empty
+      else fs.listStatus(nsPath).toSeq.filter(_.isDirectory)
+        .map(st => (norm(st.getPath), st))
+        .filterNot(t => referenced(t._1) || referencedDeltas(t._1))
+        .filter(t => stale(t._2)).map(_._1)
+    }
+    // dead streaming checkpoints: run-id dirs under ckpt/ with no
+    // write activity inside grace — see ckptNewestMtime for why
+    // activity is read off FILE mtimes two levels deep
+    val ckptRoot = new Path(s"$root/ckpt")
+    val ckFs = ckptRoot.getFileSystem(conf)
+    val deadCkpts =
+      if (!ckFs.exists(ckptRoot)) Seq.empty[String]
+      else ckFs.listStatus(ckptRoot).toSeq.filter(_.isDirectory)
+        .filter(st => now - ckptNewestMtime(ckFs, st) >= graceMs)
+        .map(st => norm(st.getPath))
     orphans.sorted.foreach(deleteTree)
+    val (dir, logFs) = logDir(s, root)
+    logFs.listStatus(dir).filter(st =>
+        st.getPath.getName.startsWith(".") &&
+          st.getPath.getName.endsWith(".tmp") && stale(st))
+      .foreach(st => logFs.delete(st.getPath, false))
     // a decided-dead CHECKPOINT, unlike a data orphan, CAN come back
-    // to life between the locked decide and this pass: a restart of
-    // the same logical run legitimately reuses its run id (the
-    // recovery path). Re-check activity immediately before each
-    // delete — a revived run has written fresh offset files by now
-    // and is skipped; the remaining window (recheck → delete) is
-    // RPC-sized against a graceMs-sized contract.
+    // to life between the decide and this pass: a restart of the same
+    // logical run legitimately reuses its run id (the recovery path).
+    // Re-check activity immediately before each delete — a revived
+    // run has written fresh offset files by now and is skipped; the
+    // remaining window (recheck → delete) is RPC-sized against a
+    // graceMs-sized contract.
     val ckptDropped = deadCkpts.sorted.count { dir =>
-      val p = new org.apache.hadoop.fs.Path(dir)
+      val p = new Path(dir)
       val dfs = p.getFileSystem(conf)
       val stillDead =
         try {
@@ -2128,14 +1915,11 @@ object Pipeline {
       stillDead
     }
     // tip recount AFTER the sweep — the referenced-dirs-survive proof
-    val manifest = s.read.parquet(s"$root/manifest")
-    val tip = manifest.agg(max(col("version"))).head.getLong(0)
-    val tipDocs = manifest.filter(col("version") === tip)
-      .select("path").distinct().collect().map(_.getString(0)).sorted
-      .map(s.read.parquet(_)).reduce(_ unionByName _).count()
+    val tipDocs = log.paths(log.tip).map(s.read.parquet(_))
+      .reduce(_ unionByName _).count()
     Seq(("orphan_dirs_dropped", orphans.size.toLong),
       ("ckpt_runs_dropped", ckptDropped.toLong),
-      ("referenced_dirs", referencedN),
+      ("referenced_dirs", referenced.size.toLong),
       ("tip_docs", tipDocs)).toDF("metric", "value")
   }
 
@@ -2149,24 +1933,19 @@ object Pipeline {
         Tables.load(s, d, "documents").filter(col("doc_id") % 5 === 4),
         root, closeLoop = true)
       // derived, not pinned — see pipe20Setup
-      val maxV = s.read.parquet(s"$root/manifest")
-        .agg(max(col("version"))).head.getLong(0)
-      ensureCompacted(s, root, maxV)
+      ensureCompacted(s, root, readLog(s, root).tip)
       root
     }
 
   graft.functions.Memo.memoWarmers.put("pipeline.pipe21Setup",
-    (s: SparkSession, d: String) =>
-      s.read.parquet(s"${pipe21Setup(s, d)}/manifest"))
+    (s: SparkSession, d: String) => manifest(s, pipe21Setup(s, d)))
 
   def pipe21OrphanSweep(s: SparkSession, d: String): DataFrame = {
     val root = pipe21Setup(s, d)
     // plant one crashed-writer staging dir per run: nonce-named,
     // never committed, exactly what a writer dying mid-stage leaves
-    val nonce =
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
     Tables.load(s, d, "documents").limit(7).write
-      .parquet(s"$root/stage/v9_admitted_$nonce")
+      .parquet(s"$root/stage/v9_admitted_${nonce()}")
     removeOrphans(s, root, graceMs = 0L)
   }
 
@@ -2188,32 +1967,9 @@ object Pipeline {
        |SELECT 'tip_docs', (SELECT CAST(count(*) AS BIGINT) FROM v2)"""
       .stripMargin
 
-  /** pipe19: STREAMING ADMISSION — the pipe15 loop fed by Structured
-    * Streaming, the shape a production corpus ingests in: shards
-    * arrive as files on a watched directory, each micro-batch
-    * (`maxFilesPerTrigger=1` — one shard per batch) is admitted
-    * inside `foreachBatch` via [[admitShard]] with `closeLoop =
-    * true`, so the versioned corpus advances one manifest version per
-    * arriving shard, deduplicated against the fingerprint index AS OF
-    * ITS ARRIVAL. foreachBatch is the right seam because admission is
-    * not a row-wise sink — it is a transactional publish (stage,
-    * audit, manifest append) that must see the whole shard.
-    *
-    * The report states ONLY order-invariant facts — final version,
-    * final corpus size, total admitted, total rejected-duplicate —
-    * because micro-batch ORDER is scheduler-chosen: which shard wins
-    * a cross-shard duplicate fingerprint depends on arrival order,
-    * but the SET of surviving fingerprints (distinct shard fps minus
-    * published fps) and every count above do not. The oracle states
-    * them from the raw corpus.
-    *
-    * 100 TB shape: per arriving shard the loop pays exactly pipe15's
-    * metadata-only admission (index anti-join + shard-sized stage
-    * write + bounded stat composition + manifest append); the stream
-    * holds NO state of its own — the at-rest index/stats/manifest ARE
-    * the state, which is what makes the ingest restartable from the
-    * checkpoint without rebuilding anything.
-    */
+  private val Pipe19Schema = "doc_id LONG, text STRING, lang STRING, " +
+    "source STRING, n_chars LONG"
+
   /** One-time inputs (memoized, warmed): the base slice in a
     * read-only landing dir and the shard feed as one file per shard —
     * the parts of the run a production loop would find already
@@ -2221,9 +1977,6 @@ object Pipeline {
     * recurring cost: a metadata-only v1 publish against the landing
     * dir, the stream, and one admission per micro-batch.
     */
-  private val Pipe19Schema = "doc_id LONG, text STRING, lang STRING, " +
-    "source STRING, n_chars LONG"
-
   private[graft] val pipe19Inputs: (SparkSession, String) => String =
     graft.functions.Memo.memoizedValue("pipeline.pipe19Inputs",
         onEvict = deleteTree) { (s, d) =>
@@ -2243,6 +1996,32 @@ object Pipeline {
     (s: SparkSession, d: String) => s.read.schema(Pipe19Schema)
       .parquet(s"${pipe19Inputs(s, d)}/feed"))
 
+  /** pipe19: STREAMING ADMISSION — the pipe15 loop fed by Structured
+    * Streaming, the shape a production corpus ingests in: shards
+    * arrive as files on a watched directory, each micro-batch
+    * (`maxFilesPerTrigger=1` — one shard per batch) is admitted
+    * inside `foreachBatch` via [[admitShard]] with `closeLoop =
+    * true`, so the versioned corpus advances one manifest version per
+    * arriving shard, deduplicated against the fingerprint index AS OF
+    * ITS ARRIVAL. foreachBatch is the right seam because admission is
+    * not a row-wise sink — it is a transactional publish (stage,
+    * audit, log commit) that must see the whole shard.
+    *
+    * The report states ONLY order-invariant facts — final version,
+    * final corpus size, total admitted, total rejected-duplicate —
+    * because micro-batch ORDER is scheduler-chosen: which shard wins
+    * a cross-shard duplicate fingerprint depends on arrival order,
+    * but the SET of surviving fingerprints (distinct shard fps minus
+    * published fps) and every count above do not. The oracle states
+    * them from the raw corpus.
+    *
+    * 100 TB shape: per arriving shard the loop pays exactly pipe15's
+    * metadata-only admission (index anti-join + shard-sized stage
+    * write + bounded stat composition + one log entry); the stream
+    * holds NO state of its own — the at-rest deltas and the log ARE
+    * the state, which is what makes the ingest restartable from the
+    * checkpoint without rebuilding anything.
+    */
   def pipe19StreamingAdmission(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.streaming.Trigger
@@ -2268,8 +2047,7 @@ object Pipeline {
     // the same logical run reuses its run id (that reuse IS the
     // recovery path — see the pipe19 fault spec); this query's runs
     // are independent, so each gets a fresh id.
-    val runId =
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+    val runId = nonce()
     val q = ss.readStream
       .schema(Pipe19Schema)
       .option("maxFilesPerTrigger", "1")
@@ -2315,8 +2093,7 @@ object Pipeline {
     try require(q.awaitTermination(300000),
       "pipe19 stream did not terminate within 300 s")
     finally { graft.streaming.Cdc.dumpProgress("pipe19", q); q.stop() }
-    val n1 = s.read.parquet(s"$root/stats/totals")
-      .filter(col("version") <= 1L)
+    val n1 = atRest(s, readLog(s, root), 1L, "totals")
       .agg(coalesce(sum(col("n")), lit(0L))).head.getLong(0)
     val admitted = acc.map(_._1).sum
     val rows = Seq(

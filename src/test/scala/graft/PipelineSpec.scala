@@ -21,10 +21,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     * the manifest by version + marker instead of hard-coding names.
     */
   private def pathLike(root: String, v: Long, marker: String): String = {
-    import org.apache.spark.sql.functions.col
-    val ps = spark.read.parquet(s"$root/manifest")
-      .filter(col("version") === v).select("path").distinct()
-      .collect().map(_.getString(0)).filter(_.contains(marker))
+    val ps = Pipeline.readLog(spark, root).paths(v).filter(_.contains(marker))
     assert(ps.length == 1,
       s"expected one v$v path containing '$marker', got ${ps.toSeq}")
     ps.head
@@ -282,11 +279,10 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       "stage dir must contain only shard docs")
     // published v2 resolves to v1 files + admitted files via the
     // manifest alone: reading the union reproduces published ∪ kept
-    val manifest = spark.read.parquet(s"$root/manifest")
-    val vMax = manifest.agg(max(col("version"))).head.getLong(0)
+    val log = Pipeline.readLog(spark, root)
+    val vMax = log.tip
     assert(vMax == 2L)
-    val paths = manifest.filter(col("version") === vMax)
-      .select("path").collect().map(_.getString(0))
+    val paths = log.rows.filter(_._1 == vMax).map(_._2)
     assert(paths.length == 2 && paths.contains(s"$root/data/v1") &&
       paths.exists(_.contains("v2_admitted")), paths.toSeq.toString)
     val resolved = paths.map(spark.read.parquet(_)).reduce(_ unionByName _)
@@ -416,10 +412,9 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     for (p <- v2Dirs) assert(files(p) == beforeByDir(p),
       s"compaction touched $p")
     // v3 resolves to ONLY the compacted dir, and it is fewer files
-    val m = spark.read.parquet(s"$root/manifest")
+    val m = Pipeline.readLog(spark, root)
     val compactDir = pathLike(root, 3L, "v3_compact")
-    assert(m.filter(col("version") === 3L).select("path").collect()
-      .map(_.getString(0)).toSet == Set(compactDir))
+    assert(m.rows.filter(_._1 == 3L).map(_._2).toSet == Set(compactDir))
     val nFilesV3 = files(compactDir).size
     assert(nFilesV3 > 0 && nFilesV3 < nFilesV2,
       s"v3=$nFilesV3 files vs v2=$nFilesV2")
@@ -428,14 +423,13 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // report identical
     val v3Before = files(compactDir)
     val dataBefore = dirNames(s"$root/data").toSet
-    val mRows = m.count()
     val r2 = rows(Pipeline.compactVersion(spark, root, 2L))
     assert(r2 == r1)
     assert(files(compactDir) == v3Before,
       "replay must not rewrite published compacted files")
     assert(dirNames(s"$root/data").toSet == dataBefore,
       "replay must leave no scratch rewrite dir behind")
-    assert(spark.read.parquet(s"$root/manifest").count() == mRows)
+    assert(Pipeline.readLog(spark, root) == m)
     // compacting a NON-TIP version is a fork, not a replay: v2 is
     // published (by admitShard, at the stage dir — not by this
     // compactor), so rewriting v1 into a second "v2" must fail fast
@@ -501,9 +495,8 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       assert(r2(g) == ev, s"$g: composed=${r2(g)} full-scan=$ev")
     assert(r2("admitted_new")._1 == keptB.count())
     // the v3 manifest resolves to all three file sets
-    val m = spark.read.parquet(s"$root/manifest")
-    val paths = m.filter(col("version") === 3L)
-      .select("path").collect().map(_.getString(0)).toSet
+    val paths = Pipeline.readLog(spark, root).rows.filter(_._1 == 3L)
+      .map(_._2).toSet
     assert(paths.size == 3 && paths.contains(s"$root/data/v1") &&
       paths.exists(_.contains("v2_admitted")) &&
       paths.exists(_.contains("v3_admitted")), paths.toString)
@@ -512,7 +505,6 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
   test("pipe18: rollback re-stamps the target's paths manifest-only — " +
     "time travel intact, replay idempotent, forks fail fast") {
     import org.apache.spark.sql.functions._
-    import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft_p18")
       .toString
     Pipeline.pipe15PublishV1(spark, sf, root)
@@ -542,32 +534,28 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // manifest-only: no published data file was touched or rewritten
     assert(files(s"$root/data/v1") == v1Before)
     assert(files(compactDir) == compactBefore)
-    val m = spark.read.parquet(s"$root/manifest")
-    assert(m.filter(col("version") === 4L).select("path")
-      .collect().map(_.getString(0)).toSet == Set(s"$root/data/v1"))
+    assert(Pipeline.readLog(spark, root).rows.filter(_._1 == 4L)
+      .map(_._2).toSet == Set(s"$root/data/v1"))
     // time travel intact: every prior version still resolves
     def countOf(v: Long): Long =
-      spark.read.parquet(s"$root/manifest")
-        .filter(col("version") === v).select("path").distinct()
-        .collect().map(_.getString(0))
+      Pipeline.readLog(spark, root).paths(v)
         .map(spark.read.parquet(_)).reduce(_ unionByName _).count()
     val n1 = countOf(1L)
     assert(countOf(2L) > n1, "v2 must keep the admitted docs")
     assert(countOf(3L) == countOf(2L))
     assert(countOf(4L) == n1)
     // replay idempotent: same report, manifest does not grow
-    val mRows = spark.read.parquet(s"$root/manifest").count()
+    val logBefore = Pipeline.readLog(spark, root)
     val replay = Pipeline.rollbackTo(spark, root, targetV = 1L, toV = 4L)
       .collect().map(r => (r.getAs[Long]("version"),
         r.getAs[Long]("n_docs"), r.getAs[String]("row_checksum"),
         r.getAs[Boolean]("files_shared")))
     assert(replay.toSeq == report.toSeq)
-    assert(spark.read.parquet(s"$root/manifest").count() == mRows)
+    assert(Pipeline.readLog(spark, root) == logBefore)
     // fork protection: v5 published by another writer with different
     // paths — re-stamping it as a rollback must refuse
-    Seq((5L, compactDir)).toDF("version", "path")
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$root/manifest")
+    Pipeline.publish(spark, root, logBefore,
+      Pipeline.Publish(5L, Seq(compactDir), None), "another writer")
     intercept[IllegalArgumentException] {
       Pipeline.rollbackTo(spark, root, targetV = 1L, toV = 5L)
     }
@@ -616,31 +604,27 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
             .get.getAs[Boolean]("pass"), s"admit$i held by gates")
         })
       } :+ Future(retrying("compact") {
-        val tip = spark.read.parquet(s"$root/manifest")
-          .agg(max(col("version"))).head.getLong(0)
+        val tip = Pipeline.readLog(spark, root).tip
         Pipeline.compactVersion(spark, root, tip).collect(); ()
       }) :+ Future(retrying("vacuum") {
         // the GC races too: keepLast = 3 against whatever history
         // exists when it runs — it must never break a live writer
-        // (deletes only expired-only dirs, serialized under the
-        // commit lock) and never crash
+        // (deletes only expired-only dirs, decided by its one
+        // committed expire entry) and never crash
         Pipeline.expireVersions(spark, root, keepLast = 3).collect()
         ()
       })
     writers.foreach(Await.result(_, 600.seconds))
-    val manifest = spark.read.parquet(s"$root/manifest")
-    val versions = manifest.select("version").distinct()
-      .collect().map(_.getLong(0)).sorted
+    val log = Pipeline.readLog(spark, root)
+    val versions = log.versions.distinct.sorted
     // 1 publish + 3 admissions + 1 compaction, no forks, no gaps
-    // (the vacuum appends no manifest rows)
-    assert(versions.toSeq == (1L to 5L), versions.toSeq.toString)
-    def resolved(v: Long) = manifest.filter(col("version") === v)
-      .select("path").distinct().collect().map(_.getString(0))
-      .map(spark.read.parquet(_)).reduce(_ unionByName _)
+    // (the vacuum's expire entry takes no manifest version)
+    assert(versions == (1L to 5L), versions.toString)
+    def resolved(v: Long) =
+      log.paths(v).map(spark.read.parquet(_)).reduce(_ unionByName _)
     // every NON-tombstoned version still resolves (the racing vacuum
     // may legitimately have expired early history)
-    val tombstoned = spark.read.schema("version BIGINT")
-      .parquet(s"$root/expired").collect().map(_.getLong(0)).toSet
+    val tombstoned = log.expired
     assert(tombstoned.forall(_ < versions.max),
       s"the tip can never be tombstoned: $tombstoned")
     for (v <- versions if !tombstoned(v))
@@ -662,130 +646,167 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(resolved(5L).count() == wantFps.count() + nNullBase)
   }
 
-  test("commit lock: a crashed holder's STALE lock is broken and the " +
-    "commit proceeds; a FRESH lock makes the commit wait for release") {
-    import org.apache.spark.sql.functions._
-    // stale: a lock whose mtime stopped advancing LockStaleMs ago is
-    // a dead JVM (a live holder's heartbeat refreshes it) — a new
-    // writer must break it instead of timing out forever
-    val root = java.nio.file.Files.createTempDirectory("graft_lock")
-      .toString
-    val lock = new java.io.File(s"$root/manifest.commit.lock")
-    assert(lock.createNewFile())
-    assert(lock.setLastModified(
-      System.currentTimeMillis() - Pipeline.LockStaleMs - 60000))
-    Pipeline.pipe15PublishV1(spark, sf, root) // would time out unbroken
-    assert(spark.read.parquet(s"$root/manifest").count() > 0)
-    assert(!lock.exists(), "the commit must release (and have broken) " +
-      "the stale lock")
-    // fresh: a just-created lock is a live holder — the commit blocks
-    // until release, then proceeds (no break, no conflict)
-    val root2 = java.nio.file.Files.createTempDirectory("graft_lock2")
-      .toString
-    val lock2 = new java.io.File(s"$root2/manifest.commit.lock")
-    assert(lock2.createNewFile())
-    val releaser = new Thread(() => {
-      Thread.sleep(1500); lock2.delete(); ()
-    })
-    releaser.start()
-    val t0 = System.nanoTime()
-    Pipeline.pipe15PublishV1(spark, sf, root2)
-    val waited = (System.nanoTime() - t0) / 1e9
-    releaser.join()
-    assert(waited >= 1.0,
-      f"the commit must have WAITED for the live lock ($waited%.2f s)")
-    assert(spark.read.parquet(s"$root2/manifest").count() > 0)
+  test("WAP log: N writers commit the same next version — exactly one " +
+    "wins, every other gets a commit conflict, and no temp residue is " +
+    "left (local link branch and non-file rename branch)") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val n = 8
+    // one thread per writer: the writers meet at a barrier, which
+    // would starve a pool smaller than n
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.mockfs.impl", classOf[MockSchemeFs].getName)
+    try for (scheme <- Seq("", "mockfs:")) {
+      val local = java.nio.file.Files.createTempDirectory("graft_logN")
+        .toString
+      val root = scheme + local
+      val v1 = Pipeline.publish(spark, root, Pipeline.WapLog(Nil),
+        Pipeline.Publish(1L, Seq(s"$root/data/v1"), None), "seed")
+      val start = new java.util.concurrent.CyclicBarrier(n)
+      val outcomes = (0 until n).map { i =>
+        Future {
+          start.await(60, java.util.concurrent.TimeUnit.SECONDS)
+          try {
+            Pipeline.publish(spark, root, v1,
+              Pipeline.Publish(2L, Seq(s"$root/stage/w$i"), None), s"w$i")
+            Right(i)
+          } catch { case e: IllegalArgumentException => Left(e.getMessage) }
+        }
+      }.map(Await.result(_, 120.seconds))
+      val winners = outcomes.collect { case Right(i) => i }
+      assert(winners.size == 1, s"[$scheme] winners: $winners")
+      outcomes.collect { case Left(m) => m }.foreach(m =>
+        assert(m.contains("commit conflict"), s"[$scheme] $m"))
+      val log = Pipeline.readLog(spark, root)
+      assert(log.versions == Seq(1L, 2L), s"[$scheme] ${log.versions}")
+      assert(log.paths(2L) == Seq(s"$root/stage/w${winners.head}"))
+      // exactly the two entries, and nothing else in the log dir
+      assert(dirNames(s"$local/manifest").sorted == Seq(
+        "00000000000000000001", "00000000000000000002"),
+        s"[$scheme] log dir: ${dirNames(s"$local/manifest")}")
+    } finally pool.shutdown()
   }
 
-  test("commit lock: FOUR concurrent waiters on one crashed holder's " +
-    "stale lock — the rename-based break admits exactly one holder " +
-    "at a time, every waiter eventually proceeds, and no lock or " +
-    "broken-lock residue remains") {
-    import scala.concurrent.{Await, Future}
+  test("WAP log: a crashed writer's leftover temp entry neither blocks " +
+    "the next commit nor appears in the manifest view, and the orphan " +
+    "sweep removes it past grace") {
+    import org.apache.spark.sql.functions._
+    val root = java.nio.file.Files.createTempDirectory("graft_logtmp")
+      .toString
+    Pipeline.pipe15PublishV1(spark, sf, root)
+    // what a writer that died between its temp write and its publish
+    // leaves: the FULL entry for the next sequence number, under the
+    // dot-named temp name
+    val tmp = new java.io.File(
+      s"$root/manifest/.00000000000000000002.deadbeef0000.tmp")
+    java.nio.file.Files.write(tmp.toPath,
+      s"publish\t2\npath\t$root/stage/ghost\n".getBytes("UTF-8"))
+    val before = Pipeline.readLog(spark, root)
+    assert(before.versions == Seq(1L))
+    assert(!before.rows.exists(_._2.contains("ghost")))
+    val r = Pipeline.admitShard(spark,
+      Tables.load(spark, sf, "documents").filter(col("doc_id") % 5 === 4),
+      root, closeLoop = true).collect()
+      .map(x => x.getString(0) -> x.getAs[Boolean]("pass")).toMap
+    assert(r("published_version"))
+    val after = Pipeline.readLog(spark, root)
+    assert(after.versions == Seq(1L, 2L))
+    assert(after.paths(2L).exists(_.contains("v2_admitted")) &&
+      !after.rows.exists(_._2.contains("ghost")), after.rows.toString)
+    def sweep(graceMs: Long) = Pipeline.removeOrphans(spark, root, graceMs)
+      .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
+    // inside grace the temp file could be a live committer's: it stays
+    sweep(3600L * 1000)
+    assert(tmp.exists())
+    sweep(0L)
+    assert(!tmp.exists(), "a stale temp entry must be swept")
+    assert(Pipeline.readLog(spark, root) == after)
+  }
+
+  test("pipe15: two concurrent first publishes on one root — one wins, " +
+    "the loser fails with a commit conflict and leaves no delta, and " +
+    "the composed v1 stats equal a serial publish's") {
+    import org.apache.spark.sql.functions._
+    import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    // the r15 ADVICE race: with a blind delete, waiter B can break +
-    // re-acquire inside waiter A's check-to-delete window and A then
-    // deletes B's FRESH lock — two holders. The rename-based break
-    // claims one incarnation atomically; this drives four breakers
-    // at the same stale lock and asserts the critical section never
-    // saw two threads.
-    val root = java.nio.file.Files.createTempDirectory("graft_lockN")
+    val landing = java.nio.file.Files.createTempDirectory("graft_p15r_in")
       .toString
-    val lock = new java.io.File(s"$root/manifest.commit.lock")
-    assert(lock.createNewFile())
-    assert(lock.setLastModified(
-      System.currentTimeMillis() - Pipeline.LockStaleMs - 60000))
-    val inside = new java.util.concurrent.atomic.AtomicInteger(0)
-    val maxInside = new java.util.concurrent.atomic.AtomicInteger(0)
-    val fs = (0 until 4).map { i =>
-      Future {
-        Pipeline.withCommitLock(spark, root, s"w$i") {
-          val now = inside.incrementAndGet()
-          maxInside.updateAndGet(m => math.max(m, now))
-          Thread.sleep(100)
-          inside.decrementAndGet()
-          ()
-        }
-      }
+    Tables.load(spark, sf, "documents").filter(col("doc_id") % 5 =!= 4)
+      .write.parquet(s"$landing/base")
+    val root = java.nio.file.Files.createTempDirectory("graft_p15r")
+      .toString
+    // both writers pass the no-manifest fast-fail and write their
+    // deltas before either commits: only the log entry decides
+    val ready = new java.util.concurrent.CyclicBarrier(2)
+    val outcomes = (0 until 2).map { _ =>
+      Future(blocking {
+        try {
+          Pipeline.publishV1Meta(spark, s"$landing/base", root,
+            beforeCommit = () => {
+              ready.await(120, java.util.concurrent.TimeUnit.SECONDS); ()
+            })
+          None
+        } catch { case e: IllegalArgumentException => Some(e.getMessage) }
+      })
+    }.map(Await.result(_, 300.seconds))
+    assert(outcomes.count(_.isEmpty) == 1, outcomes.toString)
+    assert(outcomes.flatten.forall(_.contains("commit conflict")),
+      outcomes.toString)
+    val log = Pipeline.readLog(spark, root)
+    assert(log.versions == Seq(1L) && log.deltas(1L).size == 1)
+    assert(dirNames(s"$root/delta") == Seq(log.deltas(1L).head.split('/').last),
+      "the loser must delete its own delta dir")
+    val serial = java.nio.file.Files.createTempDirectory("graft_p15r_s")
+      .toString
+    Pipeline.publishV1Meta(spark, s"$landing/base", serial)
+    def atRest(r: String) = {
+      val l = Pipeline.readLog(spark, r)
+      Seq("fp", "totals", "lang").map(rel => rel ->
+        Pipeline.atRest(spark, l, 1L, rel).collect().map(_.toString)
+          .sorted.toSeq).toMap
     }
-    fs.foreach(Await.result(_, 120.seconds))
-    assert(maxInside.get() == 1,
-      s"the lock admitted ${maxInside.get()} concurrent holders")
-    assert(!lock.exists(), "the last release must remove the lock")
-    val residue = Option(new java.io.File(root).listFiles())
-      .getOrElse(Array.empty).map(_.getName)
-      .filter(_.startsWith("manifest.commit.lock"))
-    assert(residue.isEmpty,
-      s"broken-lock residue left behind: ${residue.mkString(",")}")
+    assert(atRest(root) == atRest(serial))
   }
 
-  test("commit lock on a NON-file scheme: the Hadoop-create branch " +
-    "locks, heartbeats, conflicts, and breaks stale locks over a " +
-    "mockfs:// root — the hdfs:// wire without a cluster") {
+  test("WAP over a NON-file scheme: publish, conflict, admit, compact, " +
+    "expire and orphan sweep all run over a mockfs:// root — the " +
+    "hdfs:// wire without a cluster") {
     import org.apache.spark.sql.functions._
     spark.sparkContext.hadoopConfiguration
       .set("fs.mockfs.impl", classOf[MockSchemeFs].getName)
     val local = java.nio.file.Files.createTempDirectory("graft_mockfs")
       .toString
     val root = s"mockfs:$local"
-    // full publish over the scheme-qualified root: manifest parquet,
-    // index/stats, and the LOCK all dispatch through MockSchemeFs
+    // full publish over the scheme-qualified root: data parquet,
+    // at-rest deltas, and the LOG all dispatch through MockSchemeFs
     Pipeline.pipe15PublishV1(spark, sf, root)
-    assert(spark.read.parquet(s"$root/manifest").count() == 1)
-    assert(!new java.io.File(s"$local/manifest.commit.lock").exists(),
-      "the remote-branch lock must be released")
-    // double-publish → the locked no-manifest validation conflicts
+    assert(Pipeline.readLog(spark, root).rows.size == 1)
+    assert(dirNames(s"$local/manifest") == Seq("00000000000000000001"),
+      "the rename branch must leave only the published entry")
+    // double-publish → the no-manifest validation conflicts
     val e = intercept[IllegalArgumentException] {
       Pipeline.pipe15PublishV1(spark, sf, root)
     }
     assert(e.getMessage.contains("already holds a manifest") ||
       e.getMessage.contains("commit conflict"), e.getMessage)
-    // an admission commits over the same wire (tip validation reads
-    // the manifest through the scheme too)
+    // an admission commits over the same wire (the log is read
+    // through the scheme too)
     val r = Pipeline.admitShard(spark,
       Tables.load(spark, sf, "documents").filter(col("doc_id") % 5 === 4),
       root, closeLoop = true).collect()
       .map(x => x.getString(0) -> x.getAs[Boolean]("pass")).toMap
     assert(r("published_version"))
-    // stale-break through the Hadoop branch: plant a dead lock with
-    // an ancient mtime, the next commit must break it and land
-    val lockFile = new java.io.File(s"$local/manifest.commit.lock")
-    assert(lockFile.createNewFile())
-    assert(lockFile.setLastModified(
-      System.currentTimeMillis() - Pipeline.LockStaleMs - 60000))
     Pipeline.compactVersion(spark, root, 2L).collect()
-    assert(!lockFile.exists())
-    assert(spark.read.parquet(s"$root/manifest")
-      .agg(max(col("version"))).head.getLong(0) == 3L)
+    assert(Pipeline.readLog(spark, root).tip == 3L)
     // the lifecycle GC must DELETE through the scheme too: deleteTree
     // on a scheme-qualified path dispatches to the Hadoop FS (a nio
     // walk throws and the old catch-all made it a silent no-op —
     // expiry reporting dirs dropped that still existed)
-    val stageName = spark.read.parquet(s"$root/manifest")
-      .filter(col("version") === 2L).select("path").distinct()
-      .collect().map(_.getString(0)).filter(_.contains("v2_admitted"))
-      .head.split('/').last
+    val stageName = Pipeline.readLog(spark, root).paths(2L)
+      .filter(_.contains("v2_admitted")).head.split('/').last
     val stageLocal = new java.io.File(s"$local/stage/$stageName")
     assert(stageLocal.exists())
     // keepLast = 1 keeps only the compacted tip, which references
@@ -800,10 +821,8 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       !new java.io.File(s"$local/data/v1").exists(),
       "the scheme-qualified expiry deletes must reach the disk")
     // and the live tip still resolves through the scheme
-    assert(spark.read.parquet(s"$root/manifest")
-      .filter(col("version") === 3L).select("path").distinct()
-      .collect().map(r => spark.read.parquet(r.getString(0)))
-      .reduce(_ unionByName _).count() > 0)
+    assert(Pipeline.readLog(spark, root).paths(3L)
+      .map(spark.read.parquet(_)).reduce(_ unionByName _).count() > 0)
     // orphan sweep over the same wire
     spark.range(5).toDF("doc_id")
       .write.parquet(s"$root/stage/v9_admitted_feedface0000")
@@ -836,7 +855,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(r0.forall(_.getAs[Long]("n_dirs_dropped") == 0L))
     assert(new java.io.File(stageDir).exists())
     // narrowing retention 9 → 2 is a DELIBERATE policy change: the
-    // first vacuum pinned keepLast=9 in the root's retention file,
+    // first vacuum pinned keepLast=9 in its expire entry,
     // so without the explicit override the narrower vacuum must fail
     // loud instead of silently racing a recorded wider policy
     val conflict = intercept[IllegalArgumentException] {
@@ -872,8 +891,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(new java.io.File(s"$root/data/v1").exists(),
       "a dir shared with a live version must survive the vacuum")
     assert(new java.io.File(compactDir).exists())
-    assert(spark.read.parquet(s"$root/expired").collect()
-      .map(_.getLong(0)).toSet == Set(1L, 2L))
+    assert(Pipeline.readLog(spark, root).expired == Set(1L, 2L))
     // replay: same report, still nothing else deleted
     assert(run() == r1, "expiry replay must be idempotent")
     assert(new java.io.File(s"$root/data/v1").exists())
@@ -890,8 +908,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(r3 == Map(1L -> false, 2L -> false, 3L -> true, 4L -> true),
       s"widened retention resurrected an expired version: $r3")
-    assert(spark.read.parquet(s"$root/expired").collect()
-      .map(_.getLong(0)).toSet == Set(1L, 2L))
+    assert(Pipeline.readLog(spark, root).expired == Set(1L, 2L))
     // an expired version can never come back as the tip: re-stamping
     // v2's paths would publish a version pointing at the vacuumed
     // staging dir
@@ -927,7 +944,12 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
           .toMap).getOrElse(Map.empty)
     val refDirs = Seq(s"$root/data/v1",
       pathLike(root, 2L, "v2_admitted"), pathLike(root, 3L, "v3_compact"))
-    val before = refDirs.map(d => d -> files(d)).toMap
+    val logBefore = Pipeline.readLog(spark, root)
+    // the at-rest deltas v1 and v2 published, one dir per relation
+    val deltaDirs = logBefore.deltas(logBefore.tip)
+      .flatMap(d => Seq("fp", "totals", "lang").map(rel => s"$d/$rel"))
+    assert(deltaDirs.size == 6, deltaDirs.toString)
+    val before = (refDirs ++ deltaDirs).map(d => d -> files(d)).toMap
     def report(graceMs: Long): Map[String, Long] =
       Pipeline.removeOrphans(spark, root, graceMs).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -942,11 +964,11 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(r2("referenced_dirs") == 3L, r2.toString)
     assert(!new java.io.File(orphan).exists(),
       "the unreferenced dir past grace must be deleted")
-    for (d <- refDirs) assert(files(d) == before(d),
+    for (d <- refDirs ++ deltaDirs) assert(files(d) == before(d),
       s"sweep touched referenced dir $d")
-    // meta relations live outside the swept namespaces
-    for (m <- Seq("manifest", "index/fp", "stats/totals"))
-      assert(new java.io.File(s"$root/$m").exists(), m)
+    // the log is untouched, and every referenced delta survives
+    assert(Pipeline.readLog(spark, root) == logBefore)
+    for (d <- deltaDirs) assert(new java.io.File(d).exists(), d)
     // the tip still resolves to the admitted corpus
     val fp = md5(lower(regexp_replace(col("text"), "\\s+", " ")))
     val hasText = col("text").isNotNull && length(col("text")) > 0
@@ -959,6 +981,13 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(r2("tip_docs") == base.count() + newFp + shNulls)
     // idempotent: a re-sweep finds nothing
     assert(report(graceMs = 0L)("orphan_dirs_dropped") == 0L)
+    // a crashed writer's at-rest delta dir is an orphan like its
+    // staged shard: swept past grace, referenced deltas untouched
+    val deltaOrphan = s"$root/delta/v3_deadbeef0000"
+    docs.limit(3).select("lang").write.parquet(s"$deltaOrphan/lang")
+    assert(report(graceMs = 0L)("orphan_dirs_dropped") == 1L)
+    assert(!new java.io.File(deltaOrphan).exists())
+    for (d <- deltaDirs) assert(files(d) == before(d), d)
   }
 
   test("pipe21 checkpoint GC: a dead streaming run's ckpt/<runId> dir " +
@@ -1060,13 +1089,10 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(reports(1)("rejected_dup") == reports(0)("admitted_new") +
       reports(0)("rejected_dup"))
     // final content is EXACTLY the clean run's: base + new shard fps
-    val manifest = spark.read.parquet(s"$root/manifest")
-    val tip = manifest.agg(max(col("version"))).head.getLong(0)
-    assert(tip == 4L, "v2 admission, v3 empty redelivery, v4 second shard")
+    val log = Pipeline.readLog(spark, root)
+    assert(log.tip == 4L, "v2 admission, v3 empty redelivery, v4 second shard")
     def countOf(v: Long): Long =
-      manifest.filter(col("version") === v).select("path").distinct()
-        .collect().map(_.getString(0))
-        .map(spark.read.parquet(_)).reduce(_ unionByName _).count()
+      log.paths(v).map(spark.read.parquet(_)).reduce(_ unionByName _).count()
     val docs = Tables.load(spark, sf, "documents")
     val fp = md5(lower(regexp_replace(col("text"), "\\s+", " ")))
     val hasText = col("text").isNotNull && length(col("text")) > 0
@@ -1103,12 +1129,9 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
         root, closeLoop = true).collect()
       root // tip = 2
     }
-    def manifest(root: String) = spark.read.parquet(s"$root/manifest")
-    def tipOf(root: String): Long =
-      manifest(root).agg(max(col("version"))).head.getLong(0)
+    def tipOf(root: String): Long = Pipeline.readLog(spark, root).tip
     def resolve(root: String, v: Long): Seq[String] =
-      manifest(root).filter(col("version") === v).select("path")
-        .distinct().collect().map(_.getString(0)).sorted.toSeq
+      Pipeline.readLog(spark, root).paths(v)
     def countOf(root: String, v: Long): Long =
       resolve(root, v).map(spark.read.parquet(_))
         .reduce(_ unionByName _).count()
@@ -1137,8 +1160,8 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       // winner-only state: tip is the compaction's v3, untouched by
       // the loser, and the loser's staged shard is unreferenced
       assert(tipOf(root) == 3L && resolve(root, 3L) == v3)
-      assert(!manifest(root).select("path").collect()
-        .map(_.getString(0)).exists(_.contains("v3_admitted")))
+      assert(!Pipeline.readLog(spark, root).rows
+        .exists(_._2.contains("v3_admitted")))
       // …and physically DELETED (its nonce-unique dir is provably its
       // own, so the conflict handler sweeps it — no orphan shards)
       assert(!dirNames(s"$root/stage").exists(_.contains("v3_admitted")),
@@ -1183,8 +1206,8 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       assert(v3.exists(_.contains("v3_admitted")))
       // the losing rewrite leaves no orphan and no manifest trace
       assert(!dirNames(s"$root/data").exists(_.startsWith("v3_compact")))
-      assert(!manifest(root).select("path").collect()
-        .map(_.getString(0)).exists(_.contains("v3_compact")))
+      assert(!Pipeline.readLog(spark, root).rows
+        .exists(_._2.contains("v3_compact")))
       // the loser re-stages against the new tip and succeeds (v4 is
       // the compaction of the admission's v3 — content preserved)
       Pipeline.compactVersion(spark, root, 3L).collect()
@@ -1263,12 +1286,9 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
         root, closeLoop = true).collect()
       root // tip = 2
     }
-    def manifest(root: String) = spark.read.parquet(s"$root/manifest")
-    def tipOf(root: String): Long =
-      manifest(root).agg(max(col("version"))).head.getLong(0)
+    def tipOf(root: String): Long = Pipeline.readLog(spark, root).tip
     def resolve(root: String, v: Long): Seq[String] =
-      manifest(root).filter(col("version") === v).select("path")
-        .distinct().collect().map(_.getString(0)).sorted.toSeq
+      Pipeline.readLog(spark, root).paths(v)
     def countOf(root: String, v: Long): Long =
       resolve(root, v).map(spark.read.parquet(_))
         .reduce(_ unionByName _).count()
@@ -1366,8 +1386,8 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
 
     // INTERLEAVING C: rollback RACED against admission, both
-    // orderings — the third writer kind goes through the same locked
-    // commit point and must lose cleanly too.
+    // orderings — the third writer kind goes through the same log
+    // commit and must lose cleanly too.
     locally { // C1: rollback parks, admission wins
       val root = freshRoot()
       val parked = new CountDownLatch(1)
@@ -1427,11 +1447,11 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
     // INTERLEAVING D: rollback RACED against the vacuum — the
     // rollback observes its target live, parks before its commit; a
-    // concurrent expire (which tombstones UNDER the commit lock)
-    // expires the target. The manifest tip never moves, so the tip
-    // validation alone would pass and publish a version pointing at
-    // a vacuumable snapshot — the rollback's locked tombstone
-    // re-check must refuse instead.
+    // concurrent expire commits an expire entry for the target. The
+    // manifest tip never moves, so a tip check alone would pass and
+    // publish a version pointing at a vacuumable snapshot — the
+    // rollback loses the log entry to the expire, re-checks the
+    // tombstones at the new head, and must refuse.
     locally {
       val root = freshRoot() // tip = 2
       val parked = new CountDownLatch(1)
@@ -1499,8 +1519,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val root = java.nio.file.Files.createTempDirectory("graft_p19c")
       .toString
     Pipeline.publishV1Meta(spark, s"$in/base", root)
-    def tipOf(): Long = spark.read.parquet(s"$root/manifest")
-      .agg(max(col("version"))).head.getLong(0)
+    def tipOf(): Long = Pipeline.readLog(spark, root).tip
     val ss = spark.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", "2")
     @volatile var compactedAt = -1L
@@ -1527,9 +1546,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     try assert(q.awaitTermination(300000)) finally q.stop()
     // v1 publish, v2 first shard, v3 compaction, v4 second shard
     assert(compactedAt == 2L && tipOf() == 4L)
-    val v4 = spark.read.parquet(s"$root/manifest")
-      .filter(col("version") === 4L).select("path").distinct()
-      .collect().map(_.getString(0))
+    val v4 = Pipeline.readLog(spark, root).paths(4L)
     assert(v4.exists(_.contains("v3_compact")), "the admitted tip must " +
       "reference the compacted files, not the fragmented originals")
     assert(v4.exists(_.contains("v4_admitted")))
@@ -1604,13 +1621,10 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       try assert(q.awaitTermination(300000)) finally q.stop()
       assert(reports.length == order.length,
         s"one micro-batch per arriving file: ${reports.length}")
-      val tip = spark.read.parquet(s"$root/manifest")
-        .agg(max(col("version"))).head.getLong(0)
-      (tip, reports.map(_("admitted_new")).sum,
+      val log = Pipeline.readLog(spark, root)
+      (log.tip, reports.map(_("admitted_new")).sum,
         reports.map(_("rejected_dup")).sum,
-        spark.read.parquet(s"$root/manifest")
-          .filter(col("version") === tip).select("path").distinct()
-          .collect().map(_.getString(0))
+        log.paths(log.tip)
           .map(spark.read.parquet(_)).reduce(_ unionByName _).count(),
         root)
     }
@@ -1631,9 +1645,7 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
       assert(nFinal == base.count() + expAdmit)
       // the final corpus's fingerprint SET equals base ∪ shards —
       // content equality, not just counts
-      val finalFps = spark.read.parquet(s"$root/manifest")
-        .filter(col("version") === tip).select("path").distinct()
-        .collect().map(_.getString(0))
+      val finalFps = Pipeline.readLog(spark, root).paths(tip)
         .map(spark.read.parquet(_)).reduce(_ unionByName _)
         .filter(hasText).select(fp.as("f")).distinct()
       val wantFps = base.filter(hasText).unionByName(allSh)
