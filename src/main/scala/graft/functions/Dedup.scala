@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType, TimestampType}
 
 import graft.{Query, Tables}
+import graft.streaming.StreamRun
 import graft.functions.Norm.{xhash64, xhash64Sql}
 
 /** Deduplication operators over the `documents` corpus: exact
@@ -904,17 +905,6 @@ object Dedup {
       .start()
   }
 
-  /** d15: the STREAMING near-dup arm under the batch ORACLE — the
-    * documents corpus replayed as a timestamped parquet feed through
-    * [[streamingNearDup]] (AvailableNow, but the real machinery: the
-    * per-row signature projection, the band explode, the per-bucket
-    * flatMapGroupsWithState with watermark + cap), then the emitted
-    * candidates read back as the distinct pair set. DedupSpec proves
-    * the arm ≡ [[bandedPairs]]; this row puts that equivalence under
-    * the DuckDB hash gate every batch operator answers to, so the
-    * streaming arm is no longer the one component without a
-    * CORRECTNESS entry. Oracle = d3's SQL (the same pair truth).
-    */
   /** The documents corpus as a timestamped parquet feed, written
     * ONCE per (session, input dir) — d15 and d16 replay the same
     * feed, so the second arm pays no feed write. (Plain path memo,
@@ -930,8 +920,9 @@ object Dedup {
       // the ENTIRE per-row signature pipeline (interpreted
       // higher-order lambdas — the expensive part) in a single
       // task before the first shuffle (measured: 6.5 of d15's 9 s).
-      // A real ingestion feed arrives as many files; 8 matches the
-      // stream session's shuffle-partition count.
+      // A real ingestion feed arrives as many files. The 8 files set
+      // the scan's task count only; the stream session's width (4)
+      // sizes the stateful stages after the first shuffle.
       Tables.load(s, d, "documents").repartition(8)
         .select(col("doc_id"), col("text"),
           timestamp_seconds(lit(1704067200L) + col("doc_id")).as("ts"))
@@ -945,25 +936,23 @@ object Dedup {
   Memo.memoWarmers.put("dedup.docsFeed",
     (s: SparkSession, d: String) => s.read.parquet(docsFeed(s, d)))
 
-  /** The shared isolated-stream-session recipe — one definition for
-    * all streaming arms, hosted with the streaming machinery (see
-    * [[graft.streaming.Cdc.streamSession]] for the rationale; a
-    * cloned session scopes the shuffle-partition override so nothing
-    * leaks into queries planning concurrently on the shared session).
-    * Runtime delegation, not an init-time reference — no class-init
-    * cycle (see [[Memo]]'s scaladoc for why that matters here).
+  /** d15: the STREAMING near-dup arm under the batch ORACLE — the
+    * documents corpus replayed as a timestamped parquet feed through
+    * [[streamingNearDup]] (AvailableNow, but the real machinery: the
+    * per-row signature projection, the band explode, the per-bucket
+    * flatMapGroupsWithState with watermark + cap), then the emitted
+    * candidates read back as the distinct pair set. DedupSpec proves
+    * the arm ≡ [[bandedPairs]]; this row puts that equivalence under
+    * the DuckDB hash gate every batch operator answers to, so the
+    * streaming arm is no longer the one component without a
+    * CORRECTNESS entry. Oracle = d3's SQL (the same pair truth).
     */
-  private def streamSession(s: SparkSession): SparkSession =
-    graft.streaming.Cdc.streamSession(s)
-
   def d15StreamingNearDup(s: SparkSession, d: String): DataFrame = {
-    val root = graft.operators.Migrate.fastTempDir("d15")
-    val feed = docsFeed(s, d); val out = s"$root/out"
-    val q = streamingNearDup(streamSession(s), feed, out, s"$root/ckpt")
-    try require(q.awaitTermination(300000),
-      "d15 stream did not terminate within 300 s")
-    finally { graft.streaming.Cdc.dumpProgress("d15", q); q.stop() }
-    s.read.schema("doc_a LONG, doc_b LONG, band INT").parquet(out)
+    val feed = docsFeed(s, d)
+    val root = StreamRun.run(s, "d15") { (ss, dir) =>
+      streamingNearDup(ss, feed, s"$dir/out", s"$dir/ckpt")
+    }
+    s.read.schema("doc_a LONG, doc_b LONG, band INT").parquet(s"$root/out")
       .select("doc_a", "doc_b").distinct()
   }
 
@@ -979,15 +968,12 @@ object Dedup {
     * cross-window canonical election is batch d1's job.)
     */
   def d16StreamingExactDedup(s: SparkSession, d: String): DataFrame = {
-    val root = graft.operators.Migrate.fastTempDir("d16")
-    val out = s"$root/out"
-    val q = streamingExactDedup(streamSession(s), docsFeed(s, d), out,
-      s"$root/ckpt")
-    try require(q.awaitTermination(300000),
-      "d16 stream did not terminate within 300 s")
-    finally { graft.streaming.Cdc.dumpProgress("d16", q); q.stop() }
+    val feed = docsFeed(s, d)
+    val root = StreamRun.run(s, "d16") { (ss, dir) =>
+      streamingExactDedup(ss, feed, s"$dir/out", s"$dir/ckpt")
+    }
     s.read.schema("doc_id LONG, fingerprint STRING, ts TIMESTAMP")
-      .parquet(out)
+      .parquet(s"$root/out")
       .groupBy("fingerprint").agg(count(lit(1)).as("n_out"))
   }
 

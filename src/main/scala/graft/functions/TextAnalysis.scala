@@ -2416,29 +2416,10 @@ object TextAnalysis {
     * equivalence proof (a48/w12's pattern). At 100 TB the state
     * stays model-sized (8192 rows); the corpus never re-scans.
     */
-  def t25StreamingDsirModel(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val feed = t25Feed(s, d)
-    val ss = graft.streaming.Cdc.streamSession(s)
-    val q = t24BucketCounts(
-        ss.readStream.schema("doc_id LONG, text STRING, lang STRING")
-          .parquet(feed))
-      .writeStream.format("memory").queryName("t25_model_counts")
-      // explicit RAM-backed scratch checkpoint (fastTempDir's
-      // scaladoc has the measurements; the implicit temp checkpoint
-      // would land on java.io.tmpdir's slow FS)
-      .option("checkpointLocation",
-        graft.operators.Migrate.fastTempDir("t25_ckpt"))
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(300000),
-      "t25 stream did not terminate within 300 s")
-    finally { graft.streaming.Cdc.dumpProgress("t25", q); q.stop() }
-    val emitted = ss.table("t25_model_counts")
-    t24ScoreFrom(s.createDataFrame(
-      java.util.Arrays.asList(emitted.collect(): _*), emitted.schema))
-  }
+  def t25StreamingDsirModel(s: SparkSession, d: String): DataFrame =
+    t24ScoreFrom(graft.streaming.StreamRun.completeArm(s,
+      "t25_model_counts", t25Feed(s, d),
+      "doc_id LONG, text STRING, lang STRING")(t24BucketCounts))
 
   /** The batch model replayed from the raw corpus — hash equality
     * with the streamed state is the equivalence proof.

@@ -245,28 +245,14 @@ object Migrate {
         else Paths.get(System.getProperty("java.io.tmpdir"))
     }
 
-  /** Scratch home for an embedded JDBC (Derby) target, RAM-backed when
-    * the host has a writable tmpfs. Embedded Derby fsyncs its txn log
-    * on every commit; with the database on the shared disk, full-bench
-    * I/O load from the other 145 queries lands in those fsyncs and the
-    * JDBC queries measure the host's disk queue instead of the MERGE
-    * path (c6b: 0.9 s committed vs 4.5 s under driver load, two rounds
-    * running). tmpfs makes the commit a memory write, so the figure is
-    * load-invariant — and durability of a per-run scratch target is
-    * moot: the database is created fresh each run and swept on exit.
-    * Also pins Derby's boot-time tuning BEFORE the engine can boot
-    * (first connection anywhere in the JVM): page cache sized to 64 MiB
-    * (default is 4 MiB — thrashes on the MERGE working set) and
-    * derby.log kept out of the repo working dir.
-    */
   /** Per-run scratch for STREAMING checkpoints and stream outputs:
     * RAM-backed when the host has a writable tmpfs (the
     * [[scratchDbDir]] rationale applied to the streaming arms —
-    * r17). Profiled with the per-batch progress dump: each
-    * HDFSBackedStateStore commit paid ~40-100 ms of ext4
-    * create+rename per store per micro-batch (32 stores on c11's
-    * 8-wide session = 3-6 s of summed commit time for KB-sized
-    * state), plus offset/commit-log writes on the same axis — pure
+    * r17). Profiled per micro-batch: each HDFSBackedStateStore
+    * commit paid ~40-100 ms of ext4 create+rename per store per
+    * micro-batch (32 stores on c11's session, then 8 wide = 3-6 s of
+    * summed commit time for KB-sized state; the width is 4 since),
+    * plus offset/commit-log writes on the same axis — pure
     * checkpoint-FS latency, not data. Durability of a per-run
     * scratch checkpoint is moot (created fresh, swept on exit;
     * restartability-from-checkpoint is pinned by specs that build
@@ -282,6 +268,20 @@ object Migrate {
     p.toString
   }
 
+  /** Scratch home for an embedded JDBC (Derby) target, RAM-backed when
+    * the host has a writable tmpfs. Embedded Derby fsyncs its txn log
+    * on every commit; with the database on the shared disk, full-bench
+    * I/O load from the other 145 queries lands in those fsyncs and the
+    * JDBC queries measure the host's disk queue instead of the MERGE
+    * path (c6b: 0.9 s committed vs 4.5 s under driver load, two rounds
+    * running). tmpfs makes the commit a memory write, so the figure is
+    * load-invariant — and durability of a per-run scratch target is
+    * moot: the database is created fresh each run and swept on exit.
+    * Also pins Derby's boot-time tuning BEFORE the engine can boot
+    * (first connection anywhere in the JVM): page cache sized to 64 MiB
+    * (default is 4 MiB — thrashes on the MERGE working set) and
+    * derby.log kept out of the repo working dir.
+    */
   private[graft] def scratchDbDir(tag: String): String = {
     val p = Files.createTempDirectory(scratchParent(None), s"graft_$tag")
     tempDirs.add(p)
@@ -1461,7 +1461,7 @@ object Migrate {
     if (td == null) return summary(ev) // empty source: nothing to restate
     // the dynamic-overwrite conf lives on a CLONED session so the
     // override cannot leak into queries planning concurrently on the
-    // shared session (the streamSession discipline; a set/restore
+    // shared session (StreamRun.session's discipline; a set/restore
     // window here was a review finding) — writes take their conf
     // from the frame's OWN session
     val ss = s.newSession()

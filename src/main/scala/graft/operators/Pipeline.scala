@@ -7,6 +7,7 @@ import graft.{Query, Tables}
 import graft.functions.Norm
 import graft.functions.Norm.{KLong, KStr, NormCol}
 import graft.operators.Migrate.ChunkSpec
+import graft.streaming.StreamRun
 
 /** pipe2: the reference's user-facing task-mode pipeline — the mode
   * dispatch in `server/server.go:28-82` run end-to-end as ONE composed
@@ -2035,11 +2036,10 @@ object Pipeline {
     // never re-reads the corpus it just published
     val acc = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Long)] // (admitted, rejected, version)
-    // an even smaller shuffle width than the shared streamSession's 8:
+    // an even smaller shuffle width than the other arms' 4:
     // admission state is gate-row sized, and every one of the ~9
     // bounded actions per batch pays task-count overhead, not data
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "2")
+    val ss = StreamRun.session(s, width = 2)
     // the checkpoint is KEYED BY RUN ID under the root's ckpt/
     // namespace — the production layout pipe21's sweep expects: a
     // crashed-and-abandoned ingest's checkpoint dir is otherwise
@@ -2090,9 +2090,7 @@ object Pipeline {
         ()
       }
       .start()
-    try require(q.awaitTermination(300000),
-      "pipe19 stream did not terminate within 300 s")
-    finally { graft.streaming.Cdc.dumpProgress("pipe19", q); q.stop() }
+    StreamRun.await("pipe19", q)
     val n1 = atRest(s, readLog(s, root), 1L, "totals")
       .agg(coalesce(sum(col("n")), lit(0L))).head.getLong(0)
     val admitted = acc.map(_._1).sum

@@ -1380,67 +1380,6 @@ object Cdc {
   graft.functions.Memo.memoWarmers.put("cdc.eventsFeed",
     (s: SparkSession, d: String) => s.read.parquet(eventsFeed(s, d)))
 
-  /** An isolated session (own SQLConf, shared context) for a
-    * streaming run whose state-store count should not be the batch
-    * engine's shuffle-partition count: state stores = shuffle
-    * partitions at plan time, each paying open/commit per
-    * micro-batch, and a replayed corpus needs nowhere near 32. The
-    * ONE definition all streaming arms (d15/d16/c11) share — a
-    * per-callsite copy would let a state-store tuning reach some
-    * arms and not others (review finding). Sound because these
-    * streams never compose with the caller's DataFrames: inputs and
-    * outputs are paths.
-    */
-  /** Env-gated per-batch progress dump (diagnostic only — zero cost
-    * when SPARK_GRAFT_STREAM_PROGRESS is unset): call at an arm's
-    * stop to print each micro-batch's durationMs components
-    * (addBatch / walCommit / commitOffsets / getBatch / latestOffset)
-    * so the streaming fixed floor attributes to state-store vs
-    * commit-log vs scheduling instead of being guessed at
-    * (StreamProbe's data source; r16 verdict item 3).
-    */
-  private[graft] def dumpProgress(name: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PROGRESS"))
-      try q.recentProgress.foreach { p =>
-        println(s"[stream] $name batch=${p.batchId} rows=${p.numInputRows}" +
-          s" durationMs=${p.durationMs} state=${
-            p.stateOperators.map(so =>
-              s"rows=${so.numRowsTotal},commitMs=${so.commitTimeMs}")
-              .mkString("[", ";", "]")}")
-      } catch { case scala.util.control.NonFatal(_) => () }
-
-  private[graft] def streamSession(s: SparkSession): SparkSession = {
-    val ss = s.newSession()
-    // 4 = the measured local default (r17): every state-store commit
-    // pays ~40-100 ms of per-store checkpoint I/O per micro-batch
-    // regardless of state size (progress-dump profile: c11's 32
-    // stores at width 8 summed 3-6 s of commitTimeMs for KB-sized
-    // state), so width sets the arms' fixed floor. Three interleaved
-    // width-8-vs-4 bench-subset pairs (the 10 streaming queries, same
-    // JVM binary, alternating): 28.4→26.3, 27.3→24.1, 23.4→21.8 s —
-    // w4 won every pair, concentrated in the many-store arms (c11
-    // 4.2→2.8, w12 2.5→2.1 medians). The env knob is the production
-    // scale lever (state volume grows with input, so a cluster sizes
-    // this UP — local state here is ≤100k rows, so 4 keeps plenty of
-    // per-store headroom).
-    // Validated here, not deep inside Spark at stream start (r16
-    // advice); NOTE the width only takes effect on a FRESH checkpoint
-    // — stateful queries restarted on an existing checkpoint keep the
-    // state-store partitioning pinned at first run (all arms here use
-    // per-run scratch checkpoints, so each run re-reads the knob).
-    val width = sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE") match {
-      case Some(v) =>
-        require(v.trim.nonEmpty && v.trim.forall(_.isDigit) &&
-          v.trim.toInt > 0,
-          s"SPARK_GRAFT_STREAM_SHUFFLE must be a positive integer, got '$v'")
-        v.trim
-      case None => "4"
-    }
-    ss.conf.set("spark.sql.shuffle.partitions", width)
-    ss
-  }
-
   /** c11: the stream-stream interval join arm under the batch ORACLE
     * — [[streamIntervalJoin]] (both sides watermarked, bounded join
     * state) replayed over the events feed, its emitted pairs read
@@ -1451,16 +1390,10 @@ object Cdc {
     * not just to a ScalaTest assertion.
     */
   def c11StreamingIntervalJoin(s: SparkSession, d: String): DataFrame = {
-    val root = graft.operators.Migrate.fastTempDir("c11")
     val feed = eventsFeed(s, d)
-    val q = streamIntervalJoin(streamSession(s), feed, s"$root/out",
-      s"$root/ckpt")
-    // awaitTermination's boolean matters: a timed-out stream means
-    // TRUNCATED output, which must fail loudly, never feed the
-    // oracle a partial pair set (review finding)
-    try require(q.awaitTermination(300000),
-      "c11 stream did not terminate within 300 s")
-    finally { dumpProgress("c11", q); q.stop() }
+    val root = StreamRun.run(s, "c11") { (ss, dir) =>
+      streamIntervalJoin(ss, feed, s"$dir/out", s"$dir/ckpt")
+    }
     s.read
       .schema("user_id LONG, signup_ts TIMESTAMP, action_ts TIMESTAMP")
       .parquet(s"$root/out")
@@ -1470,23 +1403,6 @@ object Cdc {
       .agg(count(lit(1)).as("n_actions"))
   }
 
-  /** a43: the a40 drift gate run ONLINE — the shape a production
-    * ingest actually deploys the monitor in. A streaming aggregation
-    * over the events feed maintains the per-(column, bucket) era
-    * counts (complete-mode: the state IS the bounded bucket table,
-    * ~25 rows — no watermark needed because the aggregate itself is
-    * the output), and the chi-square gate arithmetic is applied to
-    * the emitted counts through [[graft.operators.Relational
-    * .driftGateFrom]] — the SAME code path as the batch gate, so the
-    * online monitor cannot drift from the gate it is hash-checked
-    * against (the oracle is a DuckDB batch replay over the same
-    * events). Era split on a fixed mid-window date, timestamps
-    * truncated to seconds before comparison (the c10/c11 parity
-    * discipline). Monitored: event_type (categorical) and the value
-    * distribution in 20 fixed buckets. At 100 TB the state stays
-    * bucket-table sized; every micro-batch does map-side partial
-    * aggregation before touching it.
-    */
   /** a43's melt + era-count plan over an events frame — the SAME
     * Column algebra whether the frame is a stream (the arm) or a
     * batch read (the spec's mirror), so the two cannot diverge.
@@ -1505,44 +1421,34 @@ object Cdc {
         sum(when(!col("is_base"), 1L).otherwise(0L)).as("n_cur"))
   }
 
-  /** Run a bounded-state COMPLETE-mode aggregation over the events
-    * feed and re-host the emitted state table on the caller's
-    * session (the memory sink registers it on the isolated stream
-    * session) — the ONE copy of the machinery all three streaming
-    * monitors share (a43 drift, a46 cardinality, a47 quantiles):
-    * each arm is just an aggregation plan in, an estimator applied
-    * to the emitted bounded state out.
-    */
   private val EventsSchema =
     "event_id LONG, user_id LONG, event_type STRING, ts TIMESTAMP, " +
       "value DOUBLE"
 
-  private def runEventsCompleteArm(s: SparkSession, d: String,
-      name: String)(plan: DataFrame => DataFrame): DataFrame = {
-    val feed = eventsFeed(s, d)
-    val ss = streamSession(s)
-    val q = plan(ss.readStream.schema(EventsSchema).parquet(feed))
-      .writeStream.format("memory").queryName(name)
-      // explicit RAM-backed scratch checkpoint: without the option the
-      // memory sink gets an implicit temp checkpoint under
-      // java.io.tmpdir — the slow-FS commit path fastTempDir exists
-      // to avoid (its scaladoc has the measurements)
-      .option("checkpointLocation",
-        graft.operators.Migrate.fastTempDir(s"${name}_ckpt"))
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try require(q.awaitTermination(300000),
-      s"$name stream did not terminate within 300 s")
-    finally { dumpProgress(name, q); q.stop() }
-    val emitted = ss.table(name)
-    s.createDataFrame(java.util.Arrays.asList(emitted.collect(): _*),
-      emitted.schema)
-  }
+  private def eventsCompleteArm(s: SparkSession, d: String,
+      name: String)(plan: DataFrame => DataFrame): DataFrame =
+    StreamRun.completeArm(s, name, eventsFeed(s, d), EventsSchema)(plan)
 
+  /** a43: the a40 drift gate run ONLINE — the shape a production
+    * ingest actually deploys the monitor in. A streaming aggregation
+    * over the events feed maintains the per-(column, bucket) era
+    * counts (complete-mode: the state IS the bounded bucket table,
+    * ~25 rows — no watermark needed because the aggregate itself is
+    * the output), and the chi-square gate arithmetic is applied to
+    * the emitted counts through [[graft.operators.Relational
+    * .driftGateFrom]] — the SAME code path as the batch gate, so the
+    * online monitor cannot drift from the gate it is hash-checked
+    * against (the oracle is a DuckDB batch replay over the same
+    * events). Era split on a fixed mid-window date, timestamps
+    * truncated to seconds before comparison (the c10/c11 parity
+    * discipline). Monitored: event_type (categorical) and the value
+    * distribution in 20 fixed buckets. At 100 TB the state stays
+    * bucket-table sized; every micro-batch does map-side partial
+    * aggregation before touching it.
+    */
   def a43StreamingDrift(s: SparkSession, d: String): DataFrame =
     graft.operators.Relational.driftGateFrom(
-      runEventsCompleteArm(s, d, "a43_counts")(a43Counts))
+      eventsCompleteArm(s, d, "a43_counts")(a43Counts))
 
   val a43Sql: String = graft.operators.Relational.driftGateSql(
     """  SELECT 'event_type' AS col_name, event_type AS bucket,
@@ -1585,7 +1491,7 @@ object Cdc {
     */
   def a46StreamingHll(s: SparkSession, d: String): DataFrame =
     graft.operators.Relational.hllEstimateFrom(
-      runEventsCompleteArm(s, d, "a46_regs")(a46Regs))
+      eventsCompleteArm(s, d, "a46_regs")(a46Regs))
 
   val a46Sql: String = {
     import graft.operators.Relational
@@ -1635,7 +1541,7 @@ object Cdc {
     */
   def a47StreamingQuantiles(s: SparkSession, d: String): DataFrame =
     graft.operators.Relational.histQuantilesFrom(
-      runEventsCompleteArm(s, d, "a47_hist")(a47Hist), A47Width)
+      eventsCompleteArm(s, d, "a47_hist")(a47Hist), A47Width)
 
   val a47Sql: String = {
     import graft.operators.Relational
@@ -1671,7 +1577,7 @@ object Cdc {
     */
   def a48StreamingCms(s: SparkSession, d: String): DataFrame =
     graft.operators.Relational.cmsTopKFrom(
-      runEventsCompleteArm(s, d, "a48_cells")(a48Cells),
+      eventsCompleteArm(s, d, "a48_cells")(a48Cells),
       graft.operators.Relational.cmsKeys(graft.Tables.load(s, d, "events")))
 
   /** a48's oracle IS a39's SQL: the same sketch replayed in batch
@@ -1728,29 +1634,25 @@ object Cdc {
     * sessions-sized, re-indexed with one keyed window.
     */
   def w12StreamingSessionize(s: SparkSession, d: String): DataFrame = {
-    val root = graft.operators.Migrate.fastTempDir("w12")
     val feed = w12Feed(s, d)
-    val ss = streamSession(s)
-    val ev = ss.readStream
-      .schema("user_id LONG, event_id LONG, tss TIMESTAMP")
-      .parquet(feed)
-      .withWatermark("tss", "0 seconds")
-    val q = ev.groupBy(col("user_id"),
-        session_window(col("tss"), "1800 seconds"))
-      .agg(count(lit(1)).as("n_events"),
-        min(unix_timestamp(col("tss"))).as("start_epoch"),
-        max(unix_timestamp(col("tss"))).as("end_epoch"))
-      .select(col("user_id"), col("n_events"), col("start_epoch"),
-        col("end_epoch"))
-      .writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet").option("path", s"$root/out")
-      .start()
-    try require(q.awaitTermination(300000),
-      "w12 stream did not terminate within 300 s")
-    finally { dumpProgress("w12", q); q.stop() }
+    val root = StreamRun.run(s, "w12") { (ss, dir) =>
+      ss.readStream
+        .schema("user_id LONG, event_id LONG, tss TIMESTAMP")
+        .parquet(feed)
+        .withWatermark("tss", "0 seconds")
+        .groupBy(col("user_id"), session_window(col("tss"), "1800 seconds"))
+        .agg(count(lit(1)).as("n_events"),
+          min(unix_timestamp(col("tss"))).as("start_epoch"),
+          max(unix_timestamp(col("tss"))).as("end_epoch"))
+        .select(col("user_id"), col("n_events"), col("start_epoch"),
+          col("end_epoch"))
+        .writeStream
+        .option("checkpointLocation", s"$dir/ckpt")
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow())
+        .format("parquet").option("path", s"$dir/out")
+        .start()
+    }
     val w = Window.partitionBy("user_id").orderBy("start_epoch")
     s.read
       .schema("user_id LONG, n_events LONG, start_epoch LONG, " +

@@ -5,16 +5,18 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{Cdc, ReplaceShim}
+import graft.streaming.{Cdc, ReplaceShim, StreamRun}
 
 class CdcSpec extends AnyFunSuite with SparkSessionTestWrapper {
-  /** Run an AvailableNow query to completion and ALWAYS stop it:
-    * armed processing-time timeouts can keep a stateful query alive
-    * past its data, and an unstopped query is a zombie that churns
-    * empty batches for the rest of the suite.
+  /** Run an AvailableNow query to completion and ALWAYS stop it
+    * (the arms' own wait): armed processing-time timeouts can keep a
+    * stateful query alive past its data, and an unstopped query is a
+    * zombie that churns empty batches for the rest of the suite. A
+    * stream still running after 120 s fails here, by name, not later
+    * as an output mismatch.
     */
   private def runStream(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    try q.awaitTermination(120000) finally q.stop()
+    StreamRun.await("CdcSpec", q, timeoutMs = 120000L)
 
   /** Run an AvailableNow query until `done` observes the expected
     * output, then stop it. Needed for ProcessingTimeTimeout queries:

@@ -4,8 +4,17 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Dedup, TextAnalysis}
+import graft.streaming.StreamRun
 
 class DedupSpec extends AnyFunSuite with SparkSessionTestWrapper {
+
+  /** The arms' own wait: a stream still running after 120 s fails by
+    * name, not later as an output mismatch; the query is always
+    * stopped.
+    */
+  private def runStream(name: String,
+      q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    StreamRun.await(name, q, timeoutMs = 120000L)
 
   test("shingles are empty, not crashing, for docs under 3 words") {
     import spark.implicits._
@@ -163,8 +172,8 @@ class DedupSpec extends AnyFunSuite with SparkSessionTestWrapper {
         .toDF("doc_id", "text", "ts")
         .write.mode("append").parquet(feed)
     def run(): Unit = {
-      val q = Dedup.streamingExactDedup(spark, feed, out, ckpt)
-      try q.awaitTermination(120000) finally q.stop()
+      runStream("exact dedup",
+        Dedup.streamingExactDedup(spark, feed, out, ckpt))
     }
     // batch 1: two docs with the SAME canonical fingerprint (case +
     // whitespace differences) plus one distinct doc
@@ -217,8 +226,7 @@ class DedupSpec extends AnyFunSuite with SparkSessionTestWrapper {
       mk(2L, base.replace("w15", "CHANGED"), "2024-01-01 10:03:00"),
       mk(5L, "alpha beta gamma delta epsilon OTHER", "2024-01-01 10:04:00"))
     def run(): Unit = {
-      val q = Dedup.streamingNearDup(spark, feed, out, ckpt)
-      try q.awaitTermination(120000) finally q.stop()
+      runStream("near dup", Dedup.streamingNearDup(spark, feed, out, ckpt))
     }
     push(docs); run(); push(docs2); run()
     val streamed = spark.read.parquet(out)
@@ -244,9 +252,8 @@ class DedupSpec extends AnyFunSuite with SparkSessionTestWrapper {
       (1 to 10).map(i => mk(i.toLong, base, s"2024-01-01 10:0${i % 10}:00"))
         .toDF("doc_id", "text", "ts")
         .write.mode("append").parquet(s"$dir/feed")
-      val q = Dedup.streamingNearDup(spark, s"$dir/feed", s"$dir/out",
-        s"$dir/ckpt", bucketCap = 3)
-      try q.awaitTermination(120000) finally q.stop()
+      runStream("capped near dup", Dedup.streamingNearDup(spark,
+        s"$dir/feed", s"$dir/out", s"$dir/ckpt", bucketCap = 3))
     }
     push2(tmp2)
     val hot = spark.read.parquet(s"$tmp2/out")
@@ -271,12 +278,10 @@ class DedupSpec extends AnyFunSuite with SparkSessionTestWrapper {
       val t = java.nio.file.Files.createTempDirectory(s"graft_s$tag")
         .toString
       mk(s"$t/feed")
-      val q1 = Dedup.streamingExactDedup(spark, s"$t/feed", s"$t/out1",
-        s"$t/ck1")
-      try q1.awaitTermination(120000) finally q1.stop()
-      val q2 = Dedup.streamingNearDup(spark, s"$t/feed", s"$t/out2",
-        s"$t/ck2")
-      try q2.awaitTermination(120000) finally q2.stop()
+      runStream(s"$tag exact dedup", Dedup.streamingExactDedup(spark,
+        s"$t/feed", s"$t/out1", s"$t/ck1"))
+      runStream(s"$tag near dup", Dedup.streamingNearDup(spark,
+        s"$t/feed", s"$t/out2", s"$t/ck2"))
       val dedup = spark.read.schema("doc_id LONG, fingerprint STRING," +
         " ts TIMESTAMP").parquet(s"$t/out1")
       val pairs = spark.read.schema("doc_a LONG, doc_b LONG, band INT")
