@@ -61,18 +61,23 @@ object Bench {
 
   /** One timed run: (seconds, result rows); (-1.0, -1) on failure
     * (never time-to-exception — broken queries must be visible in
-    * BENCH json, never summed as fast runs). Rows ride along so the
-    * file artifact can trend THROUGHPUT round-over-round, not just
-    * wall time.
+    * BENCH json, never summed as fast runs), with the failure reported
+    * on stderr. Rows ride along so the file artifact can trend
+    * THROUGHPUT round-over-round, not just wall time.
     */
-  private def sample(spark: SparkSession, sfDir: String,
+  private def sample(spark: SparkSession, sfDir: String, name: String,
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
       : (Double, Long) = {
     val t0 = System.nanoTime()
     try {
       val n = fn(spark, sfDir).count()
       ((System.nanoTime() - t0) / 1e9, n)
-    } catch { case _: Throwable => (-1.0, -1L) }
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: " +
+          s"${e.getClass.getName}: ${e.getMessage}")
+        (-1.0, -1L)
+    }
   }
 
   /** Runs one untimed warm-up step. A failure does not stop the bench,
@@ -255,10 +260,11 @@ object Bench {
     // ones recorded, so gc_sec stays comparable to value (summing GC
     // across both samples would misclassify every resampled query as
     // GC-heavy)
-    def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+    def timed(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Long, Double) = {
       val gc0 = gcMillis()
-      val (t, n) = sample(spark, sfDir, fn)
+      val (t, n) = sample(spark, sfDir, name, fn)
       (t, n, (gcMillis() - gc0) / 1e3)
     }
     // interior probe points fire every 50 queries (an index, not a
@@ -274,7 +280,7 @@ object Bench {
         fixedPoints += fixedCostProbe(spark)
       }
       qIdx += 1
-      val (t1, n1, g1) = timed(fn)
+      val (t1, n1, g1) = timed(name, fn)
       val med = median(clean.toSeq)
       val (v, n, g) =
         // no clean.nonEmpty guard on the heavy-tail branch: with no
@@ -286,7 +292,7 @@ object Bench {
         if (t1 >= 0 && (t1 < 1.0 || t1 > math.max(3 * med, 1.0))) {
           // a failed second sample keeps the first — never report a
           // phantom 0 s for a query that succeeded once
-          val (t2, n2, g2) = timed(fn)
+          val (t2, n2, g2) = timed(name, fn)
           if (t2 >= 0 && t2 < t1) (t2, n2, g2) else (t1, n1, g1)
         } else (t1, n1, g1)
       if (v >= 0) clean += v
@@ -362,7 +368,11 @@ object Bench {
       try java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_local.json"),
         (fileLine + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      catch {
+        case NonFatal(e) =>
+          System.err.println("[bench] bench_local.json write failed: " +
+            s"${e.getClass.getName}: ${e.getMessage}")
+      }
     println(line)
     // A second, TAIL-SAFE summary line (≤ ~200 B), printed LAST: the
     // driver's stdout capture keeps only the final ~2.8 KB, and the

@@ -163,10 +163,11 @@ object TransferdbConfig {
   }
 
   /** The `[csv]` dialect block (`config.toml:66-80`) — the knobs the
-    * s8c renderer implements.
+    * s8c renderer implements. `charset` is not a field: the writer
+    * emits UTF-8 only, so [[knobs]] rejects any other value.
     */
   final case class CsvDialect(header: Boolean, separator: String,
-      terminator: String, charset: String, delimiter: String,
+      terminator: String, delimiter: String,
       nullValue: String, escapeBackslash: Boolean, rows: Long)
 
   /** Per-table compare customization (`config.go:128-132`,
@@ -180,12 +181,12 @@ object TransferdbConfig {
 
   /** Per-table migrate customization (`config.go:134-138`, consumed
     * by `full.go:655-703`): `range` restricts the export,
-    * `enable-split = false` forces a single chunk, `sql-hint` is an
-    * Oracle-side scan hint (no Spark analogue — the scheduler owns
-    * scan parallelism; recorded for fidelity).
+    * `enable-split = false` forces a single chunk. The reference's
+    * `sql-hint` is an Oracle-side scan hint with no Spark analogue
+    * (the scheduler owns scan parallelism), so it is not read.
     */
   final case class MigrateTableConfig(sourceTable: String,
-      enableSplit: Boolean, range: String, sqlHint: String)
+      enableSplit: Boolean, range: String)
 
   /** Per-table TiDB clustered-index routing (`config.go:140-151`,
     * consumed by `module/reverse/oracle/o2t/rule.go:230-400`): tables
@@ -203,9 +204,9 @@ object TransferdbConfig {
     * ones.
     */
   final case class EngineKnobs(
-      insertBatchSize: Int, fullChunkSize: Long, csvChunkRows: Long,
+      insertBatchSize: Int, fullChunkSize: Long,
       compareChunkSize: Long, onlyCheckRows: Boolean,
-      enableCheckpoint: Boolean, fixSqlDir: Option[String],
+      fixSqlDir: Option[String],
       checkSqlDir: Option[String], ddlReverseDir: Option[String],
       ddlCompatibleDir: Option[String],
       csv: CsvDialect, sourceSchema: String, targetSchema: String,
@@ -259,7 +260,7 @@ object TransferdbConfig {
         e.get("enable-split") match {
           case Some(b: Boolean) => b
           case _ => true
-        }, entryStr(e, "range"), entryStr(e, "sql-hint")))
+        }, entryStr(e, "range")))
       .filter(_.sourceTable.nonEmpty)
     def sec(s: String) = c.getOrElse(s, Map.empty)
     def str(s: String, k: String, d: String): String =
@@ -300,17 +301,20 @@ object TransferdbConfig {
       require(v > 0, s"config key $key must be positive, got $v")
       v
     }
+    // the csv writer emits UTF-8 only: any other charset would be
+    // written as UTF-8 silently
+    val csvCharset = str("csv", "charset", "UTF8MB4")
+    require(Set("UTF8MB4", "UTF8")(csvCharset.toUpperCase),
+      s"config key csv.charset must be UTF8MB4 or UTF8 (the csv writer " +
+        s"emits UTF-8 only), got $csvCharset")
     EngineKnobs(
       insertBatchSize = positive(
         long("app", "insert-batch-size", 100L), "app.insert-batch-size").toInt,
       fullChunkSize = positive(
         long("full", "chunk-size", 100000L), "full.chunk-size"),
-      csvChunkRows = positive(long("csv", "rows", 100000L), "csv.rows"),
       compareChunkSize = positive(
         long("compare", "chunk-size", 50000L), "compare.chunk-size"),
       onlyCheckRows = bool("compare", "only-check-rows", d = false),
-      enableCheckpoint = bool("full", "enable-checkpoint", d = true) ||
-        bool("compare", "enable-checkpoint", d = false),
       fixSqlDir = sec("compare").get("fix-sql-dir").map(_.toString),
       checkSqlDir = sec("check").get("check-sql-dir").map(_.toString),
       ddlReverseDir = sec("reverse").get("ddl-reverse-dir").map(_.toString),
@@ -320,11 +324,10 @@ object TransferdbConfig {
         header = bool("csv", "header", d = true),
         separator = str("csv", "separator", ","),
         terminator = str("csv", "terminator", "\r\n"),
-        charset = str("csv", "charset", "UTF8MB4"),
         delimiter = str("csv", "delimiter", "\""),
         nullValue = str("csv", "null-value", "NULL"),
         escapeBackslash = bool("csv", "escape-backslash", d = true),
-        rows = long("csv", "rows", 100000L)),
+        rows = positive(long("csv", "rows", 100000L), "csv.rows")),
       sourceSchema = str("schema-config", "source-schema", ""),
       targetSchema = str("schema-config", "target-schema", ""),
       includeTables = arr("schema-config", "source-include-table"),

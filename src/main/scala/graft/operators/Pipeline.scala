@@ -100,6 +100,52 @@ object Pipeline {
     (kw, chunks)
   }
 
+  /** A [[planFixedWidth]] plan over one integral key column: the
+    * key's bounds, the key width `kw` and the chunk specs.
+    */
+  final case class KeyPlan(minKey: Long, maxKey: Long, kw: Long,
+      chunks: Seq[ChunkSpec]) {
+    /** The chunk id of column `key`: `(key - minKey) div kw`. `div`
+      * (IntegralDivide), NOT `/`: Column `/` on longs is IEEE double
+      * division, exact only below 2^53, which 100 TB key ranges
+      * exceed. `div` is the exact integer math the DuckDB oracles'
+      * `//` uses.
+      */
+    def chunkOf(key: String): Column =
+      expr(s"(CAST(`$key` AS BIGINT) - ${minKey}L) div ${kw}L").cast("long")
+  }
+
+  /** Plans `df`'s rows on column `key` with one min/max/count job;
+    * None when `df` is empty. `chunkRows` = 0 sizes chunks with
+    * [[autoChunkRows]]. Unsplit, the plan is ONE chunk at least as
+    * wide as both the key span and a quarter of `Long.MaxValue`, so
+    * every key lands in chunk 0, including a compare target's keys
+    * outside the source's bounds. Either way a key span past the Long
+    * range fails loudly rather than wrapping into chunk ids outside
+    * the plan.
+    */
+  def planKey(df: DataFrame, key: String, chunkRows: Long,
+      split: Boolean = true): Option[KeyPlan] = {
+    val r = df.agg(min(col(key)).cast("long"), max(col(key)).cast("long"),
+      count(lit(1))).collect()(0)
+    val cnt = r.getLong(2)
+    if (cnt == 0) None
+    else {
+      val (mn, mx) = (r.getLong(0), r.getLong(1))
+      val span = mx - mn + 1
+      require(span > 0, s"key span [$mn, $mx] exceeds the Long range")
+      Some(
+        if (!split)
+          KeyPlan(mn, mx, math.max(Long.MaxValue / 4, span),
+            Seq(ChunkSpec(0, mn, mx)))
+        else {
+          val (kw, chunks) = planFixedWidth(mn, mx, cnt,
+            if (chunkRows > 0) chunkRows else autoChunkRows(cnt))
+          KeyPlan(mn, mx, kw, chunks)
+        })
+    }
+  }
+
   /** Target-dialect type for a snapshot (canonical) type under the
     * export projection (P1): integrals stay integral, everything the
     * projection renders to a canonical string lands as VARCHAR — the
@@ -118,14 +164,14 @@ object Pipeline {
 
   /** End-to-end migration task. `failpoint` is a test seam: invoked
     * with a stage label at every boundary; production callers leave
-    * the default no-op. Returns the compare report (one row per
-    * non-empty chunk).
+    * the default no-op. `split = false` migrates the table as one
+    * chunk. Returns the compare report (one row per non-empty chunk).
     */
   def runMigration(s: SparkSession, d: String, workDir: String,
       task: String, chunkRows: Long = 0L, waveSize: Int = WaveSize,
       failpoint: String => Unit = _ => (),
       where: Option[String] = None,
-      consistentRead: Boolean = false): DataFrame = {
+      consistentRead: Boolean = false, split: Boolean = true): DataFrame = {
     val table = "orders"
     val tgtTable = "ORDERS_PIPE"
     val keyCol = "o_orderkey"
@@ -147,21 +193,14 @@ object Pipeline {
     // full.consistent-read pins the file LISTING once (the AS OF SCN
     // analogue): a file landing mid-task cannot tear assess/export/
     // compare apart — they all read the pinned set
-    val loaded =
-      if (consistentRead) {
-        val files = graft.sources.Snapshot.pin(s, s"$d/$table.parquet")
-        if (files.isEmpty) Tables.load(s, d, table)
-        else graft.sources.Snapshot.read(s, files)
-      } else Tables.load(s, d, table)
+    val loaded = graft.sources.Snapshot.load(s, d, table, consistentRead)
     val src0 = where.foldLeft(loaded)((df, rg) => df.filter(expr(rg)))
-    val row = src0.agg(min(keyCol), max(keyCol), count(lit(1))).collect()(0)
-    // empty source: min/max are NULL — getLong would throw. The
-    // reference treats an empty table as a completed (trivial) task,
-    // not an error; the guard below stage 4 returns the empty summary
-    // after the target table is still created.
-    val cnt = row.getLong(2)
-    val (minK, maxK) =
-      if (cnt == 0) (0L, 0L) else (row.getLong(0), row.getLong(1))
+    // chunkRows = 0 (default) auto-sizes to a bounded chunk COUNT.
+    // Empty source: no plan. The reference treats an empty table as a
+    // completed (trivial) task, not an error; the guard below stage 4
+    // returns the empty summary after the target table is still
+    // created.
+    val plan = planKey(src0, keyCol, chunkRows, split)
 
     // ---- stage 3: reverse — DDL synthesis + artifact (S9, F11).
     // Quoted lower-case identifiers so the JDBC writer's quoted INSERT
@@ -197,27 +236,25 @@ object Pipeline {
     // empty source: target table exists (stage 4), there is nothing
     // to chunk, migrate, or repair — the compare summary is exactly
     // empty, same schema as the populated path
-    if (cnt == 0)
+    if (plan.isEmpty)
       return Compare.chunkSummary(exportDf.limit(0),
           lit(0L).cast("long"), normCols)
         .select(col("chunk_id"), col("n_rows"), col("row_checksum"),
           lit(true).as("matched"), lit(0L).as("n_fix"))
+    val p = plan.get
 
-    // ---- stage 5: chunk plan + ledger init / resume triage.
-    // chunkRows = 0 (default) auto-sizes to a bounded chunk COUNT
-    val cr = if (chunkRows > 0) chunkRows else autoChunkRows(cnt)
+    // ---- stage 5: ledger init / resume triage of the chunk plan
     failpoint("plan")
-    val (kw, chunks) = planFixedWidth(minK, maxK, cnt, cr)
     val fs = new org.apache.hadoop.fs.Path(ledgerPath)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     // a ledger created here holds exactly this plan, all WAITING: only
     // an existing one needs the resume triage's read-back
     val pending =
       if (fs.exists(new org.apache.hadoop.fs.Path(ledgerPath)))
-        Ledger.pending(s, ledgerPath, task, table, chunks)
+        Ledger.pending(s, ledgerPath, task, table, p.chunks)
       else {
-        Ledger.init(s, ledgerPath, task, table, chunks)
-        chunks
+        Ledger.init(s, ledgerPath, task, table, p.chunks)
+        p.chunks
       }
 
     // ---- stage 6: migrate — one distributed ranged write per wave
@@ -253,12 +290,6 @@ object Pipeline {
     // both sides, slow path symmetric diff → fix actions (all the
     // same single-shuffle operators a2b/j4/c2 register standalone)
     failpoint("compare")
-    // `div` (IntegralDivide), NOT `/`: Column `/` on longs is IEEE
-    // double division — exact only below 2^53, which 100 TB key
-    // ranges exceed. `div` is the exact integer math planFixedWidth
-    // and the DuckDB oracle's `//` both use.
-    def chunkOf(name: String) =
-      expr(s"($name - ${minK}L) div ${kw}L").cast("long")
     // JDBC metadata reports the quoted-lowercase column names, so the
     // read schema matches the source names; Spark quotes the partition
     // column itself (same path s7b exercises)
@@ -271,7 +302,7 @@ object Pipeline {
     // frame, and a checkpointed child under unionAll trips the Spark
     // 4.1.2 LogicalRDD constraint-rewrite bug (see FIXTURES.md).
     val backJdbc = Migrate.readJdbcChunked(s, url, tgtTable, keyCol,
-      minK, maxK + 1, 8)
+      p.minKey, p.maxKey + 1, 8)
     val backSpool = s"${Migrate.tempDir("migrate_back")}/back"
     backJdbc.write.mode(SaveMode.Overwrite).parquet(backSpool)
     val back = s.read.parquet(backSpool)
@@ -279,15 +310,16 @@ object Pipeline {
     // oracle-compared OUTPUT, so it must stay the md5 hash DuckDB
     // reproduces (the internal-compare call sites use the native-hash
     // chunkSummary)
-    val srcSum = Compare.chunkSummaryXEngine(exportDf, chunkOf(keyCol),
+    val srcSum = Compare.chunkSummaryXEngine(exportDf, p.chunkOf(keyCol),
       normCols)
-    val tgtSum = Compare.chunkSummaryXEngine(back, chunkOf(keyCol), normCols)
+    val tgtSum = Compare.chunkSummaryXEngine(back, p.chunkOf(keyCol),
+      normCols)
       .withColumnRenamed("n_rows", "t_rows")
       .withColumnRenamed("row_checksum", "t_checksum")
     val diff = Compare.symmetricDiffCols(exportDf, back, normCols, keyCol)
     val fixes = Compare.fixActions(diff, tgtTable, keyCol, normCols)
     val fixPerChunk = fixes
-      .groupBy(chunkOf("row_key").as("chunk_id"))
+      .groupBy(p.chunkOf("row_key").as("chunk_id"))
       .agg(count(lit(1)).as("n_fix_raw"))
     srcSum.join(tgtSum, Seq("chunk_id"), "full_outer")
       .join(fixPerChunk, Seq("chunk_id"), "left_outer")
@@ -338,83 +370,19 @@ object Pipeline {
        |GROUP BY 1""".stripMargin
   }
 
-  /** Bind-variable batched full load (the reference's F10 path:
-    * prepared multi-row bind batches, `translate.go:34-145`): ONE
-    * PreparedStatement per partition, `addBatch` per row, flushed
-    * every 1000 — an order of magnitude cheaper per row than the
-    * guarded MERGE, which a freshly-created empty target doesn't
-    * need. Partitions write concurrently over bounded connections.
-    */
-  private def bulkLoadState(df: DataFrame, url: String,
-      table: String): Unit =
-    df.coalesce(graft.streaming.Cdc.sinkConnections(url)).foreachPartition {
-      (rows: Iterator[org.apache.spark.sql.Row]) =>
-        val conn = java.sql.DriverManager.getConnection(url)
-        try {
-          conn.setAutoCommit(false)
-          val ps = conn.prepareStatement(
-            s"INSERT INTO $table VALUES (?, ?, ?, ?)")
-          var pending = 0
-          rows.foreach { r =>
-            ps.setLong(1, r.getLong(0))
-            ps.setLong(2, r.getLong(1))
-            ps.setLong(3, r.getLong(2))
-            if (r.isNullAt(3)) ps.setNull(4, java.sql.Types.DOUBLE)
-            else ps.setDouble(4, r.getDouble(3))
-            ps.addBatch()
-            pending += 1
-            if (pending >= graft.streaming.Cdc.JdbcFlushEvery) {
-              ps.executeBatch(); pending = 0
-            }
-          }
-          if (pending > 0) ps.executeBatch()
-          conn.commit()
-          ps.close()
-        } finally conn.close()
-    }
-
   /** pipe3: the reference's `all` task mode — full load THEN
     * incremental CDC apply (`module/migrate/sql/oracle/o2m/incr.go:61`,
-    * dispatched after the full phase). The full phase bulk-loads the
-    * base snapshot as scn-0 rows through bind-variable batches (the
-    * reference's REPLACE-batch full path — a fresh empty target needs
-    * no guard); the incremental phase applies the change feed through
-    * the guarded MERGE sink, whose (scn,seq) staleness guard is what
-    * makes the combined state exact under replay. The base rows carry
-    * scn -1, strictly before every feed change (the feed CAN emit
-    * (0,0): event_id 0 maps there — a (0,0) base would tie, and the
-    * engine's MERGE guard and the oracle's op-DESC tie-break resolve
-    * ties differently), so last-writer-wins over base ∪ changes IS the final
-    * target state — which the oracle computes purely, while the
-    * engine path goes through a real JDBC target and back.
+    * dispatched after the full phase) — run as the `all` task mode
+    * itself, from the reference's example config with `events`
+    * selected. The oracle computes last-writer-wins over the base rows
+    * at scn -1 and the change feed; the engine lands that state
+    * through the REPLACE sink in a real JDBC target and reads it back.
     */
-  def pipe3FullPlusIncr(s: SparkSession, d: String): DataFrame = {
-    import graft.streaming.Cdc
-    val dbDir = Migrate.scratchDbDir("pipe3_derby")
-    val url = s"jdbc:derby:$dbDir/alldb;create=true"
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val st = conn.createStatement()
-      st.execute("CREATE TABLE ALL_STATE (k BIGINT PRIMARY KEY, " +
-        "scn BIGINT, seq BIGINT, v DOUBLE)")
-      st.close()
-    } finally conn.close()
-    // base marker is scn -1, NOT (0,0): the feed's scn = event_id/8
-    // and event_id 0 exists, so a change CAN carry (0,0) — a base at
-    // (0,0) would tie with it, and the engine's MERGE guard and the
-    // oracle's op-DESC tie-break resolve ties differently. scn -1
-    // orders strictly before every change in both engines.
-    val base = Tables.load(s, d, "customer").select(
-      col("c_custkey").cast("long").as("k"),
-      lit(-1L).as("scn"), lit(0L).as("seq"),
-      col("c_acctbal").as("v"))
-    bulkLoadState(base, url, "ALL_STATE") // full phase, F10 bind batches
-    Cdc.applyBatchJdbc(Cdc.eventsAsChanges(s, d), url, "ALL_STATE") // incr
-    s.read.format("jdbc").option("url", url)
-      .option("dbtable", "ALL_STATE").load()
-      .select(col("k").as("key"), col("scn"), col("seq"),
-        col("v").as("value"))
-  }
+  def pipe3FullPlusIncr(s: SparkSession, d: String): DataFrame =
+    TaskModes.runMode(s, "all", TransferdbConfig.knobs(
+      TaskModes.ExampleConfigPortable +
+        "\n[schema-config]\nsource-include-table = [\"events\"]\n"),
+      d, outDir = "") // all lands in its state target, not outDir
 
   val pipe3Sql: String = {
     import graft.streaming.Cdc

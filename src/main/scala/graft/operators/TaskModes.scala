@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.concurrent.duration.DurationInt
+
 import graft.{Query, Tables}
 import graft.functions.TableFilter
 import graft.operators.TransferdbConfig.EngineKnobs
@@ -160,27 +162,18 @@ object TaskModes {
     * gets a header file named to sort FIRST in the directory listing
     * (catting the dir in name order = the reference's header-led csv
     * file); header writes are bounded driver-side artifacts, one tiny
-    * file per non-empty chunk.
+    * file per non-empty chunk. `split = false` exports one chunk.
     *
     * Returns (row count, non-empty chunk count).
     */
   def csvExportChunked(s: SparkSession, df: DataFrame,
-      spec: Migrate.CsvSpec, chunkRows: Long, out: String): (Long, Long) = {
+      spec: Migrate.CsvSpec, chunkRows: Long, out: String,
+      split: Boolean = true): (Long, Long) = {
     val cols = df.columns.toSeq
-    val chunkCol: Column = integralHead(df) match {
-      case Some(k) =>
-        val r = df.agg(min(col(k)).cast("long"), max(col(k)).cast("long"),
-          count(lit(1))).collect()(0)
-        val cnt = r.getLong(2)
-        if (cnt == 0) lit(0L)
-        else {
-          val (kw, _) = Pipeline.planFixedWidth(r.getLong(0), r.getLong(1),
-            cnt, chunkRows)
-          expr(s"(CAST(`$k` AS BIGINT) - ${r.getLong(0)}L) div ${kw}L")
-            .cast("long")
-        }
-      case None => lit(0L)
-    }
+    val chunkCol: Column = integralHead(df)
+      .flatMap(k => Pipeline.planKey(df, k, chunkRows, split)
+        .map(_.chunkOf(k)))
+      .getOrElse(lit(0L))
     val line = concat_ws(spec.separator, cols.map(c =>
       Migrate.dialectRender(col(c).cast("string"), spec)): _*)
     df.select(chunkCol.as("chunk_id"), line.as("value"))
@@ -225,25 +218,17 @@ object TaskModes {
       try {
         // per-table [[schema-config.migrate-config]] (full.go:655-703):
         // `range` restricts the export, enable-split=false forces ONE
-        // chunk (chunkRows >= any count); sql-hint has no Spark analogue
+        // chunk; sql-hint has no Spark analogue
         val mc = knobs.migrateConfigFor(t)
         // consistent-read (S3): pin the file LISTING once per table so
         // a file landing mid-export stays invisible — the flashback
-        // analogue Snapshot documents. events keeps Tables.load (its
-        // vintage-dependent timestamp normalization lives there).
+        // analogue Snapshot documents
         val base =
-          if (knobs.csvConsistentRead && t != "events") {
-            val files = graft.sources.Snapshot.pin(s, s"$d/$t.parquet")
-            if (files.isEmpty) Tables.load(s, d, t)
-            else graft.sources.Snapshot.read(s, files)
-          } else Tables.load(s, d, t)
+          graft.sources.Snapshot.load(s, d, t, knobs.csvConsistentRead)
         val src = mc.map(_.range).filter(_.nonEmpty)
           .map(r => base.filter(expr(r))).getOrElse(base)
-        val chunkRows =
-          if (mc.exists(!_.enableSplit)) Long.MaxValue / 4
-          else knobs.csv.rows
-        val (n, nch) = csvExportChunked(s, src, spec, chunkRows,
-          s"$outDir/csv/$t")
+        val (n, nch) = csvExportChunked(s, src, spec, knobs.csv.rows,
+          s"$outDir/csv/$t", split = !mc.exists(!_.enableSplit))
         (t, n, nch)
       } catch {
         case scala.util.control.NonFatal(e) =>
@@ -408,19 +393,15 @@ object TaskModes {
         dt == org.apache.spark.sql.types.IntegerType,
         s"config file index-filed isn't number type: $splitCol is $dt")
     }
-    val r = src.agg(min(col(splitCol)).cast("long"),
-      max(col(splitCol)).cast("long"), count(lit(1))).collect()(0)
-    if (r.getLong(2) == 0) return compareEmpty(s)
     // a custom range compares as ONE chunk (the reference stores the
     // predicate as the chunk, no split); otherwise fixed-width chunks
     // on the split column
-    val kw = customRange match {
-      case Some(_) => Long.MaxValue / 4
-      case None => Pipeline.planFixedWidth(r.getLong(0), r.getLong(1),
-        r.getLong(2), knobs.compareChunkSize)._1
+    val p = Pipeline.planKey(src, splitCol, knobs.compareChunkSize,
+        split = customRange.isEmpty) match {
+      case Some(p) => p
+      case None => return compareEmpty(s)
     }
-    val bucket =
-      expr(s"($splitCol - ${r.getLong(0)}L) div ${kw}L").cast("long")
+    val bucket = p.chunkOf(splitCol)
     if (knobs.onlyCheckRows) {
       val sSum = src.groupBy(bucket.as("chunk_id"))
         .agg(count(lit(1)).as("src_rows"))
@@ -446,12 +427,11 @@ object TaskModes {
         val fixes = Compare.fixActions(diff,
           s"${knobs.targetSchema}.orders", "o_orderkey",
           Compare.ordersNorm)
-          .withColumn("chunk_id",
-            expr(s"(row_key - ${r.getLong(0)}L) div ${kw}L").cast("long"))
+          .withColumn("chunk_id", p.chunkOf("row_key"))
         Compare.writeFixArtifact(s"$fixDir/fix_orders.sql", "orders",
           s"${knobs.targetSchema}.orders", sSum, tSum, fixes,
-          id => s"o_orderkey BETWEEN ${r.getLong(0) + id * kw} AND " +
-            s"${r.getLong(0) + (id + 1) * kw - 1}")
+          id => s"o_orderkey BETWEEN ${p.minKey + id * p.kw} AND " +
+            s"${p.minKey + (id + 1) * p.kw - 1}")
       }
       sSum.join(
         tSum.withColumnRenamed("n_rows", "tgt_rows")
@@ -473,46 +453,39 @@ object TaskModes {
 
   // ------------------------------------------------------------ all mode
 
-  /** The reference's `all` mode: full bulk load THEN incremental CDC
-    * apply — pipe3's composition, with `insert-batch-size` actually
-    * sizing the native multi-row REPLACE bind groups (the statement
-    * the reference builds per that knob, `translate.go:34-145`).
+  /** The reference's `all` mode: full load THEN incremental CDC
+    * apply, both through the REPLACE sink (the reference's safe mode),
+    * with `insert-batch-size` sizing the multi-row REPLACE bind groups
+    * (the statement the reference builds per that knob,
+    * `translate.go:34-145`). The report is the target's final state.
     */
   private def allMode(s: SparkSession, knobs: EngineKnobs,
-      d: String, outDir: String): DataFrame = {
+      d: String): DataFrame = {
     import graft.streaming.{Cdc, ReplaceShim}
     if (!resolveTables(knobs).contains("events")) {
       import s.implicits._
       return Seq.empty[(Long, Long, Long, Double)]
         .toDF("key", "scn", "seq", "value")
     }
-    ReplaceShim.ensureRegistered()
-    val dbDir = Migrate.scratchDbDir("taskmode_all")
-    val baseUrl = s"jdbc:derby:$dbDir/alldb;create=true"
-    val conn = java.sql.DriverManager.getConnection(baseUrl)
-    try {
-      val st = conn.createStatement()
-      st.execute("CREATE TABLE ALL_STATE (k BIGINT PRIMARY KEY, " +
-        "scn BIGINT, seq BIGINT, v DOUBLE)")
-      st.close()
-    } finally conn.close()
-    val url = ReplaceShim.Prefix + baseUrl
-    // full phase: base snapshot at scn -1 (strictly before every feed
-    // change — pipe3's tie-break rationale) through the REPLACE sink
+    val url = Cdc.stateTarget("taskmode_all")
+    val sink = ReplaceShim.wrap(url)
+    // full phase: the base snapshot at scn -1, NOT (0,0): the feed's
+    // scn = event_id/8 and event_id 0 exists, so a change CAN carry
+    // (0,0). The sink applies by arrival, but the oracle replays
+    // last-writer-wins over base and feed together, and its op-DESC
+    // tie-break would keep a (0,0) base over a (0,0) DELETE. scn -1
+    // orders strictly before every change in both.
     val base = Tables.load(s, d, "customer").select(
       lit(-1L).as("scn"), lit(0L).as("seq"), lit("INSERT").as("op"),
       lit("customer").as("table_name"),
       col("c_custkey").cast("long").as("key"),
       col("c_acctbal").as("value"))
-    Cdc.applyBatchJdbc(base, url, "ALL_STATE",
+    Cdc.applyBatchJdbc(base, sink, Cdc.StateTable,
       Cdc.ReplaceDialect, rowsPerStmt = knobs.insertBatchSize)
     // incremental phase: the change feed through the same sink
-    Cdc.applyBatchJdbc(Cdc.eventsAsChanges(s, d), url, "ALL_STATE",
+    Cdc.applyBatchJdbc(Cdc.eventsAsChanges(s, d), sink, Cdc.StateTable,
       Cdc.ReplaceDialect, rowsPerStmt = knobs.insertBatchSize)
-    s.read.format("jdbc").option("url", baseUrl)
-      .option("dbtable", "ALL_STATE").load()
-      .select(col("k").as("key"), col("scn"), col("seq"),
-        col("v").as("value"))
+    Cdc.readState(s, url)
   }
 
   /** The live `all`-mode incremental window with the config's knobs
@@ -560,7 +533,7 @@ object TaskModes {
       targetDb: String = "mysql"): DataFrame = {
     val dir = direction(sourceDb, targetDb)
     mode.trim.toLowerCase match {
-      case "all" => allMode(s, knobs, d, outDir)
+      case "all" => allMode(s, knobs, d)
       case m => collected(s, boundedReport(s, m, knobs, d, outDir, dir))
     }
   }
@@ -590,11 +563,10 @@ object TaskModes {
       case "full" =>
         val mc = knobs.migrateConfigFor("orders")
         Pipeline.runMigration(s, d, s"$outDir/full", task = "full-task",
-          chunkRows =
-            if (mc.exists(!_.enableSplit)) Long.MaxValue / 4
-            else knobs.fullChunkSize,
+          chunkRows = knobs.fullChunkSize,
           where = mc.map(_.range).filter(_.nonEmpty),
-          consistentRead = knobs.fullConsistentRead)
+          consistentRead = knobs.fullConsistentRead,
+          split = !mc.exists(!_.enableSplit))
       case other => throw new IllegalArgumentException(
         // the reference's own wording, server.go:79
         s"flag [mode] can not null or value configure error: $other")
@@ -648,46 +620,43 @@ object TaskModes {
     */
   def pipe11ConfigDriven(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.DurationInt
     // the three variant runs are independent jobs over independent
     // output dirs — submit them concurrently so the local scheduler
     // overlaps them (wall-clock ~= the slowest variant, not the sum);
     // on a cluster these would be three parallel task-mode runs
-    val rows = Await.result(Future.traverse(variantConfigs) {
-      case (variant, text) => Future {
-      val knobs = TransferdbConfig.knobs(text)
-      val out = Migrate.tempDir(s"pipe11_$variant")
-      val report = runMode(s, "csv", knobs, d, out)
-      val nChunks = report.filter(col("table_name") === "orders")
-        .select("n_chunks").collect().headOption
-        .map(_.getLong(0)).getOrElse(0L)
-      val spec = csvSpecOf(knobs.csv)
-      val ordersOut = s"$out/csv/orders"
-      // raw-bytes metrics: whole files as blobs, substring counts —
-      // ONE pass over the output bytes (the r10 shape read each file
-      // twice: once wholetext for the separator counts, once
-      // per-terminator for the line count; the judge graded the
-      // resulting figure weak). The text writer terminates EVERY
-      // record — data lines and the per-chunk header file alike — so
-      // data rows = terminator occurrences minus header lines, and
-      // the header count is already a metric.
-      val blob = s.read.format("text").option("wholetext", "true")
-        .load(ordersOut)
-      // coalesce: an EMPTY corpus writes no files, sum() is NULL
-      def occ(tok: String): Column =
-        coalesce(sum(((length(col("value")) - length(call_function(
-          "replace", col("value"), lit(tok), lit(""))))
-          / tok.length).cast("long")), lit(0L))
-      val m = blob.agg(
-        occ("|#|").as("ref_sep"), occ("~^~").as("alt_sep"),
-        occ("\"o_orderkey\"").as("n_header"),
-        occ(spec.terminator).as("n_term")).collect()(0)
-      val nRows = m.getLong(3) - m.getLong(2)
-      (variant, nRows, nChunks, m.getLong(0), m.getLong(1), m.getLong(2))
-      }
-    }, 600.seconds)
+    val rows = DriverPool.map(s, variantConfigs, "graft-pipe11",
+      10.minutes) {
+      case (variant, text) =>
+        val knobs = TransferdbConfig.knobs(text)
+        val out = Migrate.tempDir(s"pipe11_$variant")
+        val report = runMode(s, "csv", knobs, d, out)
+        val nChunks = report.filter(col("table_name") === "orders")
+          .select("n_chunks").collect().headOption
+          .map(_.getLong(0)).getOrElse(0L)
+        val spec = csvSpecOf(knobs.csv)
+        val ordersOut = s"$out/csv/orders"
+        // raw-bytes metrics: whole files as blobs, substring counts —
+        // ONE pass over the output bytes (the r10 shape read each file
+        // twice: once wholetext for the separator counts, once
+        // per-terminator for the line count; the judge graded the
+        // resulting figure weak). The text writer terminates EVERY
+        // record — data lines and the per-chunk header file alike — so
+        // data rows = terminator occurrences minus header lines, and
+        // the header count is already a metric.
+        val blob = s.read.format("text").option("wholetext", "true")
+          .load(ordersOut)
+        // coalesce: an EMPTY corpus writes no files, sum() is NULL
+        def occ(tok: String): Column =
+          coalesce(sum(((length(col("value")) - length(call_function(
+            "replace", col("value"), lit(tok), lit(""))))
+            / tok.length).cast("long")), lit(0L))
+        val m = blob.agg(
+          occ("|#|").as("ref_sep"), occ("~^~").as("alt_sep"),
+          occ("\"o_orderkey\"").as("n_header"),
+          occ(spec.terminator).as("n_term")).collect()(0)
+        val nRows = m.getLong(3) - m.getLong(2)
+        (variant, nRows, nChunks, m.getLong(0), m.getLong(1), m.getLong(2))
+    }
     rows.toDF("variant", "n_rows", "n_chunks", "ref_sep", "alt_sep",
       "n_header")
   }
@@ -764,17 +733,14 @@ object TaskModes {
     */
   def pipe12CompareConfig(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.DurationInt
-    val rows = Await.result(Future.traverse(compareVariantConfigs) {
-      case (variant, text) => Future {
+    val rows = DriverPool.map(s, compareVariantConfigs, "graft-pipe12",
+      10.minutes) {
+      case (variant, text) =>
         val knobs = TransferdbConfig.knobs(text)
         runMode(s, "compare", knobs, d, Migrate.tempDir(s"pipe12_$variant"))
           .collect().map(r => (variant, r.getLong(0), r.getLong(1),
             r.getLong(2), r.getBoolean(3)))
-      }
-    }, 600.seconds).flatten
+    }.flatten
     rows.toDF("variant", "chunk_id", "src_rows", "tgt_rows", "matched")
   }
 

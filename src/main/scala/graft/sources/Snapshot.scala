@@ -37,9 +37,16 @@ object Snapshot {
   def read(s: SparkSession, files: Seq[String]): DataFrame =
     graft.Tables.readParquet(s, files: _*)
 
-  /** Pin-and-read in one step for single-job callers. */
-  def readPinned(s: SparkSession, dir: String): (Seq[String], DataFrame) = {
-    val files = pin(s, dir)
-    (files, read(s, files))
+  /** Table `t` of the dataset at `d`. With `consistent`, the frame
+    * reads a listing pinned now, so files landing later stay
+    * invisible to every job over it. events always reads through
+    * [[graft.Tables.load]], which owns its vintage-dependent
+    * timestamp normalization; so does a table with nothing to pin.
+    */
+  def load(s: SparkSession, d: String, t: String,
+      consistent: Boolean): DataFrame = {
+    val files =
+      if (consistent && t != "events") pin(s, s"$d/$t.parquet") else Nil
+    if (files.isEmpty) graft.Tables.load(s, d, t) else read(s, files)
   }
 }

@@ -817,9 +817,9 @@ object Cdc {
     *
     * Both statement shapes are bind-variable `PreparedStatement`s
     * prepared ONCE per partition (the reference's F10 prepared-batch
-    * path, `translate.go:34-145` — same as [[graft.operators.Pipeline]]'s
-    * bulk load): the target parses and plans each shape a single time
-    * instead of re-planning one rendered text statement per row.
+    * path, `translate.go:34-145`): the target parses and plans each
+    * shape a single time instead of re-planning one rendered text
+    * statement per row.
     * Per-partition connections; the buffers are flushed every
     * [[JdbcFlushEvery]] statements so sink-side buffering stays
     * O(flush window) however many keys the partition holds. Flushing
@@ -844,18 +844,14 @@ object Cdc {
     *    being [[lastChange]]-reduced (one change per key per delivery)
     *    and replays being bit-identical redeliveries — exactly the
     *    contract the reference's safe mode assumes. Selected for
-    *    MySQL-family URLs.
-    *  - [[DeleteInsertDialect]]: REPLACE semantics spelled in portable
-    *    SQL — delete-by-key then insert, deletes flushed before
-    *    inserts (per the MySQL manual that IS what REPLACE does). This
-    *    is how c6c proves the REPLACE-semantics replay contract on the
-    *    embedded target the sandbox actually has; a real MySQL URL
-    *    takes the native single-statement path instead.
+    *    MySQL-family URLs; a target without REPLACE grammar takes it
+    *    through [[ReplaceShim]], which spells each REPLACE as
+    *    delete-by-key then insert (per the MySQL manual, what REPLACE
+    *    does).
     */
   private[graft] sealed trait SinkDialect
   private[graft] case object MergeDialect extends SinkDialect
   private[graft] case object ReplaceDialect extends SinkDialect
-  private[graft] case object DeleteInsertDialect extends SinkDialect
 
   private[graft] def dialectFor(url: String): SinkDialect =
     if (url.startsWith("jdbc:mysql:") || url.startsWith("jdbc:mariadb:"))
@@ -909,8 +905,6 @@ object Cdc {
         case MergeDialect => applyMerge(rows, conn, table, flushEvery)
         case ReplaceDialect =>
           applyReplace(rows, conn, table, flushEvery, rowsPerStmt)
-        case DeleteInsertDialect =>
-          applyDeleteInsert(rows, conn, table, flushEvery)
       }
     } finally conn.close()
   }
@@ -1024,47 +1018,6 @@ object Cdc {
     flushes
   }
 
-  /** REPLACE semantics in portable SQL: delete-by-key then insert,
-    * deletes flushed strictly before their inserts (within one
-    * delivery a key appears once, so its delete and insert land in the
-    * same flush window, ordered). Unguarded like the native REPLACE —
-    * the [[lastChange]]-reduced feed plus bit-identical redelivery is
-    * what makes replay state-idempotent, and c6c's hash check proves
-    * exactly that on the embedded target.
-    */
-  private def applyDeleteInsert(rows: Iterator[org.apache.spark.sql.Row],
-      conn: java.sql.Connection, table: String, flushEvery: Int): Long = {
-    val clear = conn.prepareStatement(s"DELETE FROM $table WHERE k = ?")
-    val ins = conn.prepareStatement(
-      s"INSERT INTO $table (k, scn, seq, v) VALUES (?, ?, ?, ?)")
-    var pendingC = 0
-    var pendingI = 0
-    var flushes = 0L
-    def flush(): Unit = {
-      // order is the contract: every buffered insert's key was cleared
-      // in the same window, so the insert can never hit a live row
-      if (pendingC > 0) { clear.executeBatch(); pendingC = 0 }
-      if (pendingI > 0) { ins.executeBatch(); pendingI = 0 }
-      flushes += 1
-    }
-    rows.foreach { r =>
-      val k = r.getLong(1)
-      clear.setLong(1, k); clear.addBatch(); pendingC += 1
-      if (r.getString(4) != "DELETE") {
-        ins.setLong(1, k)
-        ins.setLong(2, r.getLong(2)); ins.setLong(3, r.getLong(3))
-        if (r.isNullAt(5)) ins.setNull(4, java.sql.Types.DOUBLE)
-        else ins.setDouble(4, r.getDouble(5))
-        ins.addBatch(); pendingI += 1
-      }
-      if (pendingC + pendingI >= flushEvery) flush()
-    }
-    if (pendingC + pendingI > 0) flush()
-    conn.commit()
-    clear.close(); ins.close()
-    flushes
-  }
-
   def applyBatchJdbc(batch: DataFrame, url: String, table: String,
       dialect: SinkDialect = null,
       rowsPerStmt: Int = ReplaceRowsPerStmt): Unit =
@@ -1074,6 +1027,34 @@ object Cdc {
           rowsPerStmt = rowsPerStmt): Unit
     }
 
+  /** The sink's target table: one row per live key, carrying the
+    * (scn, seq) and value of the change that last wrote it.
+    */
+  val StateTable = "CDC_STATE"
+
+  /** A fresh embedded Derby database holding an empty [[StateTable]];
+    * returns its JDBC URL. `tag` names the scratch directory.
+    */
+  def stateTarget(tag: String): String = {
+    val dbDir = graft.operators.Migrate.scratchDbDir(tag)
+    val url = s"jdbc:derby:$dbDir/cdcdb;create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val st = conn.createStatement()
+      try st.execute(s"CREATE TABLE $StateTable (k BIGINT PRIMARY KEY, " +
+        "scn BIGINT, seq BIGINT, v DOUBLE)")
+      finally st.close()
+    } finally conn.close()
+    url
+  }
+
+  /** [[StateTable]] at `url` read back as (key, scn, seq, value). */
+  def readState(s: SparkSession, url: String): DataFrame =
+    s.read.format("jdbc").option("url", url)
+      .option("dbtable", StateTable).load()
+      .select(col("k").as("key"), col("scn"), col("seq"),
+        col("v").as("value"))
+
   /** c6b: CDC apply into an embedded Derby target via guarded MERGE,
     * WITH a full duplicate delivery (the same batch applied twice —
     * the C4 replay case) — then the target is read back over JDBC.
@@ -1082,101 +1063,57 @@ object Cdc {
     * the state the log defines, and the replay moved nothing.
     */
   def c6bJdbcMerge(s: SparkSession, d: String): DataFrame = {
-    val dbDir = graft.operators.Migrate.scratchDbDir("derby_cdc")
-    val url = s"jdbc:derby:$dbDir/cdcdb;create=true"
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val st = conn.createStatement()
-      st.execute(
-        "CREATE TABLE CDC_STATE (k BIGINT PRIMARY KEY, scn BIGINT, " +
-          "seq BIGINT, v DOUBLE)")
-      st.close()
-    } finally conn.close()
+    val url = stateTarget("derby_cdc")
     val feed = eventsAsChanges(s, d)
-    applyBatchJdbc(feed, url, "CDC_STATE")
-    applyBatchJdbc(feed, url, "CDC_STATE") // duplicate delivery: no-op
-    s.read.format("jdbc").option("url", url)
-      .option("dbtable", "CDC_STATE").load()
-      .select(col("k").as("key"), col("scn"), col("seq"),
-        col("v").as("value"))
+    applyBatchJdbc(feed, url, StateTable)
+    applyBatchJdbc(feed, url, StateTable) // duplicate delivery: no-op
+    readState(s, url)
   }
 
   val c6bSql: String =
     s"""SELECT key, scn, seq, value
        |FROM (${applyChangesSql(eventsAsChangesSql)}) t""".stripMargin
 
-  /** c6c: the same CDC apply + duplicate delivery through the
-    * REPLACE-semantics sink (the reference's MySQL safe mode,
-    * `module/migrate/sql/oracle/o2m/translate.go:118-128`) — executed
-    * via [[DeleteInsertDialect]], the portable spelling of REPLACE
-    * (delete-by-key + insert), because the sandbox's embedded target
-    * has no REPLACE grammar; a MySQL-family URL takes the native
-    * multi-row [[replaceSql]] path through the same [[applyBatchJdbc]]
-    * seam. The oracle is identical to c6b's: REPLACE over a
-    * [[lastChange]]-reduced feed with bit-identical redelivery lands
-    * the same last-writer-wins state as the guarded MERGE — proving
-    * the safe-mode replay contract (state-idempotent, though not
+  /** The CDC apply + duplicate delivery through the REPLACE sink
+    * ([[ReplaceDialect]] → [[applyReplace]]: full groups of
+    * `rowsPerStmt` rows through one prepared multi-row statement, the
+    * remainder through a batched single-row statement; the reference's
+    * safe mode, `module/migrate/sql/oracle/o2m/translate.go:34-145`).
+    * The embedded target has no REPLACE grammar, so [[ReplaceShim]]
+    * translates it at the driver seam into delete-by-key + insert;
+    * everything above the seam (statement text, the base-offset
+    * parameter binding, group folding, remainder and delete batching)
+    * is the path a MySQL URL takes. The oracle is c6b's: REPLACE over
+    * a [[lastChange]]-reduced feed with bit-identical redelivery lands
+    * the same last-writer-wins state as the guarded MERGE (the
+    * safe-mode replay contract: state-idempotent, though not
     * write-idempotent like the guard).
     */
-  def c6cReplaceApply(s: SparkSession, d: String): DataFrame = {
-    val dbDir = graft.operators.Migrate.scratchDbDir("derby_cdc_rep")
-    val url = s"jdbc:derby:$dbDir/cdcdb;create=true"
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val st = conn.createStatement()
-      st.execute(
-        "CREATE TABLE CDC_STATE (k BIGINT PRIMARY KEY, scn BIGINT, " +
-          "seq BIGINT, v DOUBLE)")
-      st.close()
-    } finally conn.close()
+  private def replaceArm(s: SparkSession, d: String, tag: String,
+      rowsPerStmt: Int): DataFrame = {
+    val url = stateTarget(tag)
+    val sink = ReplaceShim.wrap(url)
     val feed = eventsAsChanges(s, d)
-    applyBatchJdbc(feed, url, "CDC_STATE", DeleteInsertDialect)
-    applyBatchJdbc(feed, url, "CDC_STATE", DeleteInsertDialect) // replay
-    s.read.format("jdbc").option("url", url)
-      .option("dbtable", "CDC_STATE").load()
-      .select(col("k").as("key"), col("scn"), col("seq"),
-        col("v").as("value"))
+    applyBatchJdbc(feed, sink, StateTable, ReplaceDialect, rowsPerStmt)
+    // duplicate delivery: moves no state
+    applyBatchJdbc(feed, sink, StateTable, ReplaceDialect, rowsPerStmt)
+    readState(s, url)
   }
+
+  /** c6c: [[replaceArm]] with 7-row statement groups, so the feed
+    * splits into many full groups and a short remainder where c6d's
+    * 100-row groups split it differently.
+    */
+  def c6cReplaceApply(s: SparkSession, d: String): DataFrame =
+    replaceArm(s, d, "derby_cdc_rep", rowsPerStmt = 7)
 
   val c6cSql: String = c6bSql
 
-  /** c6d: the same CDC apply + duplicate delivery through the NATIVE
-    * multi-row REPLACE path ([[ReplaceDialect]] → [[applyReplace]] —
-    * full groups of [[ReplaceRowsPerStmt]] through one prepared
-    * multi-row statement, remainder through a batched single-row
-    * statement; the reference's safe mode,
-    * `module/migrate/sql/oracle/o2m/translate.go:34-145`). The
-    * sandbox has no REPLACE-grammar server, so the grammar is
-    * translated at the driver seam by [[ReplaceShim]]
-    * (`jdbc:graftreplace:` → delete-by-key + insert on the embedded
-    * delegate); everything ABOVE the seam — statement text, the
-    * base-offset parameter binding, group folding, remainder and
-    * delete batching — is the exact path a MySQL URL takes, and was
-    * previously covered only by a statement-shape assertion, never
-    * executed. Oracle identical to c6b/c6c: all three dialects carry
-    * one hash contract.
+  /** c6d: [[replaceArm]] with the default [[ReplaceRowsPerStmt]]
+    * groups, the reference example's `insert-batch-size`.
     */
-  def c6dReplaceNative(s: SparkSession, d: String): DataFrame = {
-    ReplaceShim.ensureRegistered()
-    val dbDir = graft.operators.Migrate.scratchDbDir("derby_cdc_repnat")
-    val baseUrl = s"jdbc:derby:$dbDir/cdcdb;create=true"
-    val conn = java.sql.DriverManager.getConnection(baseUrl)
-    try {
-      val st = conn.createStatement()
-      st.execute(
-        "CREATE TABLE CDC_STATE (k BIGINT PRIMARY KEY, scn BIGINT, " +
-          "seq BIGINT, v DOUBLE)")
-      st.close()
-    } finally conn.close()
-    val url = ReplaceShim.Prefix + baseUrl
-    val feed = eventsAsChanges(s, d)
-    applyBatchJdbc(feed, url, "CDC_STATE", ReplaceDialect)
-    applyBatchJdbc(feed, url, "CDC_STATE", ReplaceDialect) // replay
-    s.read.format("jdbc").option("url", baseUrl)
-      .option("dbtable", "CDC_STATE").load()
-      .select(col("k").as("key"), col("scn"), col("seq"),
-        col("v").as("value"))
-  }
+  def c6dReplaceNative(s: SparkSession, d: String): DataFrame =
+    replaceArm(s, d, "derby_cdc_repnat", ReplaceRowsPerStmt)
 
   val c6dSql: String = c6bSql
 

@@ -21,12 +21,12 @@ import java.lang.reflect.{InvocationHandler, Method, Proxy}
   * [[Cdc.ReplaceRowsPerStmt]], remainder via a batched single-row
   * statement — `module/migrate/sql/oracle/o2m/translate.go:34-145`),
   * and its parameter-offset binding and remainder control flow
-  * deserve the same end-to-end hash contract as the other two
-  * dialects. No REPLACE-grammar server exists in the sandbox, so the
-  * grammar is translated at the driver seam — everything above it
-  * (statement text, bind offsets, executeUpdate/executeBatch flow) is
-  * the exact production path a MySQL URL would take; only the final
-  * grammar differs, and c6d's oracle hash proves the translation
+  * deserve the same end-to-end hash contract as the MERGE sink. No
+  * REPLACE-grammar server exists in the sandbox, so the grammar is
+  * translated at the driver seam — everything above it (statement
+  * text, bind offsets, executeUpdate/executeBatch flow) is the exact
+  * production path a MySQL URL would take; only the final grammar
+  * differs, and the c6c/c6d/pipe3 oracle hashes prove the translation
   * lands the same state. Doubles as a genuine portability layer: the
   * safe-mode sink pointed at any JDBC target.
   *
@@ -67,6 +67,9 @@ object ReplaceShim {
       registered = true
     }
   }
+
+  /** `url` behind the shim, registered first. */
+  def wrap(url: String): String = { ensureRegistered(); Prefix + url }
 
   private val ReplacePattern =
     """(?is)\s*REPLACE\s+INTO\s+(\S+)\s*\(([^)]*)\)\s*VALUES\s*(.*)""".r

@@ -526,46 +526,49 @@ class CdcSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // the rendered native statement (translate.go:118-128 shape)
     assert(Cdc.replaceSql("T", 2) ==
       "REPLACE INTO T (k, scn, seq, v) VALUES (?, ?, ?, ?), (?, ?, ?, ?)")
-    // delete-insert REPLACE semantics against a live embedded target
-    val dbDir = graft.operators.Migrate.scratchDbDir("cdc_replace_t")
-    val url = s"jdbc:derby:$dbDir/db;create=true"
-    val conn = java.sql.DriverManager.getConnection(url)
-    try conn.createStatement().execute(
-      "CREATE TABLE R (k BIGINT PRIMARY KEY, scn BIGINT, seq BIGINT, v DOUBLE)")
-    finally conn.close()
+    // REPLACE semantics against a live embedded target: the REPLACE
+    // sink, its grammar spelled delete-by-key + insert by the shim
+    val url = Cdc.stateTarget("cdc_replace_t")
+    val sink = ReplaceShim.wrap(url)
     def feed(rows: Seq[(Long, Long, String, Long, Option[Double])]) =
       rows.toDF("scn", "seq", "op", "key", "value")
         .withColumn("table_name", lit("t"))
     val batch = feed(Seq(
       (2L, 0L, "INSERT", 1L, Some(10.0)), (2L, 0L, "INSERT", 2L, Some(20.0)),
       (2L, 1L, "DELETE", 3L, None), (2L, 0L, "INSERT", 4L, None)))
-    def state() = spark.read.format("jdbc").option("url", url)
-      .option("dbtable", "R").load()
-      .collect().map(r => r.getAs[Long]("K") ->
-        Option(r.getAs[java.lang.Double]("V")).map(_.doubleValue)).toMap
-    Cdc.applyBatchJdbc(batch, url, "R", Cdc.DeleteInsertDialect)
+    def state() = Cdc.readState(spark, url)
+      .collect().map(r => r.getAs[Long]("key") ->
+        Option(r.getAs[java.lang.Double]("value")).map(_.doubleValue)).toMap
+    Cdc.applyBatchJdbc(batch, sink, Cdc.StateTable, Cdc.ReplaceDialect)
     val first = state()
     assert(first == Map(1L -> Some(10.0), 2L -> Some(20.0), 4L -> None),
       first.toString)
     // bit-identical redelivery: REPLACE semantics are state-idempotent
-    Cdc.applyBatchJdbc(batch, url, "R", Cdc.DeleteInsertDialect)
+    Cdc.applyBatchJdbc(batch, sink, Cdc.StateTable, Cdc.ReplaceDialect)
     assert(state() == first)
     // the documented contract DIFFERENCE vs the guarded MERGE: REPLACE
     // is last-write-by-ARRIVAL — a stale batch delivered out of order
     // DOES overwrite (which is why safe mode requires ordered,
     // lastChange-reduced delivery; the MERGE guard does not)
     Cdc.applyBatchJdbc(feed(Seq((1L, 0L, "INSERT", 1L, Some(1.0)))),
-      url, "R", Cdc.DeleteInsertDialect)
+      sink, Cdc.StateTable, Cdc.ReplaceDialect)
     assert(state()(1L) == Some(1.0))
-    // flush contract: buffer never exceeds flushEvery entries (each
-    // upsert costs 2 buffered statements — a clear + an insert)
-    val many = (1 to 500).map(i =>
-      (5L, 0L, "INSERT", 100000L + i, Some(i * 1.0)))
-    val flushes = Cdc.applyPartition(
-      Cdc.lastChange(feed(many)).collect().iterator, url, "R",
-      flushEvery = 100, dialect = Cdc.DeleteInsertDialect)
-    assert(flushes == 10L, s"flushes=$flushes")
+    // flush contract: 500 upserts in 50-row groups execute as exactly
+    // 10 statement groups, and 500 deletes with flushEvery = 100 flush
+    // exactly 5 times, so the delete buffer never exceeds flushEvery
+    val doomed = (1 to 500).map(i =>
+      (4L, 0L, "INSERT", 200000L + i, Some(i * 1.0)))
+    Cdc.applyBatchJdbc(feed(doomed), sink, Cdc.StateTable, Cdc.ReplaceDialect)
     assert(state().size == 503)
+    val many = (1 to 500).flatMap(i => Seq(
+      (5L, 0L, "INSERT", 100000L + i, Some(i * 1.0)),
+      (5L, 0L, "DELETE", 200000L + i, None)))
+    val flushes = Cdc.applyPartition(
+      Cdc.lastChange(feed(many)).collect().iterator, sink, Cdc.StateTable,
+      flushEvery = 100, dialect = Cdc.ReplaceDialect, rowsPerStmt = 50)
+    assert(flushes == 15L, s"flushes=$flushes")
+    val end = state()
+    assert(end.size == 503 && !end.keys.exists(_ > 200000L), end.size.toString)
   }
 
   test("ReplaceShim: the NATIVE multi-row REPLACE path executes — " +
@@ -577,14 +580,8 @@ class CdcSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // translate.go:34-145) — plus deletes and a NULL value bind, all
     // through applyReplace itself, with the grammar translated at the
     // ReplaceShim driver seam
-    ReplaceShim.ensureRegistered()
-    val dbDir = graft.operators.Migrate.scratchDbDir("cdc_shim_t")
-    val baseUrl = s"jdbc:derby:$dbDir/db;create=true"
-    val conn = java.sql.DriverManager.getConnection(baseUrl)
-    try conn.createStatement().execute(
-      "CREATE TABLE R (k BIGINT PRIMARY KEY, scn BIGINT, seq BIGINT, v DOUBLE)")
-    finally conn.close()
-    val url = ReplaceShim.Prefix + baseUrl
+    val baseUrl = Cdc.stateTarget("cdc_shim_t")
+    val url = ReplaceShim.wrap(baseUrl)
     // embedded delegate behind the shim keeps the single-writer clamp
     assert(Cdc.sinkConnections(url) == 1)
     val rows = (1 to 233).map(i => (2L, 0L, "INSERT", i.toLong,
@@ -592,18 +589,17 @@ class CdcSpec extends AnyFunSuite with SparkSessionTestWrapper {
       Seq((2L, 0L, "DELETE", 9999L, None))
     val batch = rows.toDF("scn", "seq", "op", "key", "value")
       .withColumn("table_name", lit("t"))
-    def state() = spark.read.format("jdbc").option("url", baseUrl)
-      .option("dbtable", "R").load()
-      .collect().map(r => r.getAs[Long]("K") ->
-        Option(r.getAs[java.lang.Double]("V")).map(_.doubleValue)).toMap
-    Cdc.applyBatchJdbc(batch, url, "R", Cdc.ReplaceDialect)
+    def state() = Cdc.readState(spark, baseUrl)
+      .collect().map(r => r.getAs[Long]("key") ->
+        Option(r.getAs[java.lang.Double]("value")).map(_.doubleValue)).toMap
+    Cdc.applyBatchJdbc(batch, url, Cdc.StateTable, Cdc.ReplaceDialect)
     val first = state()
     assert(first.size == 233, s"size=${first.size}")
     assert(first(7L).isEmpty && first(1L) == Some(1.0) &&
       first(233L) == Some(233.0), first.take(5).toString)
     // bit-identical redelivery through the native path: state moves
     // nothing (REPLACE is delete+insert per key — same end state)
-    Cdc.applyBatchJdbc(batch, url, "R", Cdc.ReplaceDialect)
+    Cdc.applyBatchJdbc(batch, url, Cdc.StateTable, Cdc.ReplaceDialect)
     assert(state() == first)
   }
 
@@ -615,17 +611,10 @@ class CdcSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // the LAST statement's row (real REPLACE per-statement
     // delete+insert), not fail on a duplicate key under the
     // all-deletes-then-all-inserts fast path
-    ReplaceShim.ensureRegistered()
-    val dbDir = graft.operators.Migrate.scratchDbDir("cdc_shim_dup")
-    val baseUrl = s"jdbc:derby:$dbDir/db;create=true"
-    val c0 = java.sql.DriverManager.getConnection(baseUrl)
-    try c0.createStatement().execute(
-      "CREATE TABLE RD (k BIGINT PRIMARY KEY, scn BIGINT, seq BIGINT, v DOUBLE)")
-    finally c0.close()
     val conn = java.sql.DriverManager.getConnection(
-      ReplaceShim.Prefix + baseUrl)
+      ReplaceShim.wrap(Cdc.stateTarget("cdc_shim_dup")))
     try {
-      val ps = conn.prepareStatement(Cdc.replaceSql("RD", 1))
+      val ps = conn.prepareStatement(Cdc.replaceSql(Cdc.StateTable, 1))
       def add(k: Long, v: Double): Unit = {
         ps.setLong(1, k); ps.setLong(2, 0L); ps.setLong(3, 0L)
         ps.setDouble(4, v); ps.addBatch()
@@ -634,7 +623,8 @@ class CdcSpec extends AnyFunSuite with SparkSessionTestWrapper {
       ps.executeBatch()
       ps.close()
       val st = conn.createStatement()
-      val rs = st.executeQuery("SELECT k, v FROM RD ORDER BY k")
+      val rs = st.executeQuery(
+        s"SELECT k, v FROM ${Cdc.StateTable} ORDER BY k")
       val got = Iterator.continually(rs)
         .takeWhile(_.next()).map(r => r.getLong(1) -> r.getDouble(2)).toMap
       assert(got == Map(1L -> 10.0, 2L -> 2.0), got.toString)

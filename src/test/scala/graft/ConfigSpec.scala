@@ -25,13 +25,13 @@ class ConfigSpec extends AnyFunSuite {
     assert(k.insertBatchSize == 100)
     assert(k.fullChunkSize == 100000L)
     assert(k.compareChunkSize == 50000L)
-    assert(!k.onlyCheckRows && k.enableCheckpoint)
+    assert(!k.onlyCheckRows)
     assert(k.fixSqlDir.contains("/users/marvin/gostore/transferdb/data"))
     assert(k.sourceSchema == "marvin" && k.targetSchema == "marvin")
     assert(k.includeTables == Seq("kp") && k.excludeTables.isEmpty)
     assert(k.lowerCaseFieldName == "2")
     assert(k.csv.header && k.csv.escapeBackslash)
-    assert(k.csv.charset == "UTF8MB4" && k.csv.delimiter == "\"" &&
+    assert(k.csv.delimiter == "\"" &&
       k.csv.nullValue == "NULL" && k.csv.rows == 100000L)
     // artifact-dir knobs + the F11 case-mode mapping
     assert(k.checkSqlDir.contains("/users/marvin/gostore/transferdb/data"))
@@ -66,8 +66,7 @@ class ConfigSpec extends AnyFunSuite {
     assert(k.compareConfigFor("steven").get.indexFields == "sid")
     assert(k.compareConfigFor("nobody").isEmpty)
     val m = k.migrateConfigFor("marvin").get
-    assert(m.enableSplit && m.range.nonEmpty &&
-      m.sqlHint == "/*+ PARALLEL(8) */")
+    assert(m.enableSplit && m.range.nonEmpty)
     // a [section] after an array entry returns the sink to sections
     val mixed = TransferdbConfig.parseFull(
       "[[a.b]]\nx = 1\n[c]\ny = 2\n")
@@ -94,6 +93,17 @@ class ConfigSpec extends AnyFunSuite {
         "[full]\nchunk-size = -5\n", "[csv]\nrows = 0\n"))
       assert(intercept[IllegalArgumentException](
         TransferdbConfig.knobs(bad)).getMessage.contains("must be positive"))
+  }
+
+  test("csv.charset other than UTF-8 fails at parse time") {
+    // the csv writer emits UTF-8 only: GBK must not be accepted and
+    // then written as UTF-8
+    for (ok <- Seq("UTF8MB4", "utf8", "Utf8mb4"))
+      TransferdbConfig.knobs(s"[csv]\ncharset = \"$ok\"\n")
+    for (bad <- Seq("GBK", "latin1", ""))
+      assert(intercept[IllegalArgumentException](
+        TransferdbConfig.knobs(s"[csv]\ncharset = \"$bad\"\n"))
+        .getMessage.contains("csv.charset"), bad)
   }
 
   test("engine envelope constants equal the reference example's values") {

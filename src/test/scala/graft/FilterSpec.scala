@@ -74,15 +74,29 @@ class FilterSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   test("pinned snapshot read ignores files landing after the pin (S3)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_snap")
-      .toString + "/t"
+    val root = java.nio.file.Files.createTempDirectory("graft_snap")
+      .toString
+    val dir = s"$root/t.parquet"
     Seq(1L, 2L, 3L).toDF("v").coalesce(1).write.parquet(dir)
-    val (files, pinned) = Snapshot.readPinned(spark, dir)
-    assert(files.nonEmpty && pinned.count() == 3)
+    val pinned = Snapshot.load(spark, root, "t", consistent = true)
+    assert(pinned.count() == 3)
+    // the frame reads the pinned file list, not the directory: a
+    // directory frame also keeps its first listing, but any re-listing
+    // of it would pick up files landing later
+    val roots = pinned.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation.asInstanceOf[
+          org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+          .location.rootPaths.map(_.toUri.getPath)
+    }.flatten
+    assert(roots.nonEmpty && !roots.contains(dir), roots.toString)
     // a late-arriving file changes the dir, not the snapshot
     Seq(4L, 5L).toDF("v").coalesce(1).write.mode("append").parquet(dir)
-    assert(Snapshot.read(spark, files).count() == 3)
+    assert(pinned.count() == 3)
+    assert(pinned.inputFiles.length == 1)
+    assert(Snapshot.read(spark, pinned.inputFiles.toSeq).count() == 3)
     assert(spark.read.parquet(dir).count() == 5)
+    assert(Snapshot.load(spark, root, "t", consistent = false).count() == 5)
   }
 
   test("DDL artifact writer (S9) writes statements separated by blank lines") {

@@ -100,6 +100,27 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     ()
   }
 
+  test("planKey: no plan on empty input, planFixedWidth's plan when " +
+    "split, one chunk 0 when unsplit, a span past Long rejected") {
+    import spark.implicits._
+    assert(Pipeline.planKey(Seq.empty[Long].toDF("k"), "k", 10L).isEmpty)
+    val small = (10L to 10009L).toDF("k")
+    val p = Pipeline.planKey(small, "k", 1000L).get
+    assert((p.kw, p.chunks) == Pipeline.planFixedWidth(10, 10009, 10000, 1000))
+    // a key span wider than Long.MaxValue / 4 still lands in one chunk
+    val wide = Seq(-(1L << 61), 0L, 1L << 61).toDF("k")
+    val one = Pipeline.planKey(wide, "k", 1L, split = false).get
+    assert(one.chunks.length == 1)
+    assert(wide.select(one.chunkOf("k")).as[Long].collect().toSet == Set(0L))
+    // a span of 2^63 + 1 keys wraps Long: rejected split or not
+    val past = Seq(-(1L << 62), 1L << 62).toDF("k")
+    for (split <- Seq(true, false)) {
+      val e = intercept[IllegalArgumentException](
+        Pipeline.planKey(past, "k", 1L, split = split))
+      assert(e.getMessage.contains("exceeds the Long range"), e.getMessage)
+    }
+  }
+
   test("crash between wave write and mark: rerun skips done, re-runs " +
     "the unmarked wave idempotently, compare is clean") {
     val work = freshWork()
